@@ -270,60 +270,28 @@ def main() -> None:
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
 
-    # Memo-honest twin (r6 verdict item 6): the rejection sampler is
-    # memoized per session, so the interleaved passes' min() for
-    # negatives_reject_invariants reads the CACHED subtree cost — honest
-    # for a pipeline that genuinely reuses the frame, but it hides what a
-    # cold run pays. Measure that explicitly: clear the memo and time the
-    # registered sampler face once, reported as its own _cold key (NOT
-    # added to the headline total, which stays the memo-warm pipeline).
+    # Memo-honest cold twins (r6 verdict item 6): the interleaved passes'
+    # min() reads the memo-WARM cost of every face behind a session memo —
+    # honest for a pipeline that genuinely reuses the value, but it hides
+    # what a fresh session pays. Clear each memo and time one
+    # representative face once, reported as its own _cold key (NOT added
+    # to the headline total, which stays the memo-warm pipeline).
+    from etl_master_spark import memo
+
     cold: dict[str, float] = {}
-    try:
-        from etl_master_spark.operators import recsplit
-
-        recsplit._REJECT_CACHE.clear()
-        t0 = time.time()
-        _force(QUERIES["negatives_sample_reject"](spark, SF_DIR))
-        cold["negatives_sample_reject_cold"] = round(time.time() - t0, 3)
-    except Exception as e:  # noqa: BLE001
-        errors["negatives_sample_reject_cold"] = str(e).splitlines()[0][:200]
-    # Same honesty twin for the near-dup family's session-memoized
-    # collapsed LSH index (r10): the interleaved passes' min() reads the
-    # memo-warm cost for every face that starts from `_lsh_index`. Clear
-    # the memo and time ONE representative face cold, so BENCH_DETAIL
-    # records what the first construction in a fresh session pays.
-    try:
-        from etl_master_spark.operators import text as _text
-
-        _text._LSH_INDEX_CACHE.clear()
-        t0 = time.time()
-        _force(QUERIES["minhash_lsh_pairs"](spark, SF_DIR))
-        cold["minhash_lsh_pairs_cold"] = round(time.time() - t0, 3)
-    except Exception as e:  # noqa: BLE001
-        errors["minhash_lsh_pairs_cold"] = str(e).splitlines()[0][:200]
-    # Cold twin for the frozen append-codebook session memo (r11): every
-    # memo gets a mandatory cold diagnostic (r10 verdict item 5 precedent)
-    # — clear it and time the append face paying its Lloyd training.
-    try:
-        from etl_master_spark.operators import vectors as _vectors
-
-        _vectors._PQ_APPEND_CDF_CACHE.clear()
-        t0 = time.time()
-        _force(QUERIES["pq_index_append"](spark, SF_DIR))
-        cold["pq_index_append_cold"] = round(time.time() - t0, 3)
-    except Exception as e:  # noqa: BLE001
-        errors["pq_index_append_cold"] = str(e).splitlines()[0][:200]
-    # Cold twin for the corpus k-means trajectory memo (r11): clear it
-    # and time one representative face paying its Lloyd training.
-    try:
-        from etl_master_spark.operators import vectors as _vectors
-
-        _vectors._KM_TRAIN_CACHE.clear()
-        t0 = time.time()
-        _force(QUERIES["kmeans_embeddings"](spark, SF_DIR))
-        cold["kmeans_embeddings_cold"] = round(time.time() - t0, 3)
-    except Exception as e:  # noqa: BLE001
-        errors["kmeans_embeddings_cold"] = str(e).splitlines()[0][:200]
+    for memo_name, name in {
+        "negatives_reject": "negatives_sample_reject",
+        "lsh_index": "minhash_lsh_pairs",
+        "pq_append_codebook": "pq_index_append",
+        "kmeans_train": "kmeans_embeddings",
+    }.items():
+        try:
+            memo.clear(memo_name)
+            t0 = time.time()
+            _force(QUERIES[name](spark, SF_DIR))
+            cold[f"{name}_cold"] = round(time.time() - t0, 3)
+        except Exception as e:  # noqa: BLE001
+            errors[f"{name}_cold"] = str(e).splitlines()[0][:200]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:

@@ -29,16 +29,6 @@ _LOG = logging.getLogger(__name__)
 # router automates).
 HOT_KEY_PARTITION_SHARE = 0.5
 
-# Session-scoped probe memo: (cache_key) -> measured max share. A routed
-# face over the same (table, key) pays the exact probe once per session,
-# not once per construction (the probe runs eagerly at plan-construction
-# time — an accepted trade-off, but re-paying it on every call was not).
-# Callers must fold a table FINGERPRINT (file count + byte total from
-# parquet footer metadata — ``sources.io.table_meta``) into the key:
-# a rewritten table changes the fingerprint, so a stale share can never
-# be served for data that no longer exists (r9 verdict item 6).
-_SHARE_CACHE: dict[tuple, float] = {}
-
 # Above this row count the routed faces probe with the O(sample)
 # ``sampled_key_share`` instead of the exact groupBy pass: the exact
 # probe's full-scan cost starts to rival the routed face's own work,
@@ -90,7 +80,7 @@ def skew_route(
     key: str,
     label: str = "",
     share: float | None = None,
-    cache_key: tuple | None = None,
+    table: tuple[str, str] | None = None,
     approx_rows: int | None = None,
 ) -> str:
     """Pick the spelling for a per-``key`` window over ``df``: ``"naive"``
@@ -111,30 +101,37 @@ def skew_route(
 
     1. ``share=`` — caller-supplied, e.g. from warehouse table statistics
        or a prior ``table_profile``-style pass: ZERO extra scans here.
-    2. ``cache_key=`` — a prior probe for the same (table, key,
-       fingerprint) this session is reused: the scan is paid once, not
-       per call (callers fold ``table_meta``'s file-count/byte-total
-       fingerprint into the key so a rewrite re-probes).
-    3. ``approx_rows=`` at or above ``SAMPLED_PROBE_MIN_ROWS`` (a footer
-       -metadata row count, no scan) — the O(sample)
+    2. ``table=(sf_dir, name)`` — ``df`` is that table: the eager probe
+       is a session memo per (table, key) (``memo.py``), paid once per
+       session, not once per construction; a rewrite re-probes.
+    3. ``approx_rows=`` (default: the table's footer row count) at or
+       above ``SAMPLED_PROBE_MIN_ROWS`` — the O(sample)
        ``sampled_key_share`` estimator: large routed inputs pay a 5%
        Bernoulli pass, never a full groupBy probe.
     4. none of the above — the exact ``max_key_share`` pre-pass
        (deterministic, zero setup; what small oracle-checked inputs
        use)."""
-    from ..sources.io import shuffle_partitions
+    from ..memo import session_memo
+    from ..sources.io import shuffle_partitions, table_meta
 
     src = "supplied"
     if share is None:
-        if cache_key is not None and cache_key in _SHARE_CACHE:
-            share, src = _SHARE_CACHE[cache_key], "cached"
-        else:
-            if approx_rows is not None and approx_rows >= SAMPLED_PROBE_MIN_ROWS:
-                share, src = sampled_key_share(df, key), "sampled"
-            else:
-                share, src = max_key_share(df, key), "probed"
-            if cache_key is not None:
-                _SHARE_CACHE[cache_key] = share
+        src = "cached"  # unless probe() runs below
+
+        def probe() -> float:
+            nonlocal src
+            rows = approx_rows
+            if rows is None and table is not None:
+                rows = table_meta(*table)[0]
+            if rows is not None and rows >= SAMPLED_PROBE_MIN_ROWS:
+                src = "sampled"
+                return sampled_key_share(df, key)
+            src = "probed"
+            return max_key_share(df, key)
+
+        share = probe() if table is None else session_memo(
+            df.sparkSession, "skew_share", probe, (key,), [table]
+        )
     cutoff = HOT_KEY_PARTITION_SHARE / shuffle_partitions(df.sparkSession)
     route = "bucketed" if share >= cutoff else "naive"
     _LOG.info(

@@ -705,36 +705,28 @@ ORDER BY user_id, domain, rank
 """
 
 
-_REJECT_CACHE: dict[tuple, DataFrame] = {}
-
-
 def negatives_sample_reject_cached(
     spark: SparkSession, sf_dir: str, n: int = N_NEGATIVES, max_rounds: int = 4
 ) -> DataFrame:
-    """Per-session memo over ``negatives_sample_reject``: the sampler is
-    deterministic for (sf_dir, n, max_rounds), and BOTH its registered
-    face and the ``negatives_reject_invariants`` audit need it in the
-    same bench/driver run — without the memo each pays the full
-    multi-round loop (~6.6 s of a 134 s bench). The cached frame is the
-    final ≤ n-per-(user, domain) picks, localCheckpoint'd so reuse costs
-    a block read, not a recompute; keyed by applicationId so a new
-    session never sees another session's lineage."""
+    """Session memo (``memo.py``) over ``negatives_sample_reject``: the
+    sampler is deterministic for (events, n, max_rounds), and BOTH its
+    registered face and the ``negatives_reject_invariants`` audit need
+    it in the same bench/driver run — without the memo each pays the
+    full multi-round loop (~6.6 s of a 134 s bench). The cached frame is
+    the final ≤ n-per-(user, domain) picks, localCheckpoint'd so reuse
+    costs a block read, not a recompute."""
+    from ..memo import session_memo
     from ..sources.io import ratings
 
-    app = spark.sparkContext.applicationId
-    # entries from stopped sessions hold plans pinned to a dead
-    # SparkContext — prune them so a long-lived process (pytest,
-    # notebooks) never accumulates unreachable checkpoint references
-    for k in [k for k in _REJECT_CACHE if k[0] != app]:
-        del _REJECT_CACHE[k]
-    key = (app, sf_dir, n, max_rounds)
-    got = _REJECT_CACHE.get(key)
-    if got is None:
-        got = negatives_sample_reject(
-            ratings(spark, sf_dir), n, max_rounds
-        ).localCheckpoint(eager=False)
-        _REJECT_CACHE[key] = got
-    return got
+    def build() -> DataFrame:
+        r = ratings(spark, sf_dir)
+        return negatives_sample_reject(r, n, max_rounds).localCheckpoint(
+            eager=False
+        )
+
+    return session_memo(
+        spark, "negatives_reject", build, (n, max_rounds), [(sf_dir, "events")]
+    )
 
 
 # -- E3 scale path, made driver-checkable: invariants companion ---------------

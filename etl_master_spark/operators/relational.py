@@ -612,20 +612,14 @@ def event_gaps_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition's volume) picks ``event_gaps`` on uniform inputs and the
     two-level ``event_gaps_bucketed`` in the hot-user regime. Identical
     output either way (one oracle hash-checks both plans); the routing
-    decision is logged, not silent. The probe memoizes per (table, key):
-    within a session this face and ``user_sessions_routed`` pay ONE
-    probe scan between them, not one each. The memo key carries the
-    table's footer-metadata fingerprint (files + bytes) so a rewritten
-    table re-probes, and the footer row count switches the probe to the
-    O(sample) estimator above SAMPLED_PROBE_MIN_ROWS — large inputs
-    never pay a full groupBy pre-pass (r9 verdict items 4/6)."""
-    from ..sources.io import table_meta
-
-    n_rows, n_files, n_bytes = table_meta(sf_dir, "events")
+    decision is logged, not silent. The probe is a session memo per
+    (table, key) (``memo.py``): within a session this face and
+    ``user_sessions_routed`` pay ONE probe scan between them, not one
+    each, and the footer row count switches the probe to the O(sample)
+    estimator above SAMPLED_PROBE_MIN_ROWS — large inputs never pay a
+    full groupBy pre-pass (r9 verdict items 4/6)."""
     return event_gaps_routed_of(
-        load_table(spark, sf_dir, "events"),
-        cache_key=(sf_dir, "events", "user_id", n_files, n_bytes),
-        approx_rows=n_rows,
+        load_table(spark, sf_dir, "events"), table=(sf_dir, "events")
     )
 
 
@@ -633,8 +627,7 @@ def event_gaps_routed_of(
     ev: DataFrame,
     bucket_hours: int = OFFSET_BUCKET_HOURS,
     share: float | None = None,
-    cache_key: tuple | None = None,
-    approx_rows: int | None = None,
+    table: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Core of ``event_gaps_routed`` — split out for planted-skew
     routing tests. ``share`` lets a caller with table statistics skip
@@ -642,9 +635,7 @@ def event_gaps_routed_of(
     the result (the twins share one oracle)."""
     from ..functions.skew import skew_route
 
-    route = skew_route(
-        ev, "user_id", "event_gaps", share, cache_key, approx_rows
-    )
+    route = skew_route(ev, "user_id", "event_gaps", share, table)
     if route == "bucketed":
         return event_gaps_bucketed_of(ev, bucket_hours)
     return event_gaps_of(ev)

@@ -1010,20 +1010,22 @@ class _LshIndex(NamedTuple):
     multi_gids: DataFrame
 
 
-# Session memo for the collapsed index (the negatives_sample_reject
-# session-memo precedent): EVERY face of the near-dup family starts from
-# the same (groups, rep_bands) frames, and a driver window / bench run
-# evaluates many of them back-to-back — without the memo each face
-# replays the signature scan + group window + checkpoints. Keyed by the
-# session's applicationId (a localCheckpoint dies with its session) and
-# the documents table's footer fingerprint (files + bytes, no scan — the
-# same staleness guard as the skew-probe memo: a rewritten corpus can
-# never be served a stale index).
-_LSH_INDEX_CACHE: dict[tuple, _LshIndex] = {}
-
-
+# EVERY face of the near-dup family starts from the same (groups,
+# rep_bands) frames, and a driver window / bench run evaluates many of
+# them back-to-back — without the session memo each face replays the
+# signature scan + group window + checkpoints.
 def _lsh_index(spark: SparkSession, sf_dir: str) -> _LshIndex:
-    """Build (or reuse) the collapsed index. The signature stays
+    """The collapsed index, session-memoized (``memo.py``)."""
+    from ..memo import session_memo
+
+    return session_memo(
+        spark, "lsh_index", lambda: _build_lsh_index(spark, sf_dir),
+        tables=[(sf_dir, "documents")],
+    )
+
+
+def _build_lsh_index(spark: SparkSession, sf_dir: str) -> _LshIndex:
+    """Build the collapsed index. The signature stays
     row-local in the scan exactly as before (no pre-join exchange for
     it); the ONE new shuffle is the narrow (doc_id, fp, 16×bigint ≈
     160 B/row) window that assigns group ids — in exchange, duplicate
@@ -1036,15 +1038,6 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> _LshIndex:
     before signing, at the cost of one corpus-wide text exchange. Hash
     family documented in ``minhash_lsh_pairs``."""
     from ..functions.hashing import PHASH_P
-    from ..sources.io import table_meta
-
-    _, n_files, n_bytes = table_meta(sf_dir, "documents")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, n_files, n_bytes
-    )
-    cached = _LSH_INDEX_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
 
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
@@ -1134,9 +1127,7 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> _LshIndex:
         .filter(F.col("g_size") >= 2)
         .select("gid")
     )
-    idx = _LshIndex(groups=groups, rep_bands=rep_bands, multi_gids=multi_gids)
-    _LSH_INDEX_CACHE[cache_key] = idx
-    return idx
+    return _LshIndex(groups=groups, rep_bands=rep_bands, multi_gids=multi_gids)
 
 
 def _minhash_bands_sql() -> str:
@@ -5612,14 +5603,20 @@ def neardup_topk_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_truth", zero).alias("n_truth"),
             F.coalesce("score_hits", zero).alias("score_hits"),
             F.coalesce("id_hits", zero).alias("id_hits"),
+            # try_divide: an empty-truth face reads null under ANSI on
+            # and off (plain / raises DIVIDE_BY_ZERO with ANSI on)
             F.round(
-                F.coalesce("score_hits", zero).cast("double")
-                / F.coalesce("n_truth", zero),
+                F.try_divide(
+                    F.coalesce("score_hits", zero).cast("double"),
+                    F.coalesce("n_truth", zero),
+                ),
                 6,
             ).alias("score_recall"),
             F.round(
-                F.coalesce("id_hits", zero).cast("double")
-                / F.coalesce("n_truth", zero),
+                F.try_divide(
+                    F.coalesce("id_hits", zero).cast("double"),
+                    F.coalesce("n_truth", zero),
+                ),
                 6,
             ).alias("id_recall"),
         )

@@ -1682,7 +1682,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id) deletes its exchange every Lloyd round; the scan subtree
     # is shallow enough that re-reading beats materializing (measured
     # 2.2 -> 2.0 s min-of-3). Training is session-memoized across the
-    # corpus-clustering family (r11, _KM_TRAIN_CACHE).
+    # corpus-clustering family (`_km_corpus_train`).
     emb, cent_vals, _ = _km_corpus_train(spark, sf_dir)
     return (
         _km_literal_assign(emb, cent_vals)
@@ -1727,29 +1727,19 @@ def _km_literal_assign(emb: DataFrame, cent_vals: list[list[float]]) -> DataFram
     )
 
 
-# Session memo for the corpus k-means trajectory (r11; the
-# frozen_append_codebook / _LSH_INDEX_CACHE precedent): four registered
-# faces (kmeans_embeddings, semantic_dedup, semantic_dedup_scaled,
-# cluster_label_purity) train the IDENTICAL deterministic Lloyd
-# trajectory over the identical canonical corpus frame — the trained
-# centroids are a pure function of (corpus, k, dim) and live driver-side
-# as a plain list, so repeated faces in one session reuse them instead of
-# replaying KM_ITERS-1 assignment rounds each. Keyed by applicationId
-# (no cross-run persistence) + the embeddings footer fingerprint (files
-# + bytes, no scan — a rewritten corpus can never be served stale
-# centroids). The bench times the memo-cold construction explicitly
-# (kmeans_embeddings_cold).
-_KM_TRAIN_CACHE: dict[tuple, tuple[list[list[float]], dict[int, int]]] = {}
-
-
+# four registered faces (kmeans_embeddings, semantic_dedup,
+# semantic_dedup_scaled, cluster_label_purity) train the IDENTICAL
+# deterministic Lloyd trajectory, a pure function of (corpus, k): the
+# driver-side centroids are a session memo instead of KM_ITERS-1
+# replayed assignment rounds per face.
 def _km_corpus_train(
     spark: SparkSession, sf_dir: str, k: int = IVF_CELLS
 ) -> tuple[DataFrame, list[list[float]], dict[int, int]]:
-    """Canonical corpus frame + its (memoized) trained centroids: the
-    shared front half of every corpus-clustering face. Returns
+    """Canonical corpus frame + its (session-memoized) trained centroids:
+    the shared front half of every corpus-clustering face. Returns
     (emb, cent_vals, last_counts) where emb is the keyed-spread
     (vec_id, embedding) frame the callers also assign through."""
-    from ..sources.io import table_meta
+    from ..memo import session_memo
 
     emb = spread_by(
         load_table(spark, sf_dir, "embeddings").select(
@@ -1757,13 +1747,10 @@ def _km_corpus_train(
         ),
         "vec_id",
     )
-    _, n_files, n_bytes = table_meta(sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, n_files, n_bytes, k)
-    hit = _KM_TRAIN_CACHE.get(key)
-    if hit is None:
-        hit = _km_train(spark, emb, k=k)
-        _KM_TRAIN_CACHE[key] = hit
-    cent_vals, last_counts = hit
+    cent_vals, last_counts = session_memo(
+        spark, "kmeans_train", lambda: _km_train(spark, emb, k=k),
+        (k,), [(sf_dir, "embeddings")],
+    )
     return emb, cent_vals, last_counts
 
 
@@ -1976,7 +1963,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyed spread instead of a checkpoint — same trade as
     # kmeans_embeddings (measured 2.4 -> 2.1 s min-of-3); the prune join
     # itself is cluster-keyed and indifferent to this layout. Training is
-    # session-memoized across the family (r11, _KM_TRAIN_CACHE).
+    # session-memoized across the family (`_km_corpus_train`).
     emb, cent_vals, last_counts = _km_corpus_train(spark, sf_dir)
     # skew guard from the LAST training round's cluster counts (free —
     # they ride the training aggregate; exact sizes lag the final
@@ -2941,44 +2928,33 @@ IDX_SEED = 59
 IDX_OLD_MOD = 10  # portable-hash fold: ~8/10 old corpus, ~2/10 new batch
 IDX_OLD_LT = 8
 
-# Session memo for the frozen append-time codebook (r11, r10 verdict
-# item 5; the _LSH_INDEX_CACHE / _REJECT_CACHE precedent): the batch
-# append face and the streaming processor train the IDENTICAL
-# deterministic Lloyd trajectory on the identical ~80% slice, and a
-# bench/driver window evaluates them repeatedly — without the memo every
-# call replays two Lloyd rounds whose output is a pure function of the
-# corpus. Keyed by the session's applicationId (a localCheckpoint dies
-# with its session — no cross-run persistence) and the embeddings
-# table's footer fingerprint (files + bytes, no scan), so a rewritten
-# corpus can never be served a stale codebook. The bench times the
-# memo-cold construction explicitly (pq_index_append_cold).
-_PQ_APPEND_CDF_CACHE: dict[tuple, DataFrame] = {}
-
-
 def frozen_append_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ codebook trained once on the historical (~80%) slice —
     the shared 'version 0' artifact of the append family: the batch
     audit face (``pq_index_append``) and the streaming processor
-    (``streaming.ann_stream.frozen_pq_codebook``) freeze the same
-    trajectory, so they share one memoized materialization per
-    (session, corpus-fingerprint)."""
-    from ..sources.io import table_meta
+    (``streaming.ann_stream``) freeze the same trajectory, so they
+    share one driver-side session memo (``memo.py``) of its centroids;
+    each call rebuilds the 64-row frame with ``_pq_cdf``, whose ``cc``
+    is bit-equal to the trained frame's."""
+    from ..memo import session_memo
 
-    _, n_files, n_bytes = table_meta(sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, n_files, n_bytes)
-    hit = _PQ_APPEND_CDF_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
+    def train() -> list[list[list[float]]]:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        h = F.expr(phash_frag("vec_id", seed=IDX_SEED))
+        old = spread_by(
+            emb.filter((h % IDX_OLD_MOD) < IDX_OLD_LT), "vec_id"
+        )
+        cents = [[None] * PQ_K for _ in range(PQ_M)]
+        for r in _pq_train_cdf(spark, _pq_vsub(old)).collect():
+            cents[r["m"]][r["k"]] = list(r["c"])
+        return cents
+
+    cents = session_memo(
+        spark, "pq_append_codebook", train, tables=[(sf_dir, "embeddings")]
     )
-    h = F.expr(phash_frag("vec_id", seed=IDX_SEED))
-    old = spread_by(
-        emb.filter((h % IDX_OLD_MOD) < IDX_OLD_LT), "vec_id"
-    )
-    cdf = _pq_train_cdf(spark, _pq_vsub(old)).localCheckpoint()
-    _PQ_APPEND_CDF_CACHE[key] = cdf
-    return cdf
+    return _pq_cdf(spark, cents)
 
 
 def pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:

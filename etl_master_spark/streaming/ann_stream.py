@@ -39,20 +39,9 @@ from ..operators.vectors import (
     _pq_d2,
     _pq_train_cdf,
     _pq_vsub,
+    frozen_append_codebook,
 )
 from ..sources.io import load_table, spread_by
-
-
-def frozen_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The codebook trained once on the historical (~80%) slice —
-    the identical deterministic trajectory the batch face trains
-    (``vectors.pq_index_append``). r11: both faces now read the shared
-    session-memoized materialization (``frozen_append_codebook``) — the
-    'version 0' artifact — instead of each training their own copy of
-    the same Lloyd rounds."""
-    from ..operators.vectors import frozen_append_codebook
-
-    return frozen_append_codebook(spark, sf_dir)
 
 
 def encode_batch(cdf: DataFrame, batch: DataFrame) -> DataFrame:
@@ -85,7 +74,7 @@ def make_pq_append_processor(
     batch face) against the frozen codebook, land them under an
     epoch-keyed dir. A replayed epoch rewrites its own dir — idempotent,
     the eval_stream append_chunk contract."""
-    cdf = frozen_pq_codebook(spark, sf_dir)
+    cdf = frozen_append_codebook(spark, sf_dir)
     h = F.expr(phash_frag("vec_id", seed=IDX_SEED))
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -263,7 +252,7 @@ def _serving_codebook(
     V >= 1 reads the parquet codebook the retrain committed."""
     v = pq_index_version(work_dir)
     if v == 0:
-        return frozen_pq_codebook(spark, sf_dir)
+        return frozen_append_codebook(spark, sf_dir)
     return spark.read.parquet(
         str(Path(work_dir) / f"codebook_v{v}")
     ).localCheckpoint()

@@ -524,19 +524,13 @@ def user_sessions_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime. Both spellings hash-check equal on the same oracle, so the
     router changes the plan, never the result; the choice is logged.
     The probed faces stay registered unrouted so the driver keeps
-    hash-certifying each plan individually. The probe memoizes per
-    (table, key, footer fingerprint) — the sibling ``event_gaps_routed``
+    hash-certifying each plan individually. The probe is a session memo
+    per (table, key) (``memo.py``) — the sibling ``event_gaps_routed``
     reuses this face's probe within a session instead of re-scanning,
-    a rewritten table re-probes (the fingerprint changes), and above
-    SAMPLED_PROBE_MIN_ROWS (footer row count, no scan) the probe itself
-    is the O(sample) estimator (r9 verdict items 4/6)."""
-    from ..sources.io import table_meta
-
-    n_rows, n_files, n_bytes = table_meta(sf_dir, "events")
+    and above SAMPLED_PROBE_MIN_ROWS (footer row count, no scan) the
+    probe itself is the O(sample) estimator (r9 verdict items 4/6)."""
     return user_sessions_routed_of(
-        load_table(spark, sf_dir, "events"),
-        cache_key=(sf_dir, "events", "user_id", n_files, n_bytes),
-        approx_rows=n_rows,
+        load_table(spark, sf_dir, "events"), table=(sf_dir, "events")
     )
 
 
@@ -544,8 +538,7 @@ def user_sessions_routed_of(
     ev: DataFrame,
     bucket_hours: int | None = None,
     share: float | None = None,
-    cache_key: tuple | None = None,
-    approx_rows: int | None = None,
+    table: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Core of ``user_sessions_routed`` — split out for planted-skew
     routing tests. ``share`` lets a caller with table statistics skip
@@ -553,9 +546,7 @@ def user_sessions_routed_of(
     never the result (the twins share one oracle)."""
     from ..functions.skew import skew_route
 
-    route = skew_route(
-        ev, "user_id", "user_sessions", share, cache_key, approx_rows
-    )
+    route = skew_route(ev, "user_id", "user_sessions", share, table)
     if route == "bucketed":
         return user_sessions_bucketed_of(ev, bucket_hours)
     return user_sessions_of(ev)

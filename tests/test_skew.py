@@ -310,14 +310,18 @@ def test_skew_router_supplied_share_skips_probe_entirely(spark, monkeypatch):
     assert got == want
 
 
-def test_skew_router_memoizes_probe_per_cache_key(spark, monkeypatch):
-    """With a cache_key the exact probe is paid once per session: the
+def test_skew_router_memoizes_probe_per_table(spark, monkeypatch, tmp_path):
+    """With a table the exact probe is paid once per session: the
     second routed construction over the same (table, key) must not
-    re-scan (probe patched to explode after the first call)."""
+    re-scan (probe counted)."""
+    from etl_master_spark import memo
     from etl_master_spark.functions import skew
 
-    skew._SHARE_CACHE.clear()
-    df = spark.range(100).select((F.col("id") % 3).alias("user_id"))
+    memo.clear("skew_share")
+    spark.range(100).select((F.col("id") % 3).alias("user_id")).write.parquet(
+        f"{tmp_path}/events.parquet"
+    )
+    df = spark.read.parquet(f"{tmp_path}/events.parquet")
     calls = {"n": 0}
     real = skew.max_key_share
 
@@ -326,12 +330,12 @@ def test_skew_router_memoizes_probe_per_cache_key(spark, monkeypatch):
         return real(frame, key)
 
     monkeypatch.setattr(skew, "max_key_share", counting)
-    key = ("sfX", "events", "user_id")
-    r1 = skew.skew_route(df, "user_id", cache_key=key)
-    r2 = skew.skew_route(df, "user_id", cache_key=key)
+    table = (str(tmp_path), "events")
+    r1 = skew.skew_route(df, "user_id", table=table)
+    r2 = skew.skew_route(df, "user_id", table=table)
     assert r1 == r2
     assert calls["n"] == 1
-    skew._SHARE_CACHE.clear()
+    memo.clear("skew_share")
 
 
 def test_sampled_key_share_routes_planted_bot(spark):
@@ -424,14 +428,18 @@ def test_skew_router_auto_picks_sampled_probe_above_row_threshold(
 
 def test_share_cache_invalidates_on_table_rewrite(spark, tmp_path, monkeypatch):
     """r9 verdict item 6: the probe memo key carries the table's footer
-    fingerprint (file count + bytes), so rewriting the table re-probes
+    fingerprint (``memo.session_memo``), so rewriting the table re-probes
     instead of serving a stale share. First call probes, second call
     hits the memo, a rewrite with different data probes again and the
-    route follows the NEW data."""
+    route follows the NEW data. The rejection-negatives memo over the
+    same ``events`` table follows the same rule: a mid-session rewrite
+    rebuilds the sample instead of serving stale negatives."""
+    from etl_master_spark import memo
     from etl_master_spark.functions import skew
+    from etl_master_spark.operators import recsplit
     from etl_master_spark.streaming.windows import user_sessions_routed
 
-    skew._SHARE_CACHE.clear()
+    memo.clear("skew_share")
     calls = {"n": 0}
     real = skew.max_key_share
 
@@ -440,6 +448,13 @@ def test_share_cache_invalidates_on_table_rewrite(spark, tmp_path, monkeypatch):
         return real(frame, key)
 
     monkeypatch.setattr(skew, "max_key_share", counting)
+    samples = {"n": 0}
+
+    def counting_sampler(r, n, max_rounds):
+        samples["n"] += 1
+        return r
+
+    monkeypatch.setattr(recsplit, "negatives_sample_reject", counting_sampler)
 
     def write_events(bot_share: float, n: int = 2_000) -> None:
         bot = int(n * bot_share)
@@ -453,6 +468,7 @@ def test_share_cache_invalidates_on_table_rewrite(spark, tmp_path, monkeypatch):
                 " TIMESTAMP_NTZ '2024-01-01 00:00:00')"
             ).alias("ts"),
             F.concat(F.lit("t"), (F.col("id") % 5)).alias("event_type"),
+            F.concat(F.lit("item "), (F.col("id") % 37)).alias("props"),
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{tmp_path}/events.parquet"
         )
@@ -462,11 +478,16 @@ def test_share_cache_invalidates_on_table_rewrite(spark, tmp_path, monkeypatch):
     assert calls["n"] == 1
     user_sessions_routed(spark, str(tmp_path))
     assert calls["n"] == 1  # memo hit: same fingerprint, no re-probe
+    negs = recsplit.negatives_sample_reject_cached(spark, str(tmp_path))
+    assert recsplit.negatives_sample_reject_cached(spark, str(tmp_path)) is negs
+    assert samples["n"] == 1
 
     # rewrite with a planted bot: different rows -> different byte total
     # -> new fingerprint -> fresh probe, and the route must flip with it
     write_events(0.4, n=2_100)
     df = user_sessions_routed(spark, str(tmp_path))
     assert calls["n"] == 2
+    recsplit.negatives_sample_reject_cached(spark, str(tmp_path))
+    assert samples["n"] == 2  # rewritten events -> rebuilt sample
     # bucketed and naive twins agree on output; sanity: rows exist
     assert df.count() > 0

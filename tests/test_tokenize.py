@@ -1087,11 +1087,10 @@ def test_lsh_index_memo_invalidates_on_corpus_rewrite(spark, tmp_path):
     """The session index memo serves the whole near-dup family from one
     build, but a REWRITTEN documents table (different footer fingerprint)
     must rebuild — the skew-probe-memo staleness contract applied here."""
-    from etl_master_spark.operators.text import (
-        _LSH_INDEX_CACHE,
-        _lsh_index,
-        minhash_lsh_pairs,
-    )
+    from etl_master_spark import memo
+    from etl_master_spark.operators.text import _lsh_index, minhash_lsh_pairs
+
+    memo.clear("lsh_index")
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon")
@@ -1116,3 +1115,26 @@ def test_lsh_index_memo_invalidates_on_corpus_rewrite(spark, tmp_path):
         for r in minhash_lsh_pairs(spark, str(tmp_path)).collect()
     }
     assert {(0, 1), (2, 3)} <= pairs and not any(4 in p for p in pairs)
+
+
+def test_recall_audit_empty_truth_faces_emit_null_recalls(spark, tmp_path):
+    """A corpus with no near-duplicate pair leaves every face's truth set
+    empty: each face still emits its row, with n_truth = 0 and null
+    recalls, under ANSI on and off (0/0 must not raise DIVIDE_BY_ZERO)."""
+    from etl_master_spark.operators.text import neardup_topk_recall_audit
+
+    _write_docs(spark, str(tmp_path), [
+        (0, "alpha beta gamma delta epsilon zeta", "en", "s"),
+        (1, "one two three four five six", "en", "s"),
+    ])
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            rows = neardup_topk_recall_audit(spark, str(tmp_path)).collect()
+            assert [r["face"] for r in rows] == [
+                "containment", "jaccard", "jaccard_deep", "tfidf"
+            ]
+            assert {tuple(r)[1:] for r in rows} == {(0, 0, 0, None, None)}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)

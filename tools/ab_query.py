@@ -3,12 +3,11 @@ the CURRENT tree's query N times in one warm session and reports each
 pass (construct_s + exec_s), so variants run back-to-back give
 comparable mins without session-boot noise.
 
-Caveat (r10 ADVICE): session memos (_LSH_INDEX_CACHE, _REJECT_CACHE,
-_KM_TRAIN_CACHE, _PQ_APPEND_CDF_CACHE) survive clearCache(), so for
-memoized queries the min-of-N reports the memo-WARM cost — fine for
-A/B of the same query across variants (both sides warm identically),
-but do not read it as a cold-session cost; bench.py's `cold` twins
-measure those.
+Caveat (r10 ADVICE): session memos (etl_master_spark/memo.py) survive
+clearCache() — only memo.clear() empties them — so for memoized
+queries the min-of-N reports the memo-WARM cost — fine for A/B of the
+same query across variants (both sides warm identically), but do not
+read it as a cold-session cost; bench.py's `cold` twins measure those.
 
 Usage: python tools/ab_query.py <query> [passes=4]
 Env: SPARK_GRAFT_SF_DIR (timed dir), SPARK_GRAFT_WARM_DIR (warm pass).
