@@ -21,26 +21,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ranking import eval_from_scores
-from ..operators.recsplit import negatives, splits
+from ..operators.recsplit import SplitData, split_data
 
 EMB_SIZE = 16  # reference uses 200 (main_my.py:35); small here for test speed
 SEED = 72  # reference --seed default (main_my.py:32)
 
 
-def train_als(
-    spark: SparkSession, sf_dir: str, domain: str, rank: int = EMB_SIZE
-):
-    """Fit implicit-feedback ALS on one domain's train split."""
+def _fit(data: SplitData, domain: str, rank: int):
     from pyspark.ml.recommendation import ALS
 
-    train = (
-        splits(spark, sf_dir)
-        .filter((F.col("split") == "train") & (F.col("domain") == domain))
-        .select(
-            F.col("user_id").cast("int").alias("user"),
-            F.col("item_id").cast("int").alias("item"),
-            F.lit(1.0).alias("rating"),
-        )
+    train = data.train(domain).select(
+        F.col("user_id").cast("int").alias("user"),
+        F.col("item_id").cast("int").alias("item"),
+        F.lit(1.0).alias("rating"),
     )
     als = ALS(
         rank=rank,
@@ -58,33 +51,33 @@ def train_als(
     return als.fit(train)
 
 
+def train_als(
+    spark: SparkSession, sf_dir: str, domain: str, rank: int = EMB_SIZE
+):
+    """Fit implicit-feedback ALS on one domain's train split."""
+    return _fit(split_data(spark, sf_dir), domain, rank)
+
+
+def _scores(data: SplitData, domain: str, rank: int) -> DataFrame:
+    cand = data.candidates(domain).select(
+        F.col("user_id").cast("int").alias("user"),
+        F.col("item_id").cast("int").alias("item"),
+    )
+    return _fit(data, domain, rank).transform(cand).select(
+        F.col("user").cast("bigint").alias("user_id"),
+        F.col("item").cast("bigint").alias("item_id"),
+        F.lit(domain).alias("domain"),
+        F.col("prediction").cast("double").alias("score"),
+    )
+
+
 def als_scores(
     spark: SparkSession, sf_dir: str, domain: str, rank: int = EMB_SIZE
 ) -> DataFrame:
     """Score every (user, candidate-item) pair for one domain via the model's
     dot products — computed as a transform over the candidate pairs, never a
     full user×item materialization."""
-    model = train_als(spark, sf_dir, domain, rank=rank)
-    neg = negatives(spark, sf_dir).filter(F.col("domain") == domain)
-    hold = (
-        splits(spark, sf_dir)
-        .filter(F.col("split").isin("vali", "test") & (F.col("domain") == domain))
-    )
-    cand = (
-        neg.select("user_id", "item_id")
-        .unionByName(hold.select("user_id", "item_id"))
-        .distinct()
-        .select(
-            F.col("user_id").cast("int").alias("user"),
-            F.col("item_id").cast("int").alias("item"),
-        )
-    )
-    return model.transform(cand).select(
-        F.col("user").cast("bigint").alias("user_id"),
-        F.col("item").cast("bigint").alias("item_id"),
-        F.lit(domain).alias("domain"),
-        F.col("prediction").cast("double").alias("score"),
-    )
+    return _scores(split_data(spark, sf_dir), domain, rank)
 
 
 def als_eval(
@@ -98,15 +91,9 @@ def als_eval(
     held-out positive per user per domain, HR/NDCG/MRR@{5,10}. Rows-only
     check (model training is not SQL-expressible — SURVEY.md §7.4).
     ``rank`` (--emb_size) and ``ks`` (--topk) thread from the CLI."""
-    scores = als_scores(spark, sf_dir, "x", rank=rank).unionByName(
-        als_scores(spark, sf_dir, "y", rank=rank)
-    )
-    sp = splits(spark, sf_dir)
-    holdout = sp.filter(F.col("split") == mode).select(
-        "user_id", "item_id", "domain"
-    )
-    negs = negatives(spark, sf_dir)
-    return eval_from_scores(scores, holdout, negs, ks=ks)
+    data = split_data(spark, sf_dir)
+    scores = _scores(data, "x", rank).unionByName(_scores(data, "y", rank))
+    return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
 
 
 def als_eval_frozen(
@@ -120,15 +107,10 @@ def als_eval_frozen(
     artifacts stay valid."""
     from ..operators.ranking import freeze_and_eval
 
-    scores = als_scores(spark, sf_dir, "x").unionByName(
-        als_scores(spark, sf_dir, "y")
-    )
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select(
-        "user_id", "item_id", "domain"
-    )
+    data = split_data(spark, sf_dir)
+    scores = _scores(data, "x", EMB_SIZE).unionByName(_scores(data, "y", EMB_SIZE))
     return freeze_and_eval(
-        scores, hold, negatives(spark, sf_dir), f"als_{mode}", sf_dir,
+        scores, data.holdout(mode), data.negatives, f"als_{mode}", sf_dir,
         # training-config fingerprint: a hyperparameter change invalidates
         # the committed freeze instead of silently serving stale metrics
         fingerprint=f"als:v1:rank={EMB_SIZE},seed={SEED},maxIter=10,reg=0.1",
@@ -165,13 +147,9 @@ def save_checkpoint(
     )
 
 
-def scores_from_checkpoint(
-    spark: SparkSession, sf_dir: str, domain: str, ckpt_dir: str
+def _checkpoint_scores(
+    spark: SparkSession, data: SplitData, domain: str, ckpt_dir: str
 ) -> DataFrame:
-    """Score candidate pairs from RELOADED factors — a join-first
-    ``zip_with`` dot product over the candidate pairs, no model object and
-    no user×item materialization. The reloaded path must reproduce the
-    live model's ranking (pinned in tests/test_model.py)."""
     uf = spark.read.parquet(f"{ckpt_dir}/{domain}/user_factors").select(
         F.col("id").cast("bigint").alias("user_id"),
         F.col("features").cast("array<float>").alias("uf"),
@@ -180,15 +158,6 @@ def scores_from_checkpoint(
         F.col("id").cast("bigint").alias("item_id"),
         F.col("features").cast("array<float>").alias("if_"),
     )
-    neg = negatives(spark, sf_dir).filter(F.col("domain") == domain)
-    hold = splits(spark, sf_dir).filter(
-        F.col("split").isin("vali", "test") & (F.col("domain") == domain)
-    )
-    cand = (
-        neg.select("user_id", "item_id")
-        .unionByName(hold.select("user_id", "item_id"))
-        .distinct()
-    )
     # float32 accumulate, like ALS transform's BLAS sdot — then one widen
     dot = F.aggregate(
         F.zip_with("uf", "if_", lambda a, b: a * b),
@@ -196,7 +165,8 @@ def scores_from_checkpoint(
         lambda acc, v: acc + v,
     ).cast("double")
     return (
-        cand.join(uf, "user_id")
+        data.candidates(domain)
+        .join(uf, "user_id")
         .join(F.broadcast(itf), "item_id")
         .select(
             "user_id",
@@ -205,6 +175,16 @@ def scores_from_checkpoint(
             dot.alias("score"),
         )
     )
+
+
+def scores_from_checkpoint(
+    spark: SparkSession, sf_dir: str, domain: str, ckpt_dir: str
+) -> DataFrame:
+    """Score candidate pairs from RELOADED factors — a join-first
+    ``zip_with`` dot product over the candidate pairs, no model object and
+    no user×item materialization. The reloaded path must reproduce the
+    live model's ranking (pinned in tests/test_model.py)."""
+    return _checkpoint_scores(spark, split_data(spark, sf_dir), domain, ckpt_dir)
 
 
 def reeval_from_checkpoint(
@@ -218,12 +198,10 @@ def reeval_from_checkpoint(
     saved best checkpoints for both domains and re-run the evaluation
     protocol at K∈{5,10}. Assumes ``save_checkpoint`` ran for 'x' and 'y'
     under ``ckpt_dir``."""
-    scores = scores_from_checkpoint(spark, sf_dir, "x", ckpt_dir).unionByName(
-        scores_from_checkpoint(spark, sf_dir, "y", ckpt_dir)
+    data = split_data(spark, sf_dir)
+    scores = _checkpoint_scores(spark, data, "x", ckpt_dir).unionByName(
+        _checkpoint_scores(spark, data, "y", ckpt_dir)
     )
-    sp = splits(spark, sf_dir)
-    holdout = sp.filter(F.col("split") == mode).select(
-        "user_id", "item_id", "domain"
+    return eval_from_scores(
+        scores, data.holdout(mode), data.negatives, ks=ks or [5, 10]
     )
-    negs = negatives(spark, sf_dir)
-    return eval_from_scores(scores, holdout, negs, ks=ks or [5, 10])

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ranking import eval_from_scores
-from ..operators.recsplit import negatives, splits
+from ..operators.recsplit import SplitData, split_data
 from .reduce import tree_collect
 
 EMB_SIZE = 16
@@ -47,14 +47,12 @@ DROPOUT_NUM = 1  # keep prob = 1 - DROPOUT_NUM/DROPOUT_DEN
 DROPOUT_DEN = 4
 
 
-def _train_frame(
-    spark: SparkSession, sf_dir: str, domain: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(user_id, idxs ARRAY<INT>) over the train split + the dense item
-    index (item_id ↔ idx) used to address decoder columns."""
-    tr = splits(spark, sf_dir).filter(
-        (F.col("split") == "train") & (F.col("domain") == domain)
-    )
+def _train_frame(data: SplitData, domain: str) -> dict:
+    """The data half of a model dict: ``per_user`` (user_id, idxs
+    ARRAY<INT>) over the train split, the dense item index ``items``
+    (item_id ↔ idx) that addresses decoder columns, its size ``n_items``
+    (the one eager count), and ``data`` itself for scoring."""
+    tr = data.train(domain)
     items = (
         tr.select("item_id")
         .distinct()
@@ -68,8 +66,10 @@ def _train_frame(
         .groupBy("user_id")
         .agg(F.sort_array(F.collect_list("idx")).alias("idxs"))
     )
-    n_items = items.count()
-    return per_user, items, n_items
+    return {
+        "data": data, "per_user": per_user, "items": items,
+        "n_items": items.count(),
+    }
 
 
 def _multi_hot(pdf: pd.DataFrame, n_items: int) -> tuple[np.ndarray, np.ndarray]:
@@ -89,8 +89,18 @@ def train_cdae(
     lr: float = LR,
     seed: int = SEED,
 ) -> dict:
-    per_user, items, n_items = _train_frame(spark, sf_dir, domain)
-    per_user = per_user.persist()
+    return _train(
+        spark, _train_frame(split_data(spark, sf_dir), domain),
+        emb, epochs, lr, seed,
+    )
+
+
+def _train(
+    spark: SparkSession, frames: dict, emb: int, epochs: int, lr: float,
+    seed: int,
+) -> dict:
+    n_items = frames["n_items"]
+    per_user = frames["per_user"].persist()
     n_users = per_user.count()
     rng = np.random.default_rng(seed)
     w1 = rng.normal(0.0, 0.01, (n_items, emb))
@@ -154,14 +164,7 @@ def train_cdae(
             losses.append(sum(p["loss"] for p in partials) / n_users)
     finally:
         per_user.unpersist()
-    return {
-        "W1": w1,
-        "W2": w2,
-        "items": items,
-        "per_user": _train_frame(spark, sf_dir, domain)[0],
-        "n_items": n_items,
-        "losses": losses,
-    }
+    return {**frames, "W1": w1, "W2": w2, "losses": losses}
 
 
 def cdae_user_embeddings(
@@ -179,6 +182,12 @@ def cdae_user_embeddings(
     pass — never a driver-side matrix."""
     model = train_cdae(spark, sf_dir, domain, emb=emb, epochs=epochs, lr=lr,
                        seed=seed)
+    return _latent(spark, model, "embedding")
+
+
+def _latent(spark: SparkSession, model: dict, col: str) -> DataFrame:
+    """(user_id, ``col`` ARRAY<DOUBLE>): each train user's latent z,
+    computed per Arrow batch from the user's rebuilt multi-hot row."""
     n_items = model["n_items"]
     bw = spark.sparkContext.broadcast(model["W1"])
 
@@ -189,10 +198,10 @@ def cdae_user_embeddings(
                 continue
             users, x = _multi_hot(pdf, n_items)
             z = np.maximum(x @ p1, 0.0)
-            yield pd.DataFrame({"user_id": users, "embedding": z.tolist()})
+            yield pd.DataFrame({"user_id": users, col: z.tolist()})
 
     return model["per_user"].mapInPandas(
-        latent, "user_id long, embedding array<double>"
+        latent, f"user_id long, {col} array<double>"
     )
 
 
@@ -215,20 +224,9 @@ def cdae_scores_with(
     spark: SparkSession, sf_dir: str, domain: str, model: dict
 ) -> DataFrame:
     """Score candidate pairs from an in-hand model dict (live-trained or
-    checkpoint-reloaded) — the shared scoring half of ``cdae_scores``."""
-    n_items = model["n_items"]
-    bw = spark.sparkContext.broadcast(model["W1"])
-
-    def latent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p1 = bw.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            users, x = _multi_hot(pdf, n_items)
-            z = np.maximum(x @ p1, 0.0)
-            yield pd.DataFrame({"user_id": users, "z": z.tolist()})
-
-    z_df = model["per_user"].mapInPandas(latent, "user_id long, z array<double>")
+    checkpoint-reloaded) — the shared scoring half of ``cdae_scores``.
+    The candidates come from the dict's own ``data``."""
+    z_df = _latent(spark, model, "z")
     w2 = model["W2"]
     dec_rows = [
         (int(r["item_id"]), int(r["idx"])) for r in model["items"].collect()
@@ -237,22 +235,14 @@ def cdae_scores_with(
         [(item, w2[:, idx].tolist()) for item, idx in dec_rows],
         "item_id long, w_out array<double>",
     )
-    neg = negatives(spark, sf_dir).filter(F.col("domain") == domain)
-    hold = splits(spark, sf_dir).filter(
-        F.col("split").isin("vali", "test") & (F.col("domain") == domain)
-    )
-    cand = (
-        neg.select("user_id", "item_id")
-        .unionByName(hold.select("user_id", "item_id"))
-        .distinct()
-    )
     dot = F.aggregate(
         F.zip_with("z", "w_out", lambda a, b: a * b),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
     return (
-        cand.join(z_df, "user_id")
+        model["data"].candidates(domain)
+        .join(z_df, "user_id")
         .join(F.broadcast(dec), "item_id")
         .select(
             "user_id",
@@ -276,15 +266,24 @@ def cdae_eval(
     """Reference protocol end-to-end with the CDAE scorer (rows-only —
     training is not SQL-expressible). Hyperparameters thread through to
     the trainer — the CLI's --epochs/--lr/--emb_size/--seed land here."""
-    scores = cdae_scores(
-        spark, sf_dir, "x", emb=emb, epochs=epochs, lr=lr, seed=seed
-    ).unionByName(
-        cdae_scores(spark, sf_dir, "y", emb=emb, epochs=epochs, lr=lr, seed=seed)
+    scores, data = _scores_xy(
+        spark, sf_dir, lambda _, f: _train(spark, f, emb, epochs, lr, seed)
     )
-    sp = splits(spark, sf_dir)
-    holdout = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    negs = negatives(spark, sf_dir)
-    return eval_from_scores(scores, holdout, negs, ks=ks)
+    return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
+
+
+def _scores_xy(
+    spark: SparkSession, sf_dir: str, model_of
+) -> tuple[DataFrame, SplitData]:
+    """Both domains' candidate scores over ONE ``split_data``, plus that
+    data; ``model_of(domain, frames)`` turns a domain's ``_train_frame``
+    dict into a scoring-ready model dict."""
+    data = split_data(spark, sf_dir)
+    x, y = (
+        cdae_scores_with(spark, sf_dir, d, model_of(d, _train_frame(data, d)))
+        for d in ("x", "y")
+    )
+    return x.unionByName(y), data
 
 
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
@@ -312,14 +311,19 @@ def load_cdae_checkpoint(
 ) -> dict:
     """Rebuild a scoring-ready model dict: weights from parquet, item
     index and per-user frames re-derived from the tables."""
-    model: dict = {}
-    for r in spark.read.parquet(f"{ckpt_dir}/cdae_{domain}").collect():
-        model[r["name"]] = np.array(r["data"], dtype=np.float64).reshape(
+    return {
+        **_train_frame(split_data(spark, sf_dir), domain),
+        **_load_weights(spark, domain, ckpt_dir),
+    }
+
+
+def _load_weights(spark: SparkSession, domain: str, ckpt_dir: str) -> dict:
+    return {
+        r["name"]: np.array(r["data"], dtype=np.float64).reshape(
             tuple(r["shape"])
         )
-    per_user, items, n_items = _train_frame(spark, sf_dir, domain)
-    model.update({"per_user": per_user, "items": items, "n_items": n_items})
-    return model
+        for r in spark.read.parquet(f"{ckpt_dir}/cdae_{domain}").collect()
+    }
 
 
 def cdae_reeval_from_checkpoint(
@@ -332,16 +336,10 @@ def cdae_reeval_from_checkpoint(
     """R7 for the CDAE family: reload both domains' saved weights and
     re-run the eval protocol — must reproduce the live metrics exactly
     (pinned in tests/test_model.py)."""
-    scores = cdae_scores_with(
-        spark, sf_dir, "x", load_cdae_checkpoint(spark, sf_dir, "x", ckpt_dir)
-    ).unionByName(
-        cdae_scores_with(
-            spark, sf_dir, "y", load_cdae_checkpoint(spark, sf_dir, "y", ckpt_dir)
-        )
+    scores, data = _scores_xy(
+        spark, sf_dir, lambda d, f: {**f, **_load_weights(spark, d, ckpt_dir)}
     )
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    return eval_from_scores(scores, hold, negatives(spark, sf_dir), ks=ks)
+    return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
 
 
 def cdae_eval_frozen(
@@ -354,14 +352,11 @@ def cdae_eval_frozen(
     downstream of it is hash-checked."""
     from ..operators.ranking import freeze_and_eval
 
-    scores = cdae_scores(spark, sf_dir, "x").unionByName(
-        cdae_scores(spark, sf_dir, "y")
+    scores, data = _scores_xy(
+        spark, sf_dir, lambda _, f: _train(spark, f, EMB_SIZE, EPOCHS, LR, SEED)
     )
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    negs = negatives(spark, sf_dir)
     return freeze_and_eval(
-        scores, hold, negs, f"cdae_{mode}", sf_dir,
+        scores, data.holdout(mode), data.negatives, f"cdae_{mode}", sf_dir,
         fingerprint=(
             f"cdae:v1:emb={EMB_SIZE},epochs={EPOCHS},lr={LR},seed={SEED},"
             f"drop={DROPOUT_NUM}/{DROPOUT_DEN}"

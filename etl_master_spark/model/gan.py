@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ranking import eval_from_scores
-from ..operators.recsplit import negatives, splits
+from ..operators.recsplit import SplitData, split_data
 from .cdae import DROPOUT_DEN, DROPOUT_NUM, _train_frame
 from .reduce import tree_collect
 
@@ -325,25 +325,30 @@ def _d_grads(
 
 # -- distributed training loop ------------------------------------------------
 
-def _joined_frame(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
-    """(user_id, idxs_x, idxs_y) over the union of both domains' train
-    users (full outer join — a user absent from one domain has an empty
-    row there, exactly a zero multi-hot), plus both item indices."""
-    px, items_x, n_x = _train_frame(spark, sf_dir, "x")
-    py, items_y, n_y = _train_frame(spark, sf_dir, "y")
+def _joined_frame(data: SplitData) -> dict:
+    """The data half of a model dict: ``joined`` (user_id, idxs_x, idxs_y)
+    over the union of both domains' train users (full outer join — a user
+    absent from one domain has an empty row there, exactly a zero
+    multi-hot), both item indices and their sizes, and ``data`` itself."""
+    fx, fy = _train_frame(data, "x"), _train_frame(data, "y")
     empty = F.array().cast("array<int>")
     joined = (
-        px.withColumnsRenamed({"idxs": "idxs_x"})
-        .join(py.withColumnsRenamed({"idxs": "idxs_y"}), "user_id", "full_outer")
+        fx["per_user"].withColumnsRenamed({"idxs": "idxs_x"})
+        .join(
+            fy["per_user"].withColumnsRenamed({"idxs": "idxs_y"}),
+            "user_id", "full_outer",
+        )
         .select(
             "user_id",
             F.coalesce("idxs_x", empty).alias("idxs_x"),
             F.coalesce("idxs_y", empty).alias("idxs_y"),
         )
     )
-    return joined, items_x, items_y, n_x, n_y
+    return {
+        "data": data, "joined": joined,
+        "items_x": fx["items"], "items_y": fy["items"],
+        "n_items_x": fx["n_items"], "n_items_y": fy["n_items"],
+    }
 
 
 def _two_hot(
@@ -391,8 +396,9 @@ def train_gan(
     for the generator, SGD + weight decay for the discriminators, all
     state driver-side over the collected partial gradients — equally
     deterministic (full-batch, seeded)."""
-    joined, items_x, items_y, n_x, n_y = _joined_frame(spark, sf_dir)
-    joined = joined.persist()
+    frames = _joined_frame(split_data(spark, sf_dir))
+    joined = frames["joined"].persist()
+    n_x, n_y = frames["n_items_x"], frames["n_items_y"]
     n_users = joined.count()
     g, d = init_params(n_x, n_y, emb, seed, strategy=strategy)
     if optimizer == "adam":
@@ -482,9 +488,7 @@ def train_gan(
     finally:
         joined.unpersist()
     return {
-        "g": g, "d": d,
-        "items_x": items_x, "items_y": items_y,
-        "n_items_x": n_x, "n_items_y": n_y,
+        **frames, "g": g, "d": d,
         "g_losses": g_losses, "gan_losses": gan_losses, "d_losses": d_losses,
     }
 
@@ -496,7 +500,43 @@ def gan_scores(spark: SparkSession, sf_dir: str, model: dict | None = None) -> D
     join-first scoring shape shared with cdae_scores, but from ONE coupled
     training run covering both domains."""
     model = model or train_gan(spark, sf_dir)
-    joined, _, _, n_x, n_y = _joined_frame(spark, sf_dir)
+    z_df = _latent(spark, model)
+    out = []
+    for domain, items_key, w2_key, z_col in (
+        ("x", "items_x", "w2x", "zx"),
+        ("y", "items_y", "w2y", "zy"),
+    ):
+        w2 = model["g"][w2_key]
+        dec = spark.createDataFrame(
+            [
+                (int(r["item_id"]), w2[:, int(r["idx"])].tolist())
+                for r in model[items_key].collect()
+            ],
+            "item_id long, w_out array<double>",
+        )
+        dot = F.aggregate(
+            F.zip_with(z_col, "w_out", lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        out.append(
+            model["data"].candidates(domain)
+            .join(z_df.select("user_id", z_col), "user_id")
+            .join(F.broadcast(dec), "item_id")
+            .select(
+                "user_id",
+                "item_id",
+                F.lit(domain).alias("domain"),
+                dot.alias("score"),
+            )
+        )
+    return out[0].unionByName(out[1])
+
+
+def _latent(spark: SparkSession, model: dict) -> DataFrame:
+    """(user_id, zx, zy): every train user's latent z in both domains,
+    computed per Arrow batch from the rebuilt multi-hot rows."""
+    n_x, n_y = model["n_items_x"], model["n_items_y"]
     bw = spark.sparkContext.broadcast((model["g"]["w1x"], model["g"]["w1y"]))
 
     def latent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -511,47 +551,9 @@ def gan_scores(spark: SparkSession, sf_dir: str, model: dict | None = None) -> D
                 {"user_id": users, "zx": zx.tolist(), "zy": zy.tolist()}
             )
 
-    z_df = joined.mapInPandas(
+    return model["joined"].mapInPandas(
         latent, "user_id long, zx array<double>, zy array<double>"
     )
-    out = []
-    for domain, items_key, w2_key, z_col in (
-        ("x", "items_x", "w2x", "zx"),
-        ("y", "items_y", "w2y", "zy"),
-    ):
-        w2 = model["g"][w2_key]
-        dec = spark.createDataFrame(
-            [
-                (int(r["item_id"]), w2[:, int(r["idx"])].tolist())
-                for r in model[items_key].collect()
-            ],
-            "item_id long, w_out array<double>",
-        )
-        neg = negatives(spark, sf_dir).filter(F.col("domain") == domain)
-        hold = splits(spark, sf_dir).filter(
-            F.col("split").isin("vali", "test") & (F.col("domain") == domain)
-        )
-        cand = (
-            neg.select("user_id", "item_id")
-            .unionByName(hold.select("user_id", "item_id"))
-            .distinct()
-        )
-        dot = F.aggregate(
-            F.zip_with(z_col, "w_out", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out.append(
-            cand.join(z_df.select("user_id", z_col), "user_id")
-            .join(F.broadcast(dec), "item_id")
-            .select(
-                "user_id",
-                "item_id",
-                F.lit(domain).alias("domain"),
-                dot.alias("score"),
-            )
-        )
-    return out[0].unionByName(out[1])
 
 
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
@@ -586,12 +588,7 @@ def load_gan_checkpoint(
         side, key = r["name"].split(".", 1)
         arr = np.array(r["data"], dtype=np.float64).reshape(tuple(r["shape"]))
         (g if side == "g" else d)[key] = arr
-    _, items_x, items_y, n_x, n_y = _joined_frame(spark, sf_dir)
-    return {
-        "g": g, "d": d,
-        "items_x": items_x, "items_y": items_y,
-        "n_items_x": n_x, "n_items_y": n_y,
-    }
+    return {**_joined_frame(split_data(spark, sf_dir)), "g": g, "d": d}
 
 
 def gan_reeval_from_checkpoint(
@@ -605,10 +602,11 @@ def gan_reeval_from_checkpoint(
     the eval protocol — must reproduce the live model's metrics exactly
     (pinned in tests/test_model.py)."""
     model = load_gan_checkpoint(spark, sf_dir, ckpt_dir)
-    scores = gan_scores(spark, sf_dir, model)
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    return eval_from_scores(scores, hold, negatives(spark, sf_dir), ks=ks)
+    data = model["data"]
+    return eval_from_scores(
+        gan_scores(spark, sf_dir, model), data.holdout(mode), data.negatives,
+        ks=ks,
+    )
 
 
 def gan_eval(spark: SparkSession, sf_dir: str, mode: str = "test") -> DataFrame:
@@ -629,12 +627,10 @@ def gan_eval_frozen(
     from ..operators.ranking import freeze_and_eval
 
     model = train_gan(spark, sf_dir)
-    scores = gan_scores(spark, sf_dir, model)
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    negs = negatives(spark, sf_dir)
+    data = model["data"]
     return freeze_and_eval(
-        scores, hold, negs, f"gan_{mode}", sf_dir,
+        gan_scores(spark, sf_dir, model), data.holdout(mode), data.negatives,
+        f"gan_{mode}", sf_dir,
         fingerprint=(
             f"gan:v1:emb={EMB},passes={PASSES},lr={LR},lr_d={LR_D},"
             f"seed={SEED},optimizer=gd,prior=gaussian"
@@ -661,16 +657,10 @@ def gan_eval_with(
     model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr, seed=seed,
                       optimizer=optimizer, prior=prior)
     scores = gan_scores(spark, sf_dir, model)
-    sp = splits(spark, sf_dir)
-    negs = negatives(spark, sf_dir)
+    data = model["data"]
     return {
         mode: eval_from_scores(
-            scores,
-            sp.filter(F.col("split") == mode).select(
-                "user_id", "item_id", "domain"
-            ),
-            negs,
-            ks=ks,
+            scores, data.holdout(mode), data.negatives, ks=ks
         )
         for mode in modes
     }
@@ -689,16 +679,6 @@ def gan_user_embeddings(
     (user_id, embedding ARRAY<DOUBLE>), Arrow-batched, never a driver
     matrix (reference ``save_embedding_process``, model_my.py:111-145)."""
     model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr, seed=seed)
-    joined, _, _, n_x, n_y = _joined_frame(spark, sf_dir)
-    w1 = model["g"]["w1x" if domain == "x" else "w1y"]
-    bw = spark.sparkContext.broadcast(w1)
-
-    def latent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            users, x, y = _two_hot(pdf, n_x, n_y)
-            z = np.maximum((x if domain == "x" else y) @ bw.value, 0.0)
-            yield pd.DataFrame({"user_id": users, "embedding": z.tolist()})
-
-    return joined.mapInPandas(latent, "user_id long, embedding array<double>")
+    return _latent(spark, model).select(
+        "user_id", F.col("zx" if domain == "x" else "zy").alias("embedding")
+    )

@@ -32,13 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import PHASH_P, phash_frag
 from ..sources.io import RATINGS_SQL
-from .recsplit import (
-    _RANKED_CTE,
-    NEGATIVES_ORACLE,
-    SPLIT_SEED,
-    negatives,
-    splits,
-)
+from .recsplit import _RANKED_CTE, NEGATIVES_ORACLE, split_data
 
 JITTER_SEED = 7  # decorrelates the deterministic baseline scores from rank order
 DEFAULT_KS = [5, 10]  # reference topK_list (main_my.py:28)
@@ -54,25 +48,18 @@ def candidate_scores(
     """
     if mode not in ("vali", "test"):
         raise ValueError(f"mode must be 'vali' or 'test', got {mode!r}")
-    from ..sources.io import ratings
-    from .recsplit import _shuffled_items, negatives_from_shuffled, splits_from_shuffled
-
     # ONE scan + ONE shuffle feeds every branch (splits, negatives,
     # popularity): the grouped per-user frame is |users|-sized — tiny
     # relative to the interactions — so caching it is the 100 TB-safe way
     # to stop the optimizer re-deriving ratings 7× (measured: 7 parquet
     # scans, 24 exchanges without this; 1 scan with it).
-    su = _shuffled_items(ratings(spark, sf_dir)).cache()
-    sp = splits_from_shuffled(su)
-    neg = negatives_from_shuffled(su)
-    pos = sp.filter(F.col("split") == mode).select(
-        "user_id", "item_id", "domain", F.lit(1).alias("is_pos")
-    )
-    cand = neg.select(
+    data = split_data(spark, sf_dir, cache=True)
+    pos = data.holdout(mode).withColumn("is_pos", F.lit(1))
+    cand = data.negatives.select(
         "user_id", "item_id", "domain", F.lit(0).alias("is_pos")
     ).unionByName(pos)
 
-    train = sp.filter(F.col("split") == "train")
+    train = data.splits.filter(F.col("split") == "train")
     pop = train.groupBy("domain", "item_id").agg(F.count(F.lit(1)).alias("pop"))
     return score_candidates(cand, pop)
 

@@ -22,6 +22,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -123,23 +125,13 @@ ORDER BY domain
 
 # -- E2 + E4: leave-two-out split with the reference's train rules -----------
 
-def _ranked_ratings(r: DataFrame) -> DataFrame:
-    """ratings + per-(user,domain) shuffle rank and group size.
-
-    The rank order replaces ``sklearn.utils.shuffle(items, random_state=2020)``
-    (``Dataset_CDAE.py:103,116``) with the portable seeded hash; item_id is
-    the tie-break, matching argsort stability semantics.
-    """
-    w = Window.partitionBy("user_id", "domain")
-    order_key = F.expr(phash_frag("user_id", "item_id", seed=SPLIT_SEED))
-    return r.withColumn(
-        "rn", F.row_number().over(w.orderBy(order_key.asc(), F.col("item_id").asc()))
-    ).withColumn("cnt", F.count(F.lit(1)).over(w))
-
-
 def _shuffled_items(r: DataFrame, seed: int = SPLIT_SEED) -> DataFrame:
     """(user_id, domain, items ARRAY<BIGINT>) with items in seeded-shuffle
-    order — ONE shuffle (the groupBy), then a purely row-local sort:
+    order. The order replaces ``sklearn.utils.shuffle(items,
+    random_state=2020)`` (``Dataset_CDAE.py:103,116``) with the portable
+    seeded hash; item_id is the tie-break, matching argsort stability.
+
+    ONE shuffle (the groupBy), then a purely row-local sort:
     transform to (hash, item) structs, array_sort (lexicographic ⇒ hash asc
     then item asc, identical to the window ORDER BY), project the items
     back out. This replaces a row_number window — same output order, one
@@ -340,6 +332,54 @@ ranked AS (
 SELECT user_id, item_id, domain, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= {N_NEGATIVES}
 """
+
+
+# -- E2 + E3 together: the split and its negatives, derived once --------------
+
+class SplitData(NamedTuple):
+    """The leave-two-out split and its 99 negatives per (user, domain) —
+    what the reference computes once and reuses for training and every
+    evaluation (``Dataset_CDAE.py:91-145``). Build it with ``split_data``
+    and pass it down; the accessors name the slices its users take."""
+
+    splits: DataFrame
+    negatives: DataFrame
+
+    def holdout(self, mode: str) -> DataFrame:
+        """(user_id, item_id, domain) held out as ``mode`` ('vali'/'test')."""
+        return self.splits.filter(F.col("split") == mode).select(
+            "user_id", "item_id", "domain"
+        )
+
+    def train(self, domain: str) -> DataFrame:
+        """(user_id, item_id) of one domain's train split."""
+        return self.splits.filter(
+            (F.col("split") == "train") & (F.col("domain") == domain)
+        ).select("user_id", "item_id")
+
+    def candidates(self, domain: str) -> DataFrame:
+        """Distinct (user_id, item_id) pairs a scorer must score for one
+        domain: its negatives plus its vali and test items."""
+        hold = self.splits.filter(
+            F.col("split").isin("vali", "test") & (F.col("domain") == domain)
+        )
+        return (
+            self.negatives.filter(F.col("domain") == domain)
+            .select("user_id", "item_id")
+            .unionByName(hold.select("user_id", "item_id"))
+            .distinct()
+        )
+
+
+def split_data(spark: SparkSession, sf_dir: str, cache: bool = False) -> SplitData:
+    """``SplitData`` over the sf_dir's ratings: splits and negatives share
+    ONE ``_shuffled_items`` frame. ``cache`` pins that |users|-sized frame
+    for a caller that runs every branch in one plan
+    (``ranking.candidate_scores``)."""
+    su = _shuffled_items(ratings(spark, sf_dir))
+    if cache:
+        su = su.cache()
+    return SplitData(splits_from_shuffled(su), negatives_from_shuffled(su))
 
 
 # -- E5: per-user percent subsampling of the train split ---------------------

@@ -22,8 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.recsplit import negatives_of, splits_of
-from .io import ratings
+from ..operators.recsplit import split_data
 
 
 def write_table(
@@ -49,16 +48,16 @@ def _exists(spark: SparkSession, path: str) -> bool:
 def materialize_splits(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Compute-if-missing splits + negatives (S2). First call computes from
-    the ratings derivation and writes parquet partitioned by domain/split;
+    """Compute-if-missing splits + negatives (S2). First call derives both with
+    ``recsplit.split_data`` and writes parquet partitioned by domain/split;
     later calls only read. Deterministic by construction (seeded-hash
     shuffle), so re-materializing yields byte-identical content."""
     splits_path = f"{out_dir}/splits"
     nega_path = f"{out_dir}/negatives"
     if not (_exists(spark, splits_path) and _exists(spark, nega_path)):
-        r = ratings(spark, sf_dir)
-        write_table(splits_of(r), splits_path, partition_by=["domain", "split"])
-        write_table(negatives_of(r), nega_path, partition_by=["domain"])
+        data = split_data(spark, sf_dir)
+        write_table(data.splits, splits_path, partition_by=["domain", "split"])
+        write_table(data.negatives, nega_path, partition_by=["domain"])
     return spark.read.parquet(splits_path), spark.read.parquet(nega_path)
 
 

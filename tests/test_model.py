@@ -7,6 +7,22 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _count_ratings(monkeypatch) -> list[str]:
+    """Route ``recsplit.ratings`` through a counter: one entry per
+    derivation of the ratings frame (each one rebuilds the split)."""
+    from etl_master_spark.operators import recsplit
+
+    calls: list[str] = []
+    real = recsplit.ratings
+
+    def counting(spark, sf_dir):
+        calls.append(sf_dir)
+        return real(spark, sf_dir)
+
+    monkeypatch.setattr(recsplit, "ratings", counting)
+    return calls
+
+
 def test_cross_domain_map_recovers_exact_linear(spark):
     """If y = x·W exactly, the distributed ridge fit must recover W (small
     reg) and the inverse-consistency metric must be ~0 for orthogonal W."""
@@ -42,10 +58,12 @@ def test_cross_domain_map_recovers_exact_linear(spark):
 
 
 @pytest.mark.slow
-def test_als_eval_protocol_shape(spark, sf_dir):
+def test_als_eval_protocol_shape(spark, sf_dir, monkeypatch):
     from etl_master_spark.model.als import als_eval
 
+    calls = _count_ratings(monkeypatch)
     rows = als_eval(spark, sf_dir, "test").collect()
+    assert len(calls) == 1  # one split + negatives derivation per entry point
     cells = {(r["domain"], r["k"]) for r in rows}
     assert cells == {("x", 5), ("x", 10), ("y", 5), ("y", 10)}
     for r in rows:
@@ -117,7 +135,7 @@ def test_mlp_map_learns_nonlinear_transform(spark):
 
 
 @pytest.mark.slow
-def test_cdae_trains_and_evaluates(spark, sf_dir):
+def test_cdae_trains_and_evaluates(spark, sf_dir, monkeypatch):
     """The distributed CDAE loop must actually learn (strictly lower BCE
     after training) and its scores must flow through the shared eval
     pipeline with valid metrics."""
@@ -126,7 +144,9 @@ def test_cdae_trains_and_evaluates(spark, sf_dir):
     model = train_cdae(spark, sf_dir, "x", emb=8, epochs=12, lr=0.3)
     losses = model["losses"]
     assert losses[-1] < 0.8 * losses[0], losses
+    calls = _count_ratings(monkeypatch)
     rows = cdae_eval(spark, sf_dir, "test").collect()
+    assert len(calls) == 1  # both domains train and score off one split
     assert {r["domain"] for r in rows} == {"x", "y"}
     for r in rows:
         for m in ("hr", "ndcg", "mrr"):
@@ -256,6 +276,21 @@ def test_gan_trains_and_evaluates(spark, sf_dir):
         assert 0.0 <= r["hr"] <= 1.0
 
 
+def test_gan_eval_derives_split_once(spark, sf_dir, monkeypatch):
+    """One ``gan_eval_with`` call derives the ratings — and so the split
+    and its negatives — exactly once: training, scoring and both modes'
+    evaluation share the model dict's ``SplitData``."""
+    from etl_master_spark.model import gan
+
+    calls = _count_ratings(monkeypatch)
+    frames = gan.gan_eval_with(spark, sf_dir, modes=("vali", "test"), passes=2)
+    rows = [r for df in frames.values() for r in df.collect()]
+    assert len(calls) == 1, calls
+    assert len(rows) == 8  # 2 modes x 2 domains x K in {5, 10}
+    for r in rows:
+        assert 0.0 <= r["hr"] <= 1.0
+
+
 @pytest.mark.slow
 def test_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
     """R7 second half: save both domains' factor checkpoints, reload them,
@@ -359,20 +394,17 @@ def test_gan_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
     re-evaluate — metrics must match the live model exactly."""
     from etl_master_spark.model import gan
     from etl_master_spark.operators.ranking import eval_from_scores
-    from etl_master_spark.operators.recsplit import negatives, splits
-    import pyspark.sql.functions as F
+    from etl_master_spark.operators.recsplit import split_data
 
     model = gan.train_gan(spark, sf_dir, passes=6)
     ck = str(tmp_path / "gan_ckpt")
     gan.save_gan_checkpoint(spark, model, ck)
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == "test").select(
-        "user_id", "item_id", "domain"
-    )
+    data = split_data(spark, sf_dir)
     live = {
         (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
         for r in eval_from_scores(
-            gan.gan_scores(spark, sf_dir, model), hold, negatives(spark, sf_dir)
+            gan.gan_scores(spark, sf_dir, model), data.holdout("test"),
+            data.negatives,
         ).collect()
     }
     rel = {
