@@ -13,8 +13,8 @@ Scale notes (100 TB design):
 - Negative sampling here materializes the per-domain item dimension and
   anti-joins; the item dim is broadcast (it is tiny relative to interactions:
   catalog ≪ interaction log). At extreme catalog sizes, switch to
-  sample-and-reject (sample ~k·(1+ε) candidate ids by hash, anti-join, keep
-  first 99) — same output contract.
+  ``negatives_sample_reject`` (hash out trial ids, anti-join, keep first 99
+  — every round in one lazy plan) — same output contract.
 - Skew: power-law users make the per-user windows skewed; AQE skew handling is
   on by default in session.py, and the window key (user_id, domain) has far
   higher cardinality than executor count, so stragglers are bounded.
@@ -22,6 +22,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -435,41 +436,36 @@ WHERE srn <= ROUND({percent} * scnt)
 
 # -- E3 at catalog scale: sample-and-reject negatives -------------------------
 
-REJECT_OVERSAMPLE = 3  # trials per wanted negative; re-round if underfilled
+REJECT_OVERSAMPLE = 3  # trials per wanted negative, per round leg
 
 
 def negatives_sample_reject(
     r: DataFrame, n: int = N_NEGATIVES, max_rounds: int = 4
 ) -> DataFrame:
-    """The 100 TB spelling of negative sampling (same output contract as
-    ``negatives_of``: n deterministic never-interacted items per (user,
-    domain) with a dense 1..n rank — different, equally-deterministic item
-    choice).
+    """The 100 TB spelling of negative sampling: the contract of
+    ``negatives_of`` (n deterministic never-interacted items per (user,
+    domain), dense 1..n rank) with a different item choice, and no row
+    ever holds the catalog. One lazy plan: building it launches no job.
 
-    ``negatives_of`` holds the whole per-domain catalog in one array row —
-    fine to ~1e6 items, impossible beyond. Here no row ever sees the
-    catalog: each user hashes out ``3n`` trial slots, each slot maps through
-    a dense item index (one uniform shuffle), seen items are anti-joined
-    away, and the first n survivors (by trial order) win. Skew-free by
-    construction — every join/shuffle key (trial index, user) is
-    hash-uniform. Heavy users that exhaust their trials re-round with a
-    shifted seed (driver loop, geometrically unlikely past round 1 when
-    catalog ≫ interactions-per-user).
+    Each user hashes ``max_rounds`` legs of ``3n`` trial slots (leg
+    ``rnd`` seeded ``SPLIT_SEED + 7·rnd``) through a dense item index,
+    seen items are anti-joined away, each item keeps its earliest key
+    ``rnd·1e9 + t``, and the first n by ``(key, item_id)`` win. Every
+    shuffle key is hash-uniform, so the plan is skew-free.
 
-    FILL GUARANTEE: hash trials alone cannot promise the contract's
-    ``min(n, |catalog| − |seen|)`` fill — a user whose unseen remainder
-    is a sliver of a huge catalog needs trials to hash-hit those exact
-    items. So after the bounded rounds, any still-underfilled (user,
-    domain) pairs take one EXACT top-up: their full candidate set via a
-    plain anti-join against the items frame (never a catalog array),
-    hash-ranked with a fresh seed shift, appended after every trial
-    pick. The top-up stage joins |underfilled users| × |domain catalog|
-    rows — underfilled users are geometrically rare, so this is the
-    exact path's cost confined to a vanishing fraction; when nobody is
-    underfilled (the common case, checked with one count on the
-    checkpointed picks) the stage is skipped entirely.
+    This equals the round loop the oracle spells out, where round k
+    samples only still-underfilled users against ratings ∪ earlier
+    picks. A round after round 0 matters only for a user whose earlier
+    candidates were ALL picked, so the loop's growing ``seen`` frame is
+    exactly that user's earlier-round candidates, and keeping each
+    item's earliest occurrence drops the same items. A user already full
+    ranks every later-round candidate past n.
+
+    FILL GUARANTEE: pairs with fewer than n distinct candidates (an
+    unseen sliver of a huge catalog) take one EXACT top-up: their full
+    anti-join candidate set, hash-ranked with seed
+    ``SPLIT_SEED + 7·max_rounds`` and keyed after every trial pick.
     """
-    spark = r.sparkSession
     # dense per-domain item index: idx in [0, n_items) — tiny, broadcastable
     items = (
         r.select("domain", "item_id")
@@ -487,128 +483,68 @@ def negatives_sample_reject(
         F.broadcast(n_items), "domain"
     )
     seen = r.select("user_id", "domain", "item_id")
+    keys = ["user_id", "domain", "item_id"]
 
-    out: DataFrame | None = None
-    have = users.select("user_id", "domain", F.lit(0).alias("n_have"))
-    for rnd in range(max_rounds):
-        need = have.filter(F.col("n_have") < n)
-        if rnd > 0 and need.isEmpty():
-            break
-        trials = (
-            users.join(need.select("user_id", "domain"), ["user_id", "domain"])
-            .select(
-                "user_id",
-                "domain",
-                "n_items",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(REJECT_OVERSAMPLE * n - 1))
-                ).alias("t"),
-            )
-            .withColumn(
-                "idx",
-                F.expr(
-                    phash_frag("user_id", "t", seed=SPLIT_SEED + 7 * rnd)
-                ).cast("bigint")
-                % F.col("n_items"),
-            )
+    slots = F.sequence(F.lit(0), F.lit(REJECT_OVERSAMPLE * n - 1))
+    trials = users.select("user_id", "domain", "n_items", F.explode(slots).alias("t"))
+    legs = [
+        trials.select(
+            "user_id",
+            "domain",
+            (
+                F.expr(phash_frag("user_id", "t", seed=SPLIT_SEED + 7 * rnd))
+                % F.col("n_items")
+            ).alias("idx"),
+            (F.col("t").cast("bigint") + rnd * 10**9).alias("t"),
         )
-        cand = (
-            trials.join(items, ["domain", "idx"])
-            .join(seen, ["user_id", "domain", "item_id"], "left_anti")
-            # a trial pair may hash to the same idx twice: keep first trial
-            .groupBy("user_id", "domain", "item_id")
-            .agg(F.min("t").alias("t"))
-        )
-        ranked = cand.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("user_id", "domain").orderBy("t", "item_id")
-            ),
-        ).filter(F.col("rk") <= n)
-        picked = ranked.select("user_id", "domain", "item_id", "t")
-        out = picked if out is None else (
-            # keep earlier rounds' picks; later rounds only top up
-            out.unionByName(
-                picked.join(
-                    out.select("user_id", "domain", "item_id"),
-                    ["user_id", "domain", "item_id"],
-                    "left_anti",
-                ).withColumn("t", F.col("t") + F.lit((rnd + 1) * 10**9))
-            )
-        )
-        # truncate lineage: without this, round k's plan embeds every prior
-        # round's full DAG and each `isEmpty`/final action recompiles and
-        # recomputes the whole stack (measured 169 s → ~8 s at sf0.01). The
-        # checkpointed frame is ≤ n rows per (user, domain) — tiny relative
-        # to the trials it replaces; on a cluster this is the standard
-        # iterative-algorithm pattern (same reason GraphX/ALS checkpoint).
-        out = out.localCheckpoint(eager=True)
-        if rnd + 1 < max_rounds:
-            # LEFT join from the user frame: a (user, domain) with ZERO
-            # picks so far has no row in the out aggregation, and a bare
-            # groupBy would silently drop it from every later round's
-            # trial set — exactly the users who most need the re-round
-            # (their unseen remainder is a sliver, so round 0 likely
-            # missed entirely)
-            have = (
-                users.select("user_id", "domain")
-                .join(
-                    out.groupBy("user_id", "domain").agg(
-                        F.count(F.lit(1)).alias("n_have")
-                    ),
-                    ["user_id", "domain"],
-                    "left",
-                )
-                .select(
-                    "user_id",
-                    "domain",
-                    F.coalesce("n_have", F.lit(0)).alias("n_have"),
-                )
-            )
-            seen = seen.unionByName(out.select("user_id", "domain", "item_id"))
-    assert out is not None
-    # exact top-up: contract-complete the rare pairs the hash trials missed
-    have = out.groupBy("user_id", "domain").agg(
-        F.count(F.lit(1)).alias("n_have")
+        for rnd in range(max_rounds)
+    ]
+    cand = (
+        reduce(DataFrame.unionByName, legs)
+        .join(items, ["domain", "idx"])
+        .join(seen, keys, "left_anti")
+        # earliest (round, trial) per item: the loop's growing seen frame
+        .groupBy(*keys)
+        .agg(F.min("t").alias("t"))
     )
+    # LEFT join from the user frame: a (user, domain) with ZERO
+    # candidates has no row in the count, and a bare groupBy would drop
+    # exactly the users who most need the top-up
     under = (
-        users.join(have, ["user_id", "domain"], "left")
+        users.join(
+            cand.groupBy("user_id", "domain").agg(F.count(F.lit(1)).alias("n_have")),
+            ["user_id", "domain"],
+            "left",
+        )
         .filter(F.coalesce("n_have", F.lit(0)) < n)
         .select("user_id", "domain")
     )
-    if not under.isEmpty():
-        topup = (
-            under.join(items.select("domain", "item_id"), "domain")
-            .join(seen, ["user_id", "domain", "item_id"], "left_anti")
-            .join(
-                out.select("user_id", "domain", "item_id"),
-                ["user_id", "domain", "item_id"],
-                "left_anti",
-            )
-            .withColumn(
-                "t",
-                F.lit((max_rounds + 1) * 10**9)
-                + F.row_number().over(
-                    Window.partitionBy("user_id", "domain").orderBy(
-                        F.expr(
-                            phash_frag(
-                                "user_id", "item_id",
-                                seed=SPLIT_SEED + 7 * max_rounds,
-                            )
-                        ).asc(),
-                        F.col("item_id").asc(),
-                    )
-                ),
-            )
-            # n candidates per user always suffice (existing picks only
-            # push top-ups out, never in) — trim before the union so a
-            # pathological wide-unseen user never ships their whole
-            # candidate set through the final ranking
-            .filter(F.col("t") <= F.lit((max_rounds + 1) * 10**9 + n))
-            .select("user_id", "domain", "item_id", "t")
+    top_off = (max_rounds + 1) * 10**9
+    topup = (
+        under.join(items.select("domain", "item_id"), "domain")
+        .join(seen, keys, "left_anti")
+        .join(cand.select(*keys), keys, "left_anti")
+        .withColumn(
+            "t",
+            F.lit(top_off).cast("bigint")
+            + F.row_number().over(
+                Window.partitionBy("user_id", "domain").orderBy(
+                    F.expr(
+                        phash_frag(
+                            "user_id", "item_id", seed=SPLIT_SEED + 7 * max_rounds
+                        )
+                    ).asc(),
+                    F.col("item_id").asc(),
+                )
+            ),
         )
-        out = out.unionByName(topup)
-    final = out.withColumn(
+        # n candidates per user always suffice (trial picks only push
+        # top-ups out, never in) — trim before the union so a wide-unseen
+        # user never ships their whole candidate set through the ranking
+        .filter(F.col("t") <= F.lit(top_off + n))
+        .select(*keys, "t")
+    )
+    final = cand.unionByName(topup).withColumn(
         "rank",
         F.row_number()
         .over(Window.partitionBy("user_id", "domain").orderBy("t", "item_id"))
@@ -627,19 +563,16 @@ def negatives_sample_reject_oracle(
     per round), so DuckDB can replay the EXACT item choice, upgrading
     the query from rows-only to value-hash-checked.
 
-    The unrolling exploits an output-equivalence: Spark only generates
-    trials for still-underfilled users (a cost optimization) and breaks
-    early when everyone is full, but a full user's later-round picks
-    carry strictly larger t-offsets than their first n, so the final
-    ``row_number ≤ n`` trims them — generating trials for EVERY user in
-    EVERY round yields the identical output set. Likewise the loop's
-    union anti-join is redundant given each round anti-joins the
-    seen-so-far frame (ratings ∪ picks through the previous round). The
-    exact top-up stage replays verbatim: users with < n picks after the
-    bounded rounds take their full anti-join candidate set, hash-ranked
-    with the seed shifted by 7·max_rounds, offset after every trial
-    round. AS MATERIALIZED on every multi-referenced CTE (DuckDB inlines
-    single-use CTEs — the k-core 2^rounds lesson)."""
+    It keeps the chained ``seen_k`` spelling on purpose: round k
+    anti-joins ratings ∪ picks through round k−1 and keeps its top n.
+    The kernel is the flat form of these rounds (all legs in one plan,
+    earliest trial per item), and this independent round-by-round
+    replay is what proves the two equal. The exact top-up: users with
+    < n picks after the bounded rounds take their full anti-join
+    candidate set, hash-ranked with the seed shifted by 7·max_rounds,
+    offset after every trial round. AS MATERIALIZED on every
+    multi-referenced CTE (DuckDB inlines single-use CTEs — the k-core
+    2^rounds lesson)."""
     tpw = REJECT_OVERSAMPLE * n
     rounds_sql = []
     prev_seen = "seen0"
@@ -752,9 +685,10 @@ def negatives_sample_reject_cached(
     sampler is deterministic for (events, n, max_rounds), and BOTH its
     registered face and the ``negatives_reject_invariants`` audit need
     it in the same bench/driver run — without the memo each pays the
-    full multi-round loop (~6.6 s of a 134 s bench). The cached frame is
-    the final ≤ n-per-(user, domain) picks, localCheckpoint'd so reuse
-    costs a block read, not a recompute."""
+    full sampler plan (the audit takes 5.4 s re-running it vs 1.4 s on
+    the memo, sf0.01 perfbench tables, warm local[4] session). The
+    cached frame is the final ≤ n-per-(user, domain) picks,
+    localCheckpoint'd so reuse costs a block read, not a recompute."""
     from ..memo import session_memo
     from ..sources.io import ratings
 
@@ -783,8 +717,8 @@ def negatives_reject_invariants(
     per (user, domain):
 
     - ``n_negs``    = min(99, |domain catalog| − |user's seen set|)
-      (exact fill — a GUARANTEE, not a hope: the hash-trial rounds top
-      up and any still-underfilled pair takes the sampler's exact
+      (exact fill — a GUARANTEE, not a hope: the hash-trial legs fill
+      most pairs and any still-underfilled pair takes the sampler's exact
       anti-join top-up stage, so the equality holds on every input,
       including a fully-exhausted (user, domain) which contributes an
       n_negs = 0 row on both sides);
@@ -799,7 +733,7 @@ def negatives_reject_invariants(
     violation counters are literal zeros only if the anti-join and
     catalog-membership checks actually hold. Pass ``negs`` to audit a
     precomputed (e.g. memo-cached) sample instead of re-running the
-    multi-round loop."""
+    sampler."""
     if negs is None:
         negs = negatives_sample_reject(r)
     catalog = r.select("domain", "item_id").distinct()

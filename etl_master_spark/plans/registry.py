@@ -53,18 +53,14 @@ register(
 )
 
 
-def _negatives_sample_reject(spark: SparkSession, sf: str) -> DataFrame:
-    return recsplit.negatives_sample_reject_cached(spark, sf)
-
-
 # scale path for E3 (no per-row catalog array). Round 6: upgraded from
 # rows-only to a FULL hash oracle — the sampler is a deterministic
 # function of the ratings frame, and the oracle replays the exact
-# hash-trial rounds + exact top-up (see negatives_sample_reject_oracle
-# for the output-equivalence that lets SQL skip the need-filter loop)
+# hash-trial rounds + exact top-up as a round-chained reference for
+# the kernel's flat plan
 register(
     "negatives_sample_reject",
-    _negatives_sample_reject,
+    recsplit.negatives_sample_reject_cached,
     recsplit.negatives_sample_reject_oracle(),
 )
 
@@ -72,8 +68,8 @@ register(
 def _negatives_reject_invariants(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.io import ratings
 
-    # share the memoized sampler subtree: the multi-round loop runs once
-    # per session even when the driver/bench runs both registered faces
+    # share the memoized sampler subtree: the sampler runs once per
+    # session even when the driver/bench runs both registered faces
     return recsplit.negatives_reject_invariants(
         ratings(spark, sf),
         negs=recsplit.negatives_sample_reject_cached(spark, sf),

@@ -98,6 +98,41 @@ def test_negative_invariants(rows):
             assert not (universe[key[1]] - seen[key])
 
 
+@settings(
+    max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+@given(ratings_tables, st.sampled_from([(5, 2), (8, 3)]))
+def test_sample_reject_matches_round_oracle(rows, params):
+    """The flat reject sampler equals the round-chained DuckDB oracle on
+    ANY ratings table. Small n and few rounds over a ≤ 21-item catalog
+    reach later rounds, the exact top-up and exhausted users."""
+    import duckdb
+
+    from etl_master_spark.operators.recsplit import (
+        negatives_sample_reject,
+        negatives_sample_reject_oracle,
+    )
+
+    n, max_rounds = params
+    got = sorted(
+        (x["user_id"], x["item_id"], x["domain"], x["rank"])
+        for x in negatives_sample_reject(
+            _df(rows), n=n, max_rounds=max_rounds
+        ).collect()
+    )
+    values = ", ".join(f"({u}, {i}, '{d}')" for u, i, d in rows)
+    ratings_sql = f"SELECT * FROM (VALUES {values}) AS v(user_id, item_id, domain)"
+    want = sorted(
+        tuple(x)
+        for x in duckdb.connect()
+        .execute(
+            negatives_sample_reject_oracle(ratings_sql, n=n, max_rounds=max_rounds)
+        )
+        .fetchall()
+    )
+    assert got == want
+
+
 def test_semantic_dedup_partitioning_invariance(spark):
     """The dominated-by-lower-id prune is a pure function of the
     (vec_id, embedding, cluster) SET: row order and partitioning must not

@@ -95,7 +95,9 @@ def test_determinism(spark, sf_dir):
 def test_sample_reject_negatives_contract(spark, sf_dir):
     """The scale-path sampler must satisfy the same contract as the
     array-based one: deterministic, seen-disjoint, dense 1..n ranks, and
-    exactly min(99, catalog−seen) rows per (user, domain)."""
+    exactly min(99, catalog−seen) rows per (user, domain). It is one
+    lazy plan, so building it launches no Spark job."""
+    import uuid
     from collections import defaultdict
 
     from etl_master_spark.operators.recsplit import negatives_sample_reject
@@ -108,7 +110,16 @@ def test_sample_reject_negatives_contract(spark, sf_dir):
         seen[(x["user_id"], x["domain"])].add(x["item_id"])
         universe[x["domain"]].add(x["item_id"])
 
-    got = negatives_sample_reject(r).collect()
+    sc = spark.sparkContext
+    group = f"reject_construct_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "negatives_sample_reject construction")
+    try:
+        lazy = negatives_sample_reject(r)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    got = lazy.collect()
     by_user = defaultdict(list)
     for x in got:
         by_user[(x["user_id"], x["domain"])].append((x["rank"], x["item_id"]))
