@@ -1022,10 +1022,19 @@ register(
 
 
 # -- model path (not SQL-expressible: rows-only by design) -------------------
-def _frozen_oracle(tag: str) -> str:
+# eval query -> the tag its scores freeze under (ranking.FROZEN_EVAL_DIR);
+# replays at another scale pass the tag to ranking.frozen_eval_oracle
+FROZEN_EVAL_TAGS = {
+    "als_eval_test": "als_test",
+    "cdae_eval_test": "cdae_test",
+    "gan_eval_test": "gan_test",
+}
+
+
+def _frozen_oracle(name: str) -> str:
     from ..operators.ranking import frozen_eval_oracle
 
-    return frozen_eval_oracle(tag)
+    return frozen_eval_oracle(FROZEN_EVAL_TAGS[name])
 
 
 def _als_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1035,7 +1044,7 @@ def _als_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # training outside SQL, eval half hash-checked via the frozen-scores oracle
-register("als_eval_test", _als_eval, _frozen_oracle("als_test"))
+register("als_eval_test", _als_eval, _frozen_oracle("als_eval_test"))
 
 
 def _cdae_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,7 +1056,7 @@ def _cdae_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the reference's own model family (denoising AE), distributed training
 # loop. Training is not SQL-expressible, but the eval half runs from
 # frozen score parquet that the oracle replays — hash-checked.
-register("cdae_eval_test", _cdae_eval, _frozen_oracle("cdae_test"))
+register("cdae_eval_test", _cdae_eval, _frozen_oracle("cdae_eval_test"))
 
 
 def _gan_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1059,7 +1068,7 @@ def _gan_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the reference's CORE: adversarially-coupled cross-domain training
 # (T8/T10/T12 — discriminators, GAN-weighted objective, G/D schedule);
 # eval half hash-checked via the frozen-scores oracle.
-register("gan_eval_test", _gan_eval, _frozen_oracle("gan_test"))
+register("gan_eval_test", _gan_eval, _frozen_oracle("gan_eval_test"))
 
 
 # -- registry ordering --------------------------------------------------------

@@ -1,37 +1,20 @@
-"""Every oracle-checked registry query must hash-match DuckDB at sf0.001 —
-the in-repo twin of the driver's CORRECTNESS gate (fast; the driver runs
-the same comparison at sf0.01)."""
+"""Every oracle-checked registry query must match DuckDB at sf0.001 under
+tools/strict_check.py's strict rule — the in-repo twin of the driver's
+CORRECTNESS gate (fast; the driver runs the same comparison at sf0.01)."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_master_spark.operators.ranking import frozen_eval_oracle
 from etl_master_spark.plans.registry import ORACLES, QUERIES
-from oracle_utils import duckdb_connect, compare
+from tools.strict_check import compare, duckdb_views, oracle_for
 
 SF = "/root/testdata/sf0.001"
-
-# The registry's static oracle strings for the frozen-scores model evals
-# name the DRIVER's gate scale (sf0.01); this suite runs at sf0.001, so
-# replay the same oracle against the artifacts the query freezes HERE.
-# (The Spark query runs first in compare(), so the freeze precedes the read.)
-_FROZEN = {
-    "als_eval_test": "als_test",
-    "cdae_eval_test": "cdae_test",
-    "gan_eval_test": "gan_test",
-}
-
-
-def _oracle_for(name: str) -> str:
-    if name in _FROZEN:
-        return frozen_eval_oracle(_FROZEN[name], sf_name="sf0.001")
-    return ORACLES[name]
 
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb_connect(SF)
+    c = duckdb_views(SF)
     yield c
     c.close()
 
@@ -50,7 +33,9 @@ _SLOW_PARITY = {"neardup_topk_recall_audit"}
     ],
 )
 def test_oracle_parity(spark, con, name):
-    problems = compare(QUERIES[name](spark, SF), con, _oracle_for(name))
+    # the query runs first: the frozen-scores evals' oracles read what it froze
+    got = QUERIES[name](spark, SF).toPandas()
+    problems = compare(got, con.execute(oracle_for(name, SF)).df())
     assert not problems, problems
 
 

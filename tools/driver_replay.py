@@ -1,51 +1,34 @@
-"""Replay the round driver's verification locally.
+"""Registry hygiene against the round driver's committed CORRECTNESS rows.
 
-Imports ``__spark_entry__.py`` by path (exactly like the driver), runs the
-``entry()`` smoke on sf0.001, then every ``queries()`` entry at sf0.01
-against its ``oracle_sql()`` twin in DuckDB with an order-insensitive
-compare. Exit code 0 iff everything passes.
-
-Usage: python tools/driver_replay.py [sf_dir]
-       python tools/driver_replay.py --names-without-driver-row
+Usage: python tools/driver_replay.py --names-without-driver-row
        python tools/driver_replay.py --stale
 
-The second form is pure registry hygiene (r4 verdict item 8): it reads
-every committed CORRECTNESS_r*.json, classifies each row green /
-rows-only / ERRORED (the driver harness crashed on it — a distinct
-failure class, not window overflow), and prints the registered queries
-that still lack a driver-GREEN row — the mechanical input for each
-round's _PRIORITY rotation (the driver samples only the first 50
-registry entries per round, so rounds must rotate the window until the
-union of rounds covers the whole registry). No Spark session is started
-in this mode.
+The first form reads every committed CORRECTNESS_r*.json, classifies
+each row green / rows-only / ERRORED (the driver harness crashed on it —
+a distinct failure class, not window overflow), and prints the
+registered queries that still lack a driver-GREEN row — the mechanical
+input for each round's _PRIORITY rotation (the driver samples only the
+first 50 registry entries per round, so rounds must rotate the window
+until the union of rounds covers the whole registry).
 
-The third form (r5 verdict item 2) cross-references git: a driver row
-is STALE-GREEN when the query's defining operator module was committed
-AFTER the artifact commit that recorded its latest green row — the row
-describes code that no longer exists. Prints stale queries oldest-green
-first (the rotation priority order), attributing each registry-defined
-wrapper to the operator module its source calls into.
+The second form cross-references git: a driver row is STALE-GREEN when
+the query's defining operator module was committed AFTER the artifact
+commit that recorded its latest green row — the row describes code that
+no longer exists. Prints stale queries oldest-green first (the rotation
+priority order), attributing each registry-defined wrapper to the
+operator module its source calls into.
+
+Neither form starts a Spark session. The oracle replay itself is
+tools/strict_check.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
-import math
 import sys
-import time
 from pathlib import Path
 
-import duckdb
-import pandas as pd
-
 REPO = Path(__file__).resolve().parent.parent
-SMOKE_SF = "/root/testdata/sf0.001"
-GATE_SF = (
-    sys.argv[1]
-    if len(sys.argv) > 1 and not sys.argv[1].startswith("--")
-    else "/root/testdata/sf0.01"
-)
 
 
 def _row_green(row: dict) -> bool:
@@ -249,109 +232,6 @@ def stale_green() -> int:
         if name not in greens and max(rounds) >= _newest_round(name, _rows_only):
             print(f"{name}\tERRORED r{rounds} — needs a processable face")
     return 0
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-def values_match(a: pd.Series, b: pd.Series) -> tuple[bool, str]:
-    if pd.api.types.is_float_dtype(a) or pd.api.types.is_float_dtype(b):
-        for i, (x, y) in enumerate(zip(a, b)):
-            if pd.isna(x) and pd.isna(y):
-                continue
-            if x == y or math.isclose(float(x), float(y), rel_tol=1e-9, abs_tol=1e-9):
-                continue
-            return False, f"row {i}: {x!r} vs {y!r}"
-        return True, ""
-    neq = ~(a.astype(str) == b.astype(str))
-    if neq.any():
-        i = int(a.index[neq][0])
-        return False, f"row {i}: {a.iloc[i]!r} vs {b.iloc[i]!r}"
-    return True, ""
-
-
-def main() -> int:
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", REPO / "__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    t0 = time.time()
-    rows = mod.entry(spark).collect()
-    print(f"entry() smoke: {len(rows)} rows in {time.time() - t0:.1f}s")
-    assert len(rows) >= 0
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{GATE_SF}/{t}.parquet')"
-        )
-
-    qs, oracles = mod.queries(), mod.oracle_sql()
-    failures = 0
-    for name, fn in qs.items():
-        t0 = time.time()
-        if name not in oracles:
-            try:
-                n = fn(spark, GATE_SF).count()
-                print(f"{name}: rows-only ({n} rows, {time.time() - t0:.1f}s)")
-            except Exception as e:
-                print(f"{name}: SPARK-ERROR {e!r}")
-                failures += 1
-            continue
-        try:
-            sp = normalize(fn(spark, GATE_SF).toPandas())
-        except Exception as e:
-            print(f"{name}: SPARK-ERROR {e!r}")
-            failures += 1
-            continue
-        try:
-            du = normalize(con.sql(oracles[name]).df())
-        except Exception as e:
-            print(f"{name}: ORACLE-ERROR {e!r}")
-            failures += 1
-            continue
-        if list(sp.columns) != list(du.columns):
-            print(f"{name}: FAIL columns spark={list(sp.columns)} duck={list(du.columns)}")
-            failures += 1
-            continue
-        if len(sp) != len(du):
-            print(f"{name}: FAIL rowcount spark={len(sp)} duck={len(du)}")
-            failures += 1
-            continue
-        bad = ""
-        for c in sp.columns:
-            ok, msg = values_match(sp[c], du[c])
-            if not ok:
-                bad = f"col {c} {msg}"
-                break
-        if bad:
-            print(f"{name}: FAIL {bad}")
-            failures += 1
-        else:
-            print(f"{name}: PASS ({len(sp)} rows, {time.time() - t0:.1f}s)")
-    spark.stop()
-    print(f"{'ALL PASS' if failures == 0 else f'{failures} FAILURES'}")
-    return 1 if failures else 0
 
 
 if __name__ == "__main__":
@@ -359,4 +239,4 @@ if __name__ == "__main__":
         sys.exit(names_without_driver_row())
     if "--stale" in sys.argv:
         sys.exit(stale_green())
-    sys.exit(main())
+    sys.exit("usage: python tools/driver_replay.py --names-without-driver-row | --stale")

@@ -21,7 +21,8 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from tools.scale_sweep import LEDGER, _force, _timed
+import bench
+from tools.scale_sweep import LEDGER, _timed
 from tools.scale_table import BASE_SF, build_replica
 
 
@@ -58,7 +59,7 @@ def main() -> None:
         }
     for name in args.names:
         try:
-            _force(QUERIES[name](spark, "/root/testdata/sf0.001"))  # warm plan
+            bench._force(QUERIES[name](spark, "/root/testdata/sf0.001"))  # warm plan
         except Exception as exc:  # noqa: BLE001
             rows[name] = {
                 "query": name, "status": "error", "stage": "warm",

@@ -12,7 +12,8 @@ realistic), then times
   - the engine's same three stages (splits_leave_two_out, negatives_sample,
     eval_metrics_test) on local[$SPARK_GRAFT_CPUS]
 
-on the SAME scaled input. Prints one JSON line per scale with both totals.
+on the SAME scaled input, each evaluated through bench.py's noop sink.
+Prints one JSON line per scale with both totals.
 
 Usage: python tools/scale_crossover.py [multiplier ...]   (default: 10 100)
 """
@@ -57,6 +58,7 @@ def make_scaled(mult: int) -> str:
 
 
 def time_engine(sf_dir: str) -> dict[str, float]:
+    import bench
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
@@ -64,7 +66,7 @@ def time_engine(sf_dir: str) -> dict[str, float]:
     stages = ["splits_leave_two_out", "negatives_sample", "eval_metrics_test"]
     # warm plan shapes on the small input first (codegen/broadcast init)
     for name in stages:
-        QUERIES[name](spark, BASE_SF).count()
+        bench._force(QUERIES[name](spark, BASE_SF))
     out: dict[str, float] = {}
     # two interleaved passes, keep the min (same protocol as bench.py):
     # pass 1 absorbs the shared `_shuffled_items` cache materialization and
@@ -72,7 +74,7 @@ def time_engine(sf_dir: str) -> dict[str, float]:
     for _ in range(2):
         for name in stages:
             t0 = time.time()
-            QUERIES[name](spark, sf_dir).count()
+            bench._force(QUERIES[name](spark, sf_dir))
             e = round(time.time() - t0, 3)
             if name not in out or e < out[name]:
                 out[name] = e

@@ -49,6 +49,7 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+import bench
 from tools.scale_table import BASE_SF, REPLICA_UNSUPPORTED, build_replica
 
 LEDGER = REPO / "SCALE_SWEEP.jsonl"
@@ -73,10 +74,6 @@ SKIP_REASONS = {
 }
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def _timed(spark, fn, sf: str, timeout: float):
     """(construction + noop evaluation) under a job-group watchdog.
 
@@ -96,7 +93,7 @@ def _timed(spark, fn, sf: str, timeout: float):
     watchdog.start()
     t0 = time.time()
     try:
-        _force(fn(spark, sf))
+        bench._force(fn(spark, sf))
         elapsed = round(time.time() - t0, 3)
         # cancelJobGroup only interrupts jobs ACTIVE when the timer fired;
         # if it fired during a driver-side gap of an iterative kernel the
@@ -159,7 +156,7 @@ def main() -> None:
         # warm the plan shape (analysis + codegen) at the tiny SF so the
         # measured runs time execution, not first-query JVM warmup
         try:
-            _force(QUERIES[name](spark, "/root/testdata/sf0.001"))
+            bench._force(QUERIES[name](spark, "/root/testdata/sf0.001"))
         except Exception as exc:  # noqa: BLE001
             record(
                 {"query": name, "status": "error",

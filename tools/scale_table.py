@@ -290,6 +290,7 @@ def main() -> None:
             "Measure these at real SF dirs instead."
         )
 
+    import bench
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
@@ -297,15 +298,9 @@ def main() -> None:
     sf_z = build_replica(mult, zipf=True) if zipf else None
     spark = get_spark(app_name="scale_table")
 
-    def force(df) -> None:
-        """Full evaluation via the noop sink — count() lets Catalyst prune
-        cardinality-preserving operators (a ×100 event_gaps "measured"
-        0.4 s under count while its real window evaluation cost 12.4 s)."""
-        df.write.format("noop").mode("overwrite").save()
-
     # warm plan shapes at the small scale
     for name in names:
-        force(QUERIES[name](spark, "/root/testdata/sf0.001"))
+        bench._force(QUERIES[name](spark, "/root/testdata/sf0.001"))
     spark.catalog.clearCache()
 
     scales = [("x1", BASE_SF), (f"x{mult}", sf_n)]
@@ -321,7 +316,7 @@ def main() -> None:
         for _ in range(2):  # min of 2 warm passes (bench.py protocol)
             for name in names:
                 t0 = time.time()
-                force(QUERIES[name](spark, sf))
+                bench._force(QUERIES[name](spark, sf))
                 e = round(time.time() - t0, 2)
                 if tag not in out[name] or e < out[name][tag]:
                     out[name][tag] = e

@@ -1,6 +1,8 @@
 """Hash-strict replay of the round driver's correctness gate.
 
-Differences from driver_replay.py (which keeps a float-tolerant compare):
+Imports ``__spark_entry__.py`` by path (exactly like the driver), runs the
+``entry()`` smoke once, then every ``queries()`` entry against its oracle
+in DuckDB:
 - the Spark session is built PLAIN — no engine config, a non-UTC session
   timezone — to mimic the driver's unknown session and flush out any
   timezone- or reader-config-dependent expression;
@@ -9,14 +11,10 @@ Differences from driver_replay.py (which keeps a float-tolerant compare):
   driver's value-hash catches) and values must be exactly equal;
 - every query runs in isolation; one failure never stops the sweep.
 
-Usage: python tools/strict_check.py [sf_dir] [name_substring ...]
+The same rule (``compare``), DuckDB views (``duckdb_views``) and oracle
+lookup (``oracle_for``) back tests/test_oracle_parity.py.
 
-Caveat for non-default sf_dir: the three frozen-scores model evals
-(als/cdae/gan_eval_test) freeze per-sf but their STATIC oracle strings
-must name one path, and they name the driver's sf0.01 gate (see
-ranking.frozen_eval_oracle) — at any other sf_dir those three report a
-size mismatch BY CONSTRUCTION, not a correctness failure (pytest
-replays other scales through frozen_eval_oracle(sf_name=...)).
+Usage: python tools/strict_check.py [sf_dir] [name_substring ...]
 """
 
 from __future__ import annotations
@@ -65,6 +63,47 @@ def strict_match(a: pd.Series, b: pd.Series) -> tuple[bool, str]:
     return True, ""
 
 
+def compare(got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
+    """Mismatches of ``got`` against ``want`` (empty == match): same row
+    count and columns, then ``strict_match`` on every column, both sides
+    in ``normalize`` order."""
+    g, w = normalize(got), normalize(want)
+    if len(g) != len(w):
+        return [f"rows {len(g)} vs {len(w)}"]
+    if list(g.columns) != list(w.columns):
+        return [f"cols {list(g.columns)} vs {list(w.columns)}"]
+    bad = []
+    for c in g.columns:
+        ok, msg = strict_match(g[c], w[c])
+        if not ok:
+            bad.append(f"{c}: {msg}")
+    return bad
+
+
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per ``TABLES`` parquet file."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def oracle_for(name: str, sf_dir: str) -> str | None:
+    """The oracle SQL for ``name`` at ``sf_dir`` (None: rows-only).
+
+    The registry's static strings for the frozen-scores model evals name
+    the driver's gate scale; at any scale this replays the artifacts the
+    query froze for ``sf_dir``, so the query must run first."""
+    from etl_master_spark.operators.ranking import frozen_eval_oracle
+    from etl_master_spark.plans.registry import FROZEN_EVAL_TAGS, ORACLES
+
+    if name in FROZEN_EVAL_TAGS:
+        return frozen_eval_oracle(FROZEN_EVAL_TAGS[name], sf_name=Path(sf_dir).name)
+    return ORACLES.get(name)
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf_dir = GATE_SF
@@ -91,37 +130,25 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    n_fail = 0
+    t0 = time.time()
+    try:
+        rows = mod.entry(spark).collect()
+        print(f"entry() smoke: {len(rows)} rows [{time.time()-t0:.1f}s]")
+    except Exception as e:  # noqa: BLE001
+        print(f"FAIL entry(): spark error: {str(e).splitlines()[0][:200]}")
+        n_fail += 1
 
+    con = duckdb_views(sf_dir)
     queries = mod.queries()
-    oracles = mod.oracle_sql()
+    oracles = mod.oracle_sql()  # the driver's answer to "has an oracle?"
     if name_filters:
         queries = {
             k: v for k, v in queries.items()
             if any(f in k for f in name_filters)
         }
 
-    # the frozen-scores model evals freeze per-sf but their STATIC oracle
-    # strings name the driver's sf0.01 gate path (see module docstring) —
-    # at any other sf_dir a compare would be frozen-vs-other-freeze noise
-    frozen_gate_only = {"als_eval_test", "cdae_eval_test", "gan_eval_test"}
-    # resolved-path compare: a basename match alone would treat any
-    # directory named sf0.01 as the driver gate (r4 ADVICE)
-    at_gate = Path(sf_dir).resolve() == Path(GATE_SF).resolve()
-
-    n_fail = 0
     for name, fn in queries.items():
-        if name in frozen_gate_only and not at_gate:
-            print(
-                f"skip {name}: frozen-scores oracle is gate-scale-only "
-                f"(replaying at {Path(sf_dir).name}; pytest covers other "
-                "scales via frozen_eval_oracle(sf_name=...))"
-            )
-            continue
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -129,7 +156,7 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {str(e).splitlines()[0][:200]}")
             n_fail += 1
             continue
-        sql = oracles.get(name)
+        sql = oracle_for(name, sf_dir) if name in oracles else None
         if sql is None:
             print(f"ok?  {name}: rows-only ({len(sdf)} rows, no oracle) "
                   f"[{time.time()-t0:.1f}s]")
@@ -140,25 +167,12 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {str(e).splitlines()[0][:200]}")
             n_fail += 1
             continue
-        s, o = normalize(sdf), normalize(odf)
-        if len(s) != len(o):
-            print(f"FAIL {name}: rows {len(s)} vs {len(o)}")
-            n_fail += 1
-            continue
-        if list(s.columns) != list(o.columns):
-            print(f"FAIL {name}: cols {list(s.columns)} vs {list(o.columns)}")
-            n_fail += 1
-            continue
-        bad = []
-        for c in s.columns:
-            ok, msg = strict_match(s[c], o[c])
-            if not ok:
-                bad.append(f"{c}: {msg}")
+        bad = compare(sdf, odf)
         if bad:
             print(f"FAIL {name}: " + "; ".join(bad))
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(s)} rows) [{time.time()-t0:.1f}s]")
+            print(f"PASS {name} ({len(sdf)} rows) [{time.time()-t0:.1f}s]")
 
     print(f"\n{n_fail} failures / {len(queries)} checked")
     spark.stop()
