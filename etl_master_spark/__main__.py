@@ -109,24 +109,22 @@ def main(argv: list[str] | None = None) -> int:
     elif args.model == "als":
         from etl_master_spark.model.als import als_eval
 
-        frames = {m: als_eval(spark, args.data_dir, m, rank=args.emb_size,
-                              ks=args.topk)
-                  for m in ("vali", "test")}
+        frames = als_eval(spark, args.data_dir, rank=args.emb_size,
+                          ks=args.topk)
     elif args.model == "gan":
         from etl_master_spark.model.gan import gan_eval_with
 
         frames = gan_eval_with(
-            spark, args.data_dir, modes=("vali", "test"), emb=args.emb_size,
-            passes=args.epochs, lr=args.lr, seed=args.seed, ks=args.topk,
+            spark, args.data_dir, emb=args.emb_size, passes=args.epochs,
+            lr=args.lr, seed=args.seed, ks=args.topk,
             optimizer=args.optimizer, prior=args.prior,
         )
     else:
         from etl_master_spark.model.cdae import cdae_eval
 
-        frames = {m: cdae_eval(spark, args.data_dir, m, emb=args.emb_size,
-                               epochs=args.epochs, lr=args.lr, seed=args.seed,
-                               ks=args.topk)
-                  for m in ("vali", "test")}
+        frames = cdae_eval(spark, args.data_dir, emb=args.emb_size,
+                           epochs=args.epochs, lr=args.lr, seed=args.seed,
+                           ks=args.topk)
     for mode, df in frames.items():
         for r in df.collect():
             log_line({"stage": "evaluate", "mode": mode, **r.asDict()})

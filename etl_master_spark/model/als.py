@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData, split_data
+from .scoring import dot_scores
 
 EMB_SIZE = 16  # reference uses 200 (main_my.py:35); small here for test speed
 SEED = 72  # reference --seed default (main_my.py:32)
@@ -83,17 +84,21 @@ def als_scores(
 def als_eval(
     spark: SparkSession,
     sf_dir: str,
-    mode: str = "test",
+    modes: tuple[str, ...] = ("vali", "test"),
     rank: int = EMB_SIZE,
     ks: list[int] | None = None,
-) -> DataFrame:
+) -> dict[str, DataFrame]:
     """Reference protocol end-to-end with the ALS model: rank 99 negatives +
-    held-out positive per user per domain, HR/NDCG/MRR@{5,10}. Rows-only
-    check (model training is not SQL-expressible — SURVEY.md §7.4).
-    ``rank`` (--emb_size) and ``ks`` (--topk) thread from the CLI."""
+    held-out positive per user per domain, HR/NDCG/MRR@{5,10}, for every
+    mode in ``modes`` off ONE fit per domain. Rows-only check (model
+    training is not SQL-expressible — SURVEY.md §7.4). ``rank``
+    (--emb_size) and ``ks`` (--topk) thread from the CLI."""
     data = split_data(spark, sf_dir)
     scores = _scores(data, "x", rank).unionByName(_scores(data, "y", rank))
-    return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
+    return {
+        mode: eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
+        for mode in modes
+    }
 
 
 def als_eval_frozen(
@@ -150,40 +155,22 @@ def save_checkpoint(
 def _checkpoint_scores(
     spark: SparkSession, data: SplitData, domain: str, ckpt_dir: str
 ) -> DataFrame:
-    uf = spark.read.parquet(f"{ckpt_dir}/{domain}/user_factors").select(
-        F.col("id").cast("bigint").alias("user_id"),
-        F.col("features").cast("array<float>").alias("uf"),
-    )
-    itf = spark.read.parquet(f"{ckpt_dir}/{domain}/item_factors").select(
-        F.col("id").cast("bigint").alias("item_id"),
-        F.col("features").cast("array<float>").alias("if_"),
-    )
-    # float32 accumulate, like ALS transform's BLAS sdot — then one widen
-    dot = F.aggregate(
-        F.zip_with("uf", "if_", lambda a, b: a * b),
-        F.lit(0.0).cast("float"),
-        lambda acc, v: acc + v,
-    ).cast("double")
-    return (
-        data.candidates(domain)
-        .join(uf, "user_id")
-        .join(F.broadcast(itf), "item_id")
-        .select(
-            "user_id",
-            "item_id",
-            F.lit(domain).alias("domain"),
-            dot.alias("score"),
+    uf, itf = (
+        spark.read.parquet(f"{ckpt_dir}/{domain}/{side}_factors").select(
+            F.col("id").cast("bigint"), F.col("features").cast("array<float>")
         )
+        for side in ("user", "item")
     )
+    return dot_scores(data, domain, uf, itf)
 
 
 def scores_from_checkpoint(
     spark: SparkSession, sf_dir: str, domain: str, ckpt_dir: str
 ) -> DataFrame:
-    """Score candidate pairs from RELOADED factors — a join-first
-    ``zip_with`` dot product over the candidate pairs, no model object and
-    no user×item materialization. The reloaded path must reproduce the
-    live model's ranking (pinned in tests/test_model.py)."""
+    """Score candidate pairs from RELOADED factors — ``scoring.dot_scores``
+    over the candidate pairs, no model object and no user×item
+    materialization. The reloaded path must reproduce the live model's
+    ranking (pinned in tests/test_model.py)."""
     return _checkpoint_scores(spark, split_data(spark, sf_dir), domain, ckpt_dir)
 
 

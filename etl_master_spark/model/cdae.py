@@ -20,10 +20,10 @@ Spark-first translation of the training loop:
   regularization effect, replayable on any partitioning, no RNG state on
   executors.
 
-Scoring is join-first like every other scorer here: z_u · W2[:, i] for
-CANDIDATE pairs only, expressed as a DataFrame join between the user-latent
-table and the item-decoder table with a ``zip_with`` dot product — the full
-logits matrix (reference ``my_utils.py:121-129``) is never formed.
+Scoring is ``scoring.dot_scores``, the one candidate scorer of every model
+here: z_u · W2[:, i] for CANDIDATE pairs only, the user-latent table joined
+with the item-decoder table (``scoring.decoder_frame``) — the full logits
+matrix (reference ``my_utils.py:121-129``) is never formed.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData, split_data
 from .reduce import tree_collect
+from .scoring import decoder_frame, dot_scores, load_params, save_params
 
 EMB_SIZE = 16
 EPOCHS = 15
@@ -226,50 +227,33 @@ def cdae_scores_with(
     """Score candidate pairs from an in-hand model dict (live-trained or
     checkpoint-reloaded) — the shared scoring half of ``cdae_scores``.
     The candidates come from the dict's own ``data``."""
-    z_df = _latent(spark, model, "z")
-    w2 = model["W2"]
-    dec_rows = [
-        (int(r["item_id"]), int(r["idx"])) for r in model["items"].collect()
-    ]
-    dec = spark.createDataFrame(
-        [(item, w2[:, idx].tolist()) for item, idx in dec_rows],
-        "item_id long, w_out array<double>",
-    )
-    dot = F.aggregate(
-        F.zip_with("z", "w_out", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        model["data"].candidates(domain)
-        .join(z_df, "user_id")
-        .join(F.broadcast(dec), "item_id")
-        .select(
-            "user_id",
-            "item_id",
-            F.lit(domain).alias("domain"),
-            dot.alias("score"),
-        )
+    return dot_scores(
+        model["data"], domain, _latent(spark, model, "z"),
+        decoder_frame(spark, model["items"], model["W2"]),
     )
 
 
 def cdae_eval(
     spark: SparkSession,
     sf_dir: str,
-    mode: str = "test",
+    modes: tuple[str, ...] = ("vali", "test"),
     emb: int = EMB_SIZE,
     epochs: int = EPOCHS,
     lr: float = LR,
     seed: int = SEED,
     ks: list[int] | None = None,
-) -> DataFrame:
+) -> dict[str, DataFrame]:
     """Reference protocol end-to-end with the CDAE scorer (rows-only —
-    training is not SQL-expressible). Hyperparameters thread through to
-    the trainer — the CLI's --epochs/--lr/--emb_size/--seed land here."""
+    training is not SQL-expressible), for every mode in ``modes`` off ONE
+    training per domain. Hyperparameters thread through to the trainer —
+    the CLI's --epochs/--lr/--emb_size/--seed land here."""
     scores, data = _scores_xy(
         spark, sf_dir, lambda _, f: _train(spark, f, emb, epochs, lr, seed)
     )
-    return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
+    return {
+        mode: eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
+        for mode in modes
+    }
 
 
 def _scores_xy(
@@ -289,21 +273,13 @@ def _scores_xy(
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
 # model, main_my.py:322-346,350-375) ----------------------------------------
 
-_CKPT_SCHEMA = "name string, shape array<int>, data array<double>"
-
-
 def save_cdae_checkpoint(
     spark: SparkSession, model: dict, domain: str, ckpt_dir: str
 ) -> None:
-    """Persist the trained weight matrices as (name, shape, flat data)
-    parquet rows — engine-agnostic, schema'd, no pickles."""
-    rows = [
-        (k, list(model[k].shape), model[k].ravel().tolist())
-        for k in ("W1", "W2")
-    ]
-    spark.createDataFrame(rows, _CKPT_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{ckpt_dir}/cdae_{domain}")
+    """Persist the trained weight matrices (``scoring.save_params``)."""
+    save_params(
+        spark, {k: model[k] for k in ("W1", "W2")}, f"{ckpt_dir}/cdae_{domain}"
+    )
 
 
 def load_cdae_checkpoint(
@@ -313,16 +289,7 @@ def load_cdae_checkpoint(
     index and per-user frames re-derived from the tables."""
     return {
         **_train_frame(split_data(spark, sf_dir), domain),
-        **_load_weights(spark, domain, ckpt_dir),
-    }
-
-
-def _load_weights(spark: SparkSession, domain: str, ckpt_dir: str) -> dict:
-    return {
-        r["name"]: np.array(r["data"], dtype=np.float64).reshape(
-            tuple(r["shape"])
-        )
-        for r in spark.read.parquet(f"{ckpt_dir}/cdae_{domain}").collect()
+        **load_params(spark, f"{ckpt_dir}/cdae_{domain}"),
     }
 
 
@@ -337,7 +304,8 @@ def cdae_reeval_from_checkpoint(
     re-run the eval protocol — must reproduce the live metrics exactly
     (pinned in tests/test_model.py)."""
     scores, data = _scores_xy(
-        spark, sf_dir, lambda d, f: {**f, **_load_weights(spark, d, ckpt_dir)}
+        spark, sf_dir,
+        lambda d, f: {**f, **load_params(spark, f"{ckpt_dir}/cdae_{d}")},
     )
     return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
 

@@ -49,6 +49,7 @@ from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData, split_data
 from .cdae import DROPOUT_DEN, DROPOUT_NUM, _train_frame
 from .reduce import tree_collect
+from .scoring import decoder_frame, dot_scores, load_params, save_params
 
 EMB = 16
 PASSES = 9  # pass schedule G,G,D ×3 — d_epoch=2 (main_my.py:47,164)
@@ -496,41 +497,19 @@ def train_gan(
 # -- scoring / evaluation -----------------------------------------------------
 
 def gan_scores(spark: SparkSession, sf_dir: str, model: dict | None = None) -> DataFrame:
-    """(user_id, item_id, domain, score) for candidate pairs only — the
-    join-first scoring shape shared with cdae_scores, but from ONE coupled
-    training run covering both domains."""
+    """(user_id, item_id, domain, score) for candidate pairs only —
+    ``scoring.dot_scores`` per domain like cdae_scores, but from ONE
+    coupled training run covering both domains."""
     model = model or train_gan(spark, sf_dir)
     z_df = _latent(spark, model)
-    out = []
-    for domain, items_key, w2_key, z_col in (
-        ("x", "items_x", "w2x", "zx"),
-        ("y", "items_y", "w2y", "zy"),
-    ):
-        w2 = model["g"][w2_key]
-        dec = spark.createDataFrame(
-            [
-                (int(r["item_id"]), w2[:, int(r["idx"])].tolist())
-                for r in model[items_key].collect()
-            ],
-            "item_id long, w_out array<double>",
+    x, y = (
+        dot_scores(
+            model["data"], d, z_df.select("user_id", f"z{d}"),
+            decoder_frame(spark, model[f"items_{d}"], model["g"][f"w2{d}"]),
         )
-        dot = F.aggregate(
-            F.zip_with(z_col, "w_out", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out.append(
-            model["data"].candidates(domain)
-            .join(z_df.select("user_id", z_col), "user_id")
-            .join(F.broadcast(dec), "item_id")
-            .select(
-                "user_id",
-                "item_id",
-                F.lit(domain).alias("domain"),
-                dot.alias("score"),
-            )
-        )
-    return out[0].unionByName(out[1])
+        for d in ("x", "y")
+    )
+    return x.unionByName(y)
 
 
 def _latent(spark: SparkSession, model: dict) -> DataFrame:
@@ -559,21 +538,14 @@ def _latent(spark: SparkSession, model: dict) -> DataFrame:
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
 # model, main_my.py:322-346,350-375) ----------------------------------------
 
-_CKPT_SCHEMA = "name string, shape array<int>, data array<double>"
-
-
 def save_gan_checkpoint(spark: SparkSession, model: dict, ckpt_dir: str) -> None:
     """Persist every trained numpy parameter (generator + discriminators)
-    as one parquet of (name, shape, flat data) rows — engine-agnostic,
-    schema'd, no pickles."""
-    rows = [
-        (f"{side}.{k}", list(v.shape), v.ravel().tolist())
-        for side, params in (("g", model["g"]), ("d", model["d"]))
-        for k, v in params.items()
-    ]
-    spark.createDataFrame(rows, _CKPT_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{ckpt_dir}/gan_params")
+    as one ``scoring.save_params`` parquet, names prefixed ``g.``/``d.``."""
+    save_params(
+        spark,
+        {f"{side}.{k}": v for side in ("g", "d") for k, v in model[side].items()},
+        f"{ckpt_dir}/gan_params",
+    )
 
 
 def load_gan_checkpoint(
@@ -582,12 +554,11 @@ def load_gan_checkpoint(
     """Rebuild a scoring-ready model dict from a saved checkpoint: numpy
     params from parquet, item-index frames re-derived from the tables
     (they are data, not model state)."""
-    g: dict = {}
-    d: dict = {}
-    for r in spark.read.parquet(f"{ckpt_dir}/gan_params").collect():
-        side, key = r["name"].split(".", 1)
-        arr = np.array(r["data"], dtype=np.float64).reshape(tuple(r["shape"]))
-        (g if side == "g" else d)[key] = arr
+    params = load_params(spark, f"{ckpt_dir}/gan_params")
+    g, d = (
+        {k.split(".", 1)[1]: v for k, v in params.items() if k[0] == side}
+        for side in ("g", "d")
+    )
     return {**_joined_frame(split_data(spark, sf_dir)), "g": g, "d": d}
 
 

@@ -17,8 +17,9 @@ macro-averaged over users per domain (``my_utils.py:145-150``).
 
 The scoring model here is the engine's deterministic baseline: train-split
 item popularity plus a portable-hash jitter (tie-spreader). Model-produced
-scores (ALS / mapInPandas CDAE, see etl_master_spark.model) plug into the
-same pipeline via ``eval_from_scores``.
+scores (ALS / CDAE / GAN, see etl_master_spark.model) plug into the same
+pipeline via ``eval_from_scores``, which assembles their candidates and runs
+the same ``hit_ranks`` → ``metrics_from_hit_ranks`` pair as the flagship.
 
 Scale: one shuffle to build popularity (map-side combined), one broadcast
 join (popularity dim ≪ interactions), one window over (user, domain) whose
@@ -26,6 +27,8 @@ cardinality ≫ cores. No full-catalog scoring, no driver collect.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -186,9 +189,10 @@ def eval_metrics(
 
 
 def hit_ranks(scored: DataFrame) -> DataFrame:
-    """Per-(user, domain) rank of the positive candidate — the reusable
-    middle of ``eval_metrics`` (the streaming twin upserts exactly this
-    frame as its per-user state)."""
+    """Per-(user, domain) rank of the positive candidate — the one rank
+    step of every eval: the batch flagship, the model layer's
+    ``eval_from_scores`` and the streaming twin (which upserts exactly
+    this frame as its per-user state)."""
     w_grp = Window.partitionBy("user_id", "domain")
     pos_score = F.max(F.when(F.col("is_pos") == 1, F.col("score"))).over(w_grp)
     pos_item = F.max(F.when(F.col("is_pos") == 1, F.col("item_id"))).over(w_grp)
@@ -204,7 +208,7 @@ def hit_ranks(scored: DataFrame) -> DataFrame:
 
 def metrics_from_hit_ranks(per_user: DataFrame, ks: list[int]) -> DataFrame:
     """HR/NDCG/MRR@K macro-averages from a (user_id, domain, hit_rank)
-    frame — shared by the batch flagship and the streaming twin."""
+    frame — the one metric step of every eval (batch, model, streaming)."""
     spark = per_user.sparkSession
     with_k = per_user.join(
         F.broadcast(
@@ -240,15 +244,15 @@ def metrics_from_hit_ranks(per_user: DataFrame, ks: list[int]) -> DataFrame:
     )
 
 
-def eval_metrics_oracle(mode: str = "test", ks: list[int] | None = None) -> str:
-    ks = ks or DEFAULT_KS
+def _metrics_sql(ks: list[int]) -> str:
+    """The rank→HR/NDCG/MRR@K tail of every eval oracle, over a ``scored``
+    CTE (user_id, item_id, domain, is_pos, score): a true ``ROW_NUMBER``
+    ranking and ``MIN(rank)`` of the positive — a reference independent of
+    the Spark side's count-ahead ``hit_ranks``."""
     ks_sql = " UNION ALL ".join(f"SELECT {k} AS k" for k in ks)
     return f"""
-WITH ratings AS ({RATINGS_SQL}),
-{_RANKED_CTE},
-{_cand_sql(mode)},
 rr AS (
-    SELECT user_id, item_id, domain, is_pos, score,
+    SELECT user_id, domain, is_pos,
            ROW_NUMBER() OVER (
                PARTITION BY user_id, domain
                ORDER BY score DESC, item_id ASC
@@ -273,7 +277,7 @@ per_user_k AS (
     FROM per_user u CROSS JOIN ks
 )
 SELECT domain, k,
-       COUNT(*) AS n_users,
+       CAST(COUNT(*) AS BIGINT) AS n_users,
        ROUND(AVG(hr), 6) AS hr,
        ROUND(AVG(ndcg), 6) AS ndcg,
        ROUND(AVG(mrr), 6) AS mrr
@@ -283,15 +287,22 @@ ORDER BY domain, k
 """
 
 
+def eval_metrics_oracle(mode: str = "test", ks: list[int] | None = None) -> str:
+    return f"""
+WITH ratings AS ({RATINGS_SQL}),
+{_RANKED_CTE},
+{_cand_sql(mode)},
+{_metrics_sql(ks or DEFAULT_KS)}"""
+
+
 def eval_from_scores(
     scores: DataFrame, holdout: DataFrame, negs: DataFrame, ks: list[int] | None = None
 ) -> DataFrame:
     """R6 generalized: evaluate ANY model's scores DataFrame
     (user_id, item_id, domain, score) against a holdout + negatives pair.
-    Used by the model path (etl_master_spark.model); same plan shape as
-    ``eval_metrics``."""
-    ks = ks or DEFAULT_KS
-    spark = scores.sparkSession
+    Used by the model path (etl_master_spark.model): the candidates
+    (negatives + the positive) take their model score, 0.0 where the model
+    scored none, then run ``eval_metrics``' own rank→metric pair."""
     pos = holdout.select("user_id", "item_id", "domain", F.lit(1).alias("is_pos"))
     cand = negs.select(
         "user_id", "item_id", "domain", F.lit(0).alias("is_pos")
@@ -299,42 +310,7 @@ def eval_from_scores(
     scored = cand.join(scores, ["user_id", "item_id", "domain"], "left").fillna(
         {"score": 0.0}
     )
-    w = Window.partitionBy("user_id", "domain").orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    rc = scored.withColumn("rank", F.row_number().over(w))
-    per_user = rc.groupBy("user_id", "domain").agg(
-        F.min(F.when(F.col("is_pos") == 1, F.col("rank"))).alias("hit_rank")
-    )
-    with_k = per_user.join(
-        F.broadcast(spark.createDataFrame([(k,) for k in ks], "k int")), how="cross"
-    )
-    hit = F.col("hit_rank") <= F.col("k")
-    return (
-        with_k.select(
-            "domain",
-            "k",
-            F.when(hit, F.lit(1.0)).otherwise(F.lit(0.0)).alias("hr"),
-            F.when(
-                hit,
-                F.log(F.lit(2.0))
-                / F.log(F.col("hit_rank").cast("double") + F.lit(1.0)),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("ndcg"),
-            F.when(hit, F.lit(1.0) / F.col("hit_rank").cast("double"))
-            .otherwise(F.lit(0.0))
-            .alias("mrr"),
-        )
-        .groupBy("domain", "k")
-        .agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.round(F.avg("hr"), 6).alias("hr"),
-            F.round(F.avg("ndcg"), 6).alias("ndcg"),
-            F.round(F.avg("mrr"), 6).alias("mrr"),
-        )
-        .orderBy("domain", "k")
-    )
+    return metrics_from_hit_ranks(hit_ranks(scored), ks or DEFAULT_KS)
 
 
 # -- frozen-scores eval: makes model evals oracle-checkable ------------------
@@ -345,7 +321,9 @@ def eval_from_scores(
 # a DuckDB oracle can replay the eval half on byte-identical inputs — the
 # driver's hash check then covers everything downstream of training.
 
-FROZEN_EVAL_DIR = "/root/repo/.artifacts/frozen_eval"
+FROZEN_EVAL_DIR = str(
+    Path(__file__).resolve().parents[2] / ".artifacts" / "frozen_eval"
+)
 GATE_SF_NAME = "sf0.01"  # the round driver's correctness gate scale
 
 
@@ -418,24 +396,11 @@ def freeze_and_eval(
     )
 
 
-def frozen_eval_oracle(
-    tag: str, ks: list[int] | None = None, sf_name: str = GATE_SF_NAME
-) -> str:
-    """DuckDB replay of ``eval_from_scores`` over the frozen parquet —
-    by default the driver's gate scale (the registry's static
-    ``oracle_sql()`` string must name ONE path, and the driver gates at
-    sf0.01); tests replaying another scale pass its ``sf_name`` so the
-    oracle reads the artifacts the query just froze. Same candidate
-    assembly (negatives + one positive), rank (score DESC, item_id ASC),
-    and metric formulas as ``eval_metrics_oracle`` — rounded to 6 dp in
-    both engines."""
-    ks = ks or DEFAULT_KS
-    base = f"{FROZEN_EVAL_DIR}/{tag}/{sf_name}"
-    ks_sql = " UNION ALL ".join(f"SELECT {k} AS k" for k in ks)
+def _scored_sql(ks: list[int]) -> str:
+    """``eval_from_scores`` in SQL over relations ``sc`` (scores),
+    ``hold`` and ``negs``: the same candidate assembly (negatives + one
+    positive, 0.0 for an unscored candidate), then ``_metrics_sql``."""
     return f"""
-WITH sc AS (SELECT * FROM read_parquet('{base}/scores/*.parquet')),
-hold AS (SELECT * FROM read_parquet('{base}/holdout/*.parquet')),
-negs AS (SELECT * FROM read_parquet('{base}/negatives/*.parquet')),
 cand AS (
     SELECT user_id, item_id, domain, 0 AS is_pos FROM negs
     UNION ALL
@@ -448,37 +413,20 @@ scored AS (
       ON c.user_id = s.user_id AND c.item_id = s.item_id
      AND c.domain = s.domain
 ),
-rr AS (
-    SELECT user_id, domain, is_pos,
-           ROW_NUMBER() OVER (
-               PARTITION BY user_id, domain
-               ORDER BY score DESC, item_id ASC
-           ) AS rank
-    FROM scored
-),
-per_user AS (
-    SELECT user_id, domain,
-           MIN(CASE WHEN is_pos = 1 THEN rank END) AS hit_rank
-    FROM rr GROUP BY user_id, domain
-),
-ks AS ({ks_sql}),
-per_user_k AS (
-    SELECT u.user_id, u.domain, ks.k,
-           CASE WHEN u.hit_rank <= ks.k THEN 1.0 ELSE 0.0 END AS hr,
-           CASE WHEN u.hit_rank <= ks.k
-                THEN LN(2.0) / LN(CAST(u.hit_rank AS DOUBLE) + 1.0)
-                ELSE 0.0 END AS ndcg,
-           CASE WHEN u.hit_rank <= ks.k
-                THEN 1.0 / CAST(u.hit_rank AS DOUBLE)
-                ELSE 0.0 END AS mrr
-    FROM per_user u CROSS JOIN ks
-)
-SELECT domain, k,
-       CAST(COUNT(*) AS BIGINT) AS n_users,
-       ROUND(AVG(hr), 6) AS hr,
-       ROUND(AVG(ndcg), 6) AS ndcg,
-       ROUND(AVG(mrr), 6) AS mrr
-FROM per_user_k
-GROUP BY domain, k
-ORDER BY domain, k
-"""
+{_metrics_sql(ks)}"""
+
+
+def frozen_eval_oracle(
+    tag: str, ks: list[int] | None = None, sf_name: str = GATE_SF_NAME
+) -> str:
+    """DuckDB replay of ``eval_from_scores`` over the frozen parquet —
+    by default the driver's gate scale (the registry's static
+    ``oracle_sql()`` string must name ONE path, and the driver gates at
+    sf0.01); tests replaying another scale pass its ``sf_name`` so the
+    oracle reads the artifacts the query just froze."""
+    base = f"{FROZEN_EVAL_DIR}/{tag}/{sf_name}"
+    return f"""
+WITH sc AS (SELECT * FROM read_parquet('{base}/scores/*.parquet')),
+hold AS (SELECT * FROM read_parquet('{base}/holdout/*.parquet')),
+negs AS (SELECT * FROM read_parquet('{base}/negatives/*.parquet')),
+{_scored_sql(ks or DEFAULT_KS)}"""

@@ -62,7 +62,7 @@ def test_als_eval_protocol_shape(spark, sf_dir, monkeypatch):
     from etl_master_spark.model.als import als_eval
 
     calls = _count_ratings(monkeypatch)
-    rows = als_eval(spark, sf_dir, "test").collect()
+    rows = als_eval(spark, sf_dir, modes=("test",))["test"].collect()
     assert len(calls) == 1  # one split + negatives derivation per entry point
     cells = {(r["domain"], r["k"]) for r in rows}
     assert cells == {("x", 5), ("x", 10), ("y", 5), ("y", 10)}
@@ -145,7 +145,7 @@ def test_cdae_trains_and_evaluates(spark, sf_dir, monkeypatch):
     losses = model["losses"]
     assert losses[-1] < 0.8 * losses[0], losses
     calls = _count_ratings(monkeypatch)
-    rows = cdae_eval(spark, sf_dir, "test").collect()
+    rows = cdae_eval(spark, sf_dir, modes=("test",))["test"].collect()
     assert len(calls) == 1  # both domains train and score off one split
     assert {r["domain"] for r in rows} == {"x", "y"}
     for r in rows:
@@ -291,6 +291,36 @@ def test_gan_eval_derives_split_once(spark, sf_dir, monkeypatch):
         assert 0.0 <= r["hr"] <= 1.0
 
 
+def test_als_cdae_eval_train_once_for_both_modes(spark, sf_dir, monkeypatch):
+    """``als_eval`` and ``cdae_eval`` fit each domain ONCE and evaluate
+    every requested mode off that fit — the CLI's vali+test run no longer
+    trains each model twice."""
+    from etl_master_spark.model import als, cdae
+
+    calls: list[str] = []
+    real_fit, real_train = als._fit, cdae._train
+
+    def counting_fit(data, domain, rank):
+        calls.append(f"als:{domain}")
+        return real_fit(data, domain, rank)
+
+    def counting_train(spark, frames, *args):
+        calls.append("cdae")
+        return real_train(spark, frames, *args)
+
+    monkeypatch.setattr(als, "_fit", counting_fit)
+    monkeypatch.setattr(cdae, "_train", counting_train)
+    for frames in (
+        als.als_eval(spark, sf_dir, modes=("vali", "test"), rank=4),
+        cdae.cdae_eval(spark, sf_dir, modes=("vali", "test"), emb=4, epochs=1),
+    ):
+        assert set(frames) == {"vali", "test"}
+        for df in frames.values():
+            assert len(df.collect()) == 4  # 2 domains x K in {5, 10}
+    # one fit per domain for ALS, one training per domain for CDAE
+    assert calls == ["als:x", "als:y", "cdae", "cdae"]
+
+
 @pytest.mark.slow
 def test_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
     """R7 second half: save both domains' factor checkpoints, reload them,
@@ -307,7 +337,7 @@ def test_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
     save_checkpoint(spark, sf_dir, "y", ck)
     live = {
         (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in als_eval(spark, sf_dir, "test").collect()
+        for r in als_eval(spark, sf_dir, modes=("test",))["test"].collect()
     }
     rel = {
         (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
@@ -427,7 +457,7 @@ def test_cdae_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
         cdae.save_cdae_checkpoint(spark, model, domain, ck)
     live = {
         (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in cdae.cdae_eval(spark, sf_dir, "test").collect()
+        for r in cdae.cdae_eval(spark, sf_dir, modes=("test",))["test"].collect()
     }
     rel = {
         (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])

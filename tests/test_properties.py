@@ -133,6 +133,75 @@ def test_sample_reject_matches_round_oracle(rows, params):
     assert got == want
 
 
+# one (user, domain) group per case: each candidate item's score (None =
+# the model scored no row for it) from a 3-value menu, so ties are forced
+# both between scored items and between 0.0 and a missing score
+eval_groups = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=3),  # user_id
+        st.sampled_from(["x", "y"]),  # domain
+        st.lists(st.sampled_from([None, 0.0, 1.0]), min_size=1, max_size=8),
+        st.integers(min_value=0, max_value=7),  # positive's index (mod len)
+        st.booleans(),  # also score a non-candidate item
+    ),
+    min_size=1,
+    max_size=6,
+    unique_by=lambda g: (g[0], g[1]),
+)
+
+
+@settings(
+    max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+@given(eval_groups, st.sampled_from([[1], [1, 3], [2, 5, 10]]))
+def test_eval_from_scores_matches_sql_on_ties_and_missing(groups, ks):
+    """``eval_from_scores`` equals the frozen-eval oracle's SQL (candidate
+    assembly + the shared ROW_NUMBER metrics tail) in DuckDB over the same
+    frames, on score ties (item_id breaks them) and unscored candidates
+    (scored 0.0)."""
+    import duckdb
+    import pandas as pd
+
+    from etl_master_spark.operators.ranking import _scored_sql, eval_from_scores
+    from tools.strict_check import compare
+
+    rows = {"sc": [], "hold": [], "negs": []}
+    for user, domain, scores, pos, extra in groups:
+        for item, score in enumerate(scores):
+            if score is not None:
+                rows["sc"].append((user, item, domain, score))
+            key = "hold" if item == pos % len(scores) else "negs"
+            rows[key].append((user, item, domain))
+        if extra:
+            rows["sc"].append((user, 99, domain, 2.0))
+    cols = ["user_id", "item_id", "domain"]
+    frames = {
+        "sc": pd.DataFrame(rows["sc"], columns=cols + ["score"]).astype(
+            {"user_id": "int64", "item_id": "int64", "score": "float64"}
+        ),
+        **{
+            k: pd.DataFrame(rows[k], columns=cols).astype(
+                {"user_id": "int64", "item_id": "int64"}
+            )
+            for k in ("hold", "negs")
+        },
+    }
+    spark = _get_spark()
+    sdf = {
+        k: spark.createDataFrame(
+            rows[k], "user_id long, item_id long, domain string"
+            + (", score double" if k == "sc" else "")
+        )
+        for k in frames
+    }
+    got = eval_from_scores(sdf["sc"], sdf["hold"], sdf["negs"], ks=ks).toPandas()
+    con = duckdb.connect()
+    for k, pdf in frames.items():
+        con.register(k, pdf)
+    want = con.execute("WITH " + _scored_sql(ks)).df()
+    assert compare(got, want) == []
+
+
 def test_semantic_dedup_partitioning_invariance(spark):
     """The dominated-by-lower-id prune is a pure function of the
     (vec_id, embedding, cluster) SET: row order and partitioning must not

@@ -4,6 +4,7 @@ cases matching the reference semantics (``my_utils.py:70-80``)."""
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -83,3 +84,14 @@ def test_hr_monotone_in_k(spark, sf_dir):
         for k in (5, 10):
             for metric in ("hr", "ndcg", "mrr"):
                 assert 0.0 <= by[(d, k)][metric] <= 1.0
+
+
+def test_frozen_eval_dir_follows_the_importing_tree():
+    """The frozen-score artifacts live in the checkout the engine is
+    imported from — a copy of the tree freezes into and replays from its
+    own ``.artifacts``, never another checkout's."""
+    from etl_master_spark.operators import ranking
+
+    repo = Path(__file__).resolve().parent.parent
+    assert Path(ranking.__file__).resolve().is_relative_to(repo)
+    assert Path(ranking.FROZEN_EVAL_DIR) == repo / ".artifacts" / "frozen_eval"
