@@ -13,16 +13,33 @@ each stage a distributed Spark job.
 
 Models: ``popularity`` (deterministic baseline, no training), ``als``
 (Spark ML, the idiomatic collaborative filter), ``cdae`` (the reference's
-model family via distributed mapInPandas partial-gradient training).
+model family via distributed mapInPandas partial-gradient training) and
+``gan`` (the reference's adversarially-coupled cross-domain model). The
+three trained ones run one lifecycle (``model/scoring.py``): train once,
+evaluate both modes, export that same model's embeddings.
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib
 import json
 import os
 import sys
 import time
+
+# --model → (family module under etl_master_spark.model, {flag: trainer
+# kwarg}). The one list of the hyperparameter flags each family honors;
+# popularity trains nothing, so it honors none.
+FAMILIES: dict[str, tuple[str | None, dict[str, str]]] = {
+    "popularity": (None, {}),
+    "als": ("als", {"emb_size": "rank"}),
+    "cdae": ("cdae", {"emb_size": "emb", "epochs": "epochs", "lr": "lr",
+                      "seed": "seed"}),
+    "gan": ("gan", {"emb_size": "emb", "epochs": "passes", "lr": "lr",
+                    "seed": "seed", "optimizer": "optimizer",
+                    "prior": "prior"}),
+}
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -33,8 +50,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     # reference argument names where a counterpart exists (main_my.py:30-52)
     p.add_argument("--data-dir", required=True, help="testdata sf dir (parquet tables)")
-    p.add_argument("--model", choices=["popularity", "als", "cdae", "gan"],
-                   default="popularity")
+    p.add_argument("--model", choices=list(FAMILIES), default="popularity")
     p.add_argument("--epochs", type=int, default=15,
                    help="cdae training epochs / gan passes")
     p.add_argument("--emb_size", type=int, default=16, help="embedding size")
@@ -50,14 +66,23 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--topk", type=int, nargs="+", default=[5, 10], help="ranking cutoffs")
     p.add_argument("--log", default=None, help="run dir: metrics log + artifacts")
     p.add_argument("--export-embeddings", action="store_true",
-                   help="export per-user embeddings parquet (S5; als/cdae)")
+                   help="export the evaluated model's domain-x user"
+                        " embeddings parquet (S5; als/cdae/gan)")
     p.add_argument("--skip-prepare", action="store_true",
                    help="skip the splits/negatives materialization stage")
     return p
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    family, honored = FAMILIES[args.model]
+    # a hyperparameter flag the chosen model cannot honor is an error,
+    # not a silently ignored value (reference main_my.py:30-52 args all bind)
+    tuned = {flag for _, flags in FAMILIES.values() for flag in flags}
+    for flag in sorted(tuned - set(honored)):
+        if getattr(args, flag) != parser.get_default(flag):
+            parser.error(f"--{flag} does not apply to --model {args.model}")
     from etl_master_spark.session import get_spark
 
     spark = get_spark(app_name="etl_master_spark_cli")
@@ -96,71 +121,42 @@ def main(argv: list[str] | None = None) -> int:
             }
         )
 
-    # stage 2+3 — train (model-dependent) and evaluate both modes.
-    # Every parsed hyperparameter reaches the trainer it applies to;
-    # flags a model cannot honor are rejected up front rather than
-    # silently ignored (reference parity: main_my.py:30-52 args all bind).
+    # stage 2+3 — train once and evaluate both modes off that model
     t0 = time.time()
-    if args.model == "popularity":
+    model = None
+    if family is None:  # popularity: a fixed ranking, nothing to train
         from etl_master_spark.operators.ranking import eval_metrics
 
         frames = {m: eval_metrics(spark, args.data_dir, m, ks=args.topk)
                   for m in ("vali", "test")}
-    elif args.model == "als":
-        from etl_master_spark.model.als import als_eval
-
-        frames = als_eval(spark, args.data_dir, rank=args.emb_size,
-                          ks=args.topk)
-    elif args.model == "gan":
-        from etl_master_spark.model.gan import gan_eval_with
-
-        frames = gan_eval_with(
-            spark, args.data_dir, emb=args.emb_size, passes=args.epochs,
-            lr=args.lr, seed=args.seed, ks=args.topk,
-            optimizer=args.optimizer, prior=args.prior,
-        )
     else:
-        from etl_master_spark.model.cdae import cdae_eval
+        from etl_master_spark.model.scoring import evaluate
+        from etl_master_spark.operators.recsplit import split_data
 
-        frames = cdae_eval(spark, args.data_dir, emb=args.emb_size,
-                           epochs=args.epochs, lr=args.lr, seed=args.seed,
-                           ks=args.topk)
+        fam = importlib.import_module(f"etl_master_spark.model.{family}")
+        data = split_data(spark, args.data_dir)
+        model = fam.train(spark, data, **{
+            kw: getattr(args, flag) for flag, kw in honored.items()
+        })
+        frames = evaluate(fam.scores(spark, model), data, ks=args.topk)
     for mode, df in frames.items():
         for r in df.collect():
             log_line({"stage": "evaluate", "mode": mode, **r.asDict()})
     log_line({"stage": "train+evaluate", "model": args.model,
               "sec": round(time.time() - t0, 2)})
 
-    # stage 4 — embedding export (S5), dispatched on the TRAINED model:
-    # als exports its factor rows, cdae its own latent z (reference
-    # exports the model's embeddings, model_my.py:111-145); popularity
-    # has no embeddings to export — warn, don't train a different model.
+    # stage 4 — embedding export (S5) of the model stage 2 evaluated
+    # (reference exports the trained model's embeddings, model_my.py:111-145)
     if args.export_embeddings:
         t0 = time.time()
-        if args.model == "popularity":
+        if model is None:
             log_line({"stage": "export_embeddings",
                       "skipped": "popularity model has no embeddings"})
         else:
-            if args.model == "als":
-                from etl_master_spark.model.als import export_user_embeddings
-
-                emb = export_user_embeddings(spark, args.data_dir, "x")
-            elif args.model == "gan":
-                from etl_master_spark.model.gan import gan_user_embeddings
-
-                emb = gan_user_embeddings(
-                    spark, args.data_dir, "x", emb=args.emb_size,
-                    passes=args.epochs, lr=args.lr, seed=args.seed,
-                )
-            else:
-                from etl_master_spark.model.cdae import cdae_user_embeddings
-
-                emb = cdae_user_embeddings(
-                    spark, args.data_dir, "x", emb=args.emb_size,
-                    epochs=args.epochs, lr=args.lr, seed=args.seed,
-                )
             out = os.path.join(log_dir or ".", "user_embeddings")
-            emb.write.mode("overwrite").parquet(out)
+            fam.user_embeddings(spark, model, "x").write.mode(
+                "overwrite"
+            ).parquet(out)
             log_line({"stage": "export_embeddings", "path": out,
                       "model": args.model,
                       "rows": spark.read.parquet(out).count(),

@@ -10,9 +10,11 @@ preserves the reference's experimental protocol (leave-two-out, 99
 negatives, HR/NDCG/MRR@{5,10}) while the model itself is cluster-native:
 ALS's block-wise alternating solve is the canonical 100 TB-scale CF trainer.
 
-Embedding export (reference S5/S6, ``model_my.py:111-181``) falls out of
-``model.userFactors`` as a (user_id, embedding ARRAY<FLOAT>) DataFrame
-written to parquet — no driver-side ndarray ever materializes.
+The model value ``train`` returns keeps each domain's factor frames, so
+scoring, checkpointing and embedding export (reference S5/S6,
+``model_my.py:111-181``: the user factors as (user_id, embedding
+ARRAY<FLOAT>)) all read the one fit — no driver-side ndarray ever
+materializes.
 """
 
 from __future__ import annotations
@@ -20,12 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData, split_data
-from .scoring import dot_scores
+from .scoring import DOMAINS, dot_scores, evaluate
 
 EMB_SIZE = 16  # reference uses 200 (main_my.py:35); small here for test speed
 SEED = 72  # reference --seed default (main_my.py:32)
+_SIDES = ("user", "item")  # factor frames, one parquet dir each
 
 
 def _fit(data: SplitData, domain: str, rank: int):
@@ -52,33 +54,67 @@ def _fit(data: SplitData, domain: str, rank: int):
     return als.fit(train)
 
 
-def train_als(
-    spark: SparkSession, sf_dir: str, domain: str, rank: int = EMB_SIZE
-):
-    """Fit implicit-feedback ALS on one domain's train split."""
-    return _fit(split_data(spark, sf_dir), domain, rank)
+def train(spark: SparkSession, data: SplitData, rank: int = EMB_SIZE) -> dict:
+    """Fit implicit-feedback ALS on each domain's train split. The model
+    value holds ``data`` and, per domain, the ``user`` and ``item``
+    factor frames (id INT, features ARRAY<FLOAT>)."""
+    model: dict = {"data": data}
+    for domain in DOMAINS:
+        fit = _fit(data, domain, rank)
+        model[domain] = {"user": fit.userFactors, "item": fit.itemFactors}
+    return model
 
 
-def _scores(data: SplitData, domain: str, rank: int) -> DataFrame:
-    cand = data.candidates(domain).select(
-        F.col("user_id").cast("int").alias("user"),
-        F.col("item_id").cast("int").alias("item"),
+def scores(spark: SparkSession, model: dict) -> DataFrame:
+    """(user_id, item_id, domain, score) for both domains' candidate pairs:
+    ``scoring.dot_scores`` over the factor frames, never a full user×item
+    materialization. Its float32 sum equals ALS ``transform``'s
+    prediction bit for bit, so a live and a reloaded model score alike."""
+    x, y = (
+        dot_scores(
+            model["data"], d,
+            *(model[d][side].select(F.col("id").cast("bigint"), "features")
+              for side in _SIDES),
+        )
+        for d in DOMAINS
     )
-    return _fit(data, domain, rank).transform(cand).select(
-        F.col("user").cast("bigint").alias("user_id"),
-        F.col("item").cast("bigint").alias("item_id"),
-        F.lit(domain).alias("domain"),
-        F.col("prediction").cast("double").alias("score"),
+    return x.unionByName(y)
+
+
+def user_embeddings(spark: SparkSession, model: dict, domain: str) -> DataFrame:
+    """S5/S6 embedding export shape (``model_my.py:111-181``):
+    (user_id, embedding ARRAY<FLOAT>). Distributed end-to-end — the factor
+    matrix stays a DataFrame."""
+    return model[domain]["user"].select(
+        F.col("id").cast("bigint").alias("user_id"),
+        F.col("features").cast("array<float>").alias("embedding"),
     )
 
 
-def als_scores(
-    spark: SparkSession, sf_dir: str, domain: str, rank: int = EMB_SIZE
-) -> DataFrame:
-    """Score every (user, candidate-item) pair for one domain via the model's
-    dot products — computed as a transform over the candidate pairs, never a
-    full user×item materialization."""
-    return _scores(split_data(spark, sf_dir), domain, rank)
+def save_checkpoint(spark: SparkSession, model: dict, ckpt_dir: str) -> None:
+    """S4 checkpoint save (reference ``torch.save`` per best metric,
+    ``main_my.py:322-346``): both domains' factor matrices as parquet
+    under ``{ckpt_dir}/{domain}/{user,item}_factors`` — splittable,
+    schema'd, reloadable by ANY engine, no driver materialization."""
+    for domain in DOMAINS:
+        for side in _SIDES:
+            model[domain][side].write.mode("overwrite").parquet(
+                f"{ckpt_dir}/{domain}/{side}_factors"
+            )
+
+
+def load_checkpoint(spark: SparkSession, data: SplitData, ckpt_dir: str) -> dict:
+    """The model value back from ``save_checkpoint``'s factor parquet."""
+    return {
+        "data": data,
+        **{
+            domain: {
+                side: spark.read.parquet(f"{ckpt_dir}/{domain}/{side}_factors")
+                for side in _SIDES
+            }
+            for domain in DOMAINS
+        },
+    }
 
 
 def als_eval(
@@ -91,14 +127,9 @@ def als_eval(
     """Reference protocol end-to-end with the ALS model: rank 99 negatives +
     held-out positive per user per domain, HR/NDCG/MRR@{5,10}, for every
     mode in ``modes`` off ONE fit per domain. Rows-only check (model
-    training is not SQL-expressible — SURVEY.md §7.4). ``rank``
-    (--emb_size) and ``ks`` (--topk) thread from the CLI."""
+    training is not SQL-expressible — SURVEY.md §7.4)."""
     data = split_data(spark, sf_dir)
-    scores = _scores(data, "x", rank).unionByName(_scores(data, "y", rank))
-    return {
-        mode: eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
-        for mode in modes
-    }
+    return evaluate(scores(spark, train(spark, data, rank)), data, modes, ks)
 
 
 def als_eval_frozen(
@@ -113,82 +144,10 @@ def als_eval_frozen(
     from ..operators.ranking import freeze_and_eval
 
     data = split_data(spark, sf_dir)
-    scores = _scores(data, "x", EMB_SIZE).unionByName(_scores(data, "y", EMB_SIZE))
     return freeze_and_eval(
-        scores, data.holdout(mode), data.negatives, f"als_{mode}", sf_dir,
+        scores(spark, train(spark, data)), data.holdout(mode), data.negatives,
+        f"als_{mode}", sf_dir,
         # training-config fingerprint: a hyperparameter change invalidates
         # the committed freeze instead of silently serving stale metrics
         fingerprint=f"als:v1:rank={EMB_SIZE},seed={SEED},maxIter=10,reg=0.1",
-    )
-
-
-def export_user_embeddings(
-    spark: SparkSession, sf_dir: str, domain: str = "x"
-) -> DataFrame:
-    """S5/S6 embedding export shape (``model_my.py:111-181``):
-    (user_id, embedding ARRAY<FLOAT>). Distributed end-to-end — the factor
-    matrix stays a DataFrame."""
-    model = train_als(spark, sf_dir, domain)
-    return model.userFactors.select(
-        F.col("id").cast("bigint").alias("user_id"),
-        F.col("features").cast("array<float>").alias("embedding"),
-    )
-
-
-# -- R7 second half: checkpoint save → reload → re-evaluate ------------------
-
-def save_checkpoint(
-    spark: SparkSession, sf_dir: str, domain: str, ckpt_dir: str
-) -> None:
-    """S4 checkpoint save (reference ``torch.save`` per best metric,
-    ``main_my.py:322-346``): both factor matrices as parquet — splittable,
-    schema'd, reloadable by ANY engine, no driver materialization."""
-    model = train_als(spark, sf_dir, domain)
-    model.userFactors.write.mode("overwrite").parquet(
-        f"{ckpt_dir}/{domain}/user_factors"
-    )
-    model.itemFactors.write.mode("overwrite").parquet(
-        f"{ckpt_dir}/{domain}/item_factors"
-    )
-
-
-def _checkpoint_scores(
-    spark: SparkSession, data: SplitData, domain: str, ckpt_dir: str
-) -> DataFrame:
-    uf, itf = (
-        spark.read.parquet(f"{ckpt_dir}/{domain}/{side}_factors").select(
-            F.col("id").cast("bigint"), F.col("features").cast("array<float>")
-        )
-        for side in ("user", "item")
-    )
-    return dot_scores(data, domain, uf, itf)
-
-
-def scores_from_checkpoint(
-    spark: SparkSession, sf_dir: str, domain: str, ckpt_dir: str
-) -> DataFrame:
-    """Score candidate pairs from RELOADED factors — ``scoring.dot_scores``
-    over the candidate pairs, no model object and no user×item
-    materialization. The reloaded path must reproduce the live model's
-    ranking (pinned in tests/test_model.py)."""
-    return _checkpoint_scores(spark, split_data(spark, sf_dir), domain, ckpt_dir)
-
-
-def reeval_from_checkpoint(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt_dir: str,
-    mode: str = "test",
-    ks: list[int] | None = None,
-) -> DataFrame:
-    """The full R7 lifecycle (reference ``main_my.py:350-375``): reload the
-    saved best checkpoints for both domains and re-run the evaluation
-    protocol at K∈{5,10}. Assumes ``save_checkpoint`` ran for 'x' and 'y'
-    under ``ckpt_dir``."""
-    data = split_data(spark, sf_dir)
-    scores = _checkpoint_scores(spark, data, "x", ckpt_dir).unionByName(
-        _checkpoint_scores(spark, data, "y", ckpt_dir)
-    )
-    return eval_from_scores(
-        scores, data.holdout(mode), data.negatives, ks=ks or [5, 10]
     )

@@ -35,10 +35,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData, split_data
 from .reduce import tree_collect
-from .scoring import decoder_frame, dot_scores, load_params, save_params
+from .scoring import (
+    DOMAINS, decoder_frame, dot_scores, evaluate, load_params, save_params,
+)
 
 EMB_SIZE = 16
 EPOCHS = 15
@@ -49,10 +50,10 @@ DROPOUT_DEN = 4
 
 
 def _train_frame(data: SplitData, domain: str) -> dict:
-    """The data half of a model dict: ``per_user`` (user_id, idxs
+    """The data half of one domain's model: ``per_user`` (user_id, idxs
     ARRAY<INT>) over the train split, the dense item index ``items``
-    (item_id ↔ idx) that addresses decoder columns, its size ``n_items``
-    (the one eager count), and ``data`` itself for scoring."""
+    (item_id ↔ idx) that addresses decoder columns and its size
+    ``n_items`` (the one eager count)."""
     tr = data.train(domain)
     items = (
         tr.select("item_id")
@@ -67,10 +68,7 @@ def _train_frame(data: SplitData, domain: str) -> dict:
         .groupBy("user_id")
         .agg(F.sort_array(F.collect_list("idx")).alias("idxs"))
     )
-    return {
-        "data": data, "per_user": per_user, "items": items,
-        "n_items": items.count(),
-    }
+    return {"per_user": per_user, "items": items, "n_items": items.count()}
 
 
 def _multi_hot(pdf: pd.DataFrame, n_items: int) -> tuple[np.ndarray, np.ndarray]:
@@ -81,19 +79,25 @@ def _multi_hot(pdf: pd.DataFrame, n_items: int) -> tuple[np.ndarray, np.ndarray]
     return users, x
 
 
-def train_cdae(
+def train(
     spark: SparkSession,
-    sf_dir: str,
-    domain: str,
+    data: SplitData,
     emb: int = EMB_SIZE,
     epochs: int = EPOCHS,
     lr: float = LR,
     seed: int = SEED,
 ) -> dict:
-    return _train(
-        spark, _train_frame(split_data(spark, sf_dir), domain),
-        emb, epochs, lr, seed,
-    )
+    """One denoising autoencoder per domain on ``data``'s train split. The
+    model value holds ``data`` and, per domain, ``_train``'s dict: the
+    ``_train_frame`` frames, weights ``W1``/``W2`` and the epoch
+    ``losses``."""
+    return {
+        "data": data,
+        **{
+            d: _train(spark, _train_frame(data, d), emb, epochs, lr, seed)
+            for d in DOMAINS
+        },
+    }
 
 
 def _train(
@@ -168,24 +172,6 @@ def _train(
     return {**frames, "W1": w1, "W2": w2, "losses": losses}
 
 
-def cdae_user_embeddings(
-    spark: SparkSession,
-    sf_dir: str,
-    domain: str,
-    emb: int = EMB_SIZE,
-    epochs: int = EPOCHS,
-    lr: float = LR,
-    seed: int = SEED,
-) -> DataFrame:
-    """S5 export with the CDAE's OWN latent z (reference exports the
-    trained model's embeddings, ``model_my.py:111-145``): one training
-    run, then (user_id, embedding ARRAY<DOUBLE>) via the Arrow latent
-    pass — never a driver-side matrix."""
-    model = train_cdae(spark, sf_dir, domain, emb=emb, epochs=epochs, lr=lr,
-                       seed=seed)
-    return _latent(spark, model, "embedding")
-
-
 def _latent(spark: SparkSession, model: dict, col: str) -> DataFrame:
     """(user_id, ``col`` ARRAY<DOUBLE>): each train user's latent z,
     computed per Arrow batch from the user's rebuilt multi-hot row."""
@@ -206,31 +192,25 @@ def _latent(spark: SparkSession, model: dict, col: str) -> DataFrame:
     )
 
 
-def cdae_scores(
-    spark: SparkSession,
-    sf_dir: str,
-    domain: str,
-    emb: int = EMB_SIZE,
-    epochs: int = EPOCHS,
-    lr: float = LR,
-    seed: int = SEED,
-) -> DataFrame:
-    """(user_id, item_id, domain, score) for candidate pairs only."""
-    model = train_cdae(spark, sf_dir, domain, emb=emb, epochs=epochs, lr=lr,
-                       seed=seed)
-    return cdae_scores_with(spark, sf_dir, domain, model)
-
-
-def cdae_scores_with(
-    spark: SparkSession, sf_dir: str, domain: str, model: dict
-) -> DataFrame:
-    """Score candidate pairs from an in-hand model dict (live-trained or
-    checkpoint-reloaded) — the shared scoring half of ``cdae_scores``.
-    The candidates come from the dict's own ``data``."""
-    return dot_scores(
-        model["data"], domain, _latent(spark, model, "z"),
-        decoder_frame(spark, model["items"], model["W2"]),
+def scores(spark: SparkSession, model: dict) -> DataFrame:
+    """(user_id, item_id, domain, score) for both domains' candidate pairs
+    of a live-trained or checkpoint-reloaded model."""
+    x, y = (
+        dot_scores(
+            model["data"], d, _latent(spark, model[d], "z"),
+            decoder_frame(spark, model[d]["items"], model[d]["W2"]),
+        )
+        for d in DOMAINS
     )
+    return x.unionByName(y)
+
+
+def user_embeddings(spark: SparkSession, model: dict, domain: str) -> DataFrame:
+    """S5 export with the CDAE's OWN latent z (reference exports the
+    trained model's embeddings, ``model_my.py:111-145``):
+    (user_id, embedding ARRAY<DOUBLE>) via the Arrow latent pass — never a
+    driver-side matrix."""
+    return _latent(spark, model[domain], "embedding")
 
 
 def cdae_eval(
@@ -245,69 +225,35 @@ def cdae_eval(
 ) -> dict[str, DataFrame]:
     """Reference protocol end-to-end with the CDAE scorer (rows-only —
     training is not SQL-expressible), for every mode in ``modes`` off ONE
-    training per domain. Hyperparameters thread through to the trainer —
-    the CLI's --epochs/--lr/--emb_size/--seed land here."""
-    scores, data = _scores_xy(
-        spark, sf_dir, lambda _, f: _train(spark, f, emb, epochs, lr, seed)
-    )
-    return {
-        mode: eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
-        for mode in modes
-    }
-
-
-def _scores_xy(
-    spark: SparkSession, sf_dir: str, model_of
-) -> tuple[DataFrame, SplitData]:
-    """Both domains' candidate scores over ONE ``split_data``, plus that
-    data; ``model_of(domain, frames)`` turns a domain's ``_train_frame``
-    dict into a scoring-ready model dict."""
+    training per domain."""
     data = split_data(spark, sf_dir)
-    x, y = (
-        cdae_scores_with(spark, sf_dir, d, model_of(d, _train_frame(data, d)))
-        for d in ("x", "y")
-    )
-    return x.unionByName(y), data
+    model = train(spark, data, emb, epochs, lr, seed)
+    return evaluate(scores(spark, model), data, modes, ks)
 
 
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
 # model, main_my.py:322-346,350-375) ----------------------------------------
 
-def save_cdae_checkpoint(
-    spark: SparkSession, model: dict, domain: str, ckpt_dir: str
-) -> None:
-    """Persist the trained weight matrices (``scoring.save_params``)."""
-    save_params(
-        spark, {k: model[k] for k in ("W1", "W2")}, f"{ckpt_dir}/cdae_{domain}"
-    )
+def save_checkpoint(spark: SparkSession, model: dict, ckpt_dir: str) -> None:
+    """Persist each domain's weight matrices (``scoring.save_params``) to
+    ``{ckpt_dir}/cdae_{domain}``."""
+    for d in DOMAINS:
+        save_params(
+            spark, {k: model[d][k] for k in ("W1", "W2")}, f"{ckpt_dir}/cdae_{d}"
+        )
 
 
-def load_cdae_checkpoint(
-    spark: SparkSession, sf_dir: str, domain: str, ckpt_dir: str
-) -> dict:
-    """Rebuild a scoring-ready model dict: weights from parquet, item
-    index and per-user frames re-derived from the tables."""
+def load_checkpoint(spark: SparkSession, data: SplitData, ckpt_dir: str) -> dict:
+    """Rebuild a scoring-ready model value: weights from parquet, item
+    index and per-user frames re-derived from ``data``."""
     return {
-        **_train_frame(split_data(spark, sf_dir), domain),
-        **load_params(spark, f"{ckpt_dir}/cdae_{domain}"),
+        "data": data,
+        **{
+            d: {**_train_frame(data, d),
+                **load_params(spark, f"{ckpt_dir}/cdae_{d}")}
+            for d in DOMAINS
+        },
     }
-
-
-def cdae_reeval_from_checkpoint(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt_dir: str,
-    mode: str = "test",
-    ks: list[int] | None = None,
-) -> DataFrame:
-    """R7 for the CDAE family: reload both domains' saved weights and
-    re-run the eval protocol — must reproduce the live metrics exactly
-    (pinned in tests/test_model.py)."""
-    scores, data = _scores_xy(
-        spark, sf_dir,
-        lambda d, f: {**f, **load_params(spark, f"{ckpt_dir}/cdae_{d}")},
-    )
-    return eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
 
 
 def cdae_eval_frozen(
@@ -320,11 +266,10 @@ def cdae_eval_frozen(
     downstream of it is hash-checked."""
     from ..operators.ranking import freeze_and_eval
 
-    scores, data = _scores_xy(
-        spark, sf_dir, lambda _, f: _train(spark, f, EMB_SIZE, EPOCHS, LR, SEED)
-    )
+    data = split_data(spark, sf_dir)
     return freeze_and_eval(
-        scores, data.holdout(mode), data.negatives, f"cdae_{mode}", sf_dir,
+        scores(spark, train(spark, data)), data.holdout(mode), data.negatives,
+        f"cdae_{mode}", sf_dir,
         fingerprint=(
             f"cdae:v1:emb={EMB_SIZE},epochs={EPOCHS},lr={LR},seed={SEED},"
             f"drop={DROPOUT_NUM}/{DROPOUT_DEN}"

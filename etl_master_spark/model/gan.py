@@ -17,7 +17,7 @@ Reference semantics (``main_my.py:152-252``, ``model_my.py:52-109``):
   ``G_loss + self·(recon) + cross·(transfer recon) + reg·consistency``
   (``main_my.py:164,240-246``)
 
-Spark-first translation (same pattern as ``cdae.train_cdae`` /
+Spark-first translation (same pattern as ``cdae.train`` /
 ``crossdomain.fit_mlp_map``):
 
 - nothing user×item-shaped ever materializes globally: each Arrow batch
@@ -45,11 +45,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData, split_data
 from .cdae import DROPOUT_DEN, DROPOUT_NUM, _train_frame
 from .reduce import tree_collect
-from .scoring import decoder_frame, dot_scores, load_params, save_params
+from .scoring import (
+    DOMAINS, decoder_frame, dot_scores, evaluate, load_params, save_params,
+)
 
 EMB = 16
 PASSES = 9  # pass schedule G,G,D ×3 — d_epoch=2 (main_my.py:47,164)
@@ -377,9 +378,9 @@ _D_SCHEMA = (
 )
 
 
-def train_gan(
+def train(
     spark: SparkSession,
-    sf_dir: str,
+    data: SplitData,
     emb: int = EMB,
     passes: int = PASSES,
     lr: float = LR,
@@ -390,14 +391,18 @@ def train_gan(
     wd: float = WEIGHT_DECAY,
     prior: str = "gaussian",
 ) -> dict:
-    """``optimizer``: "gd" (default) is plain full-batch gradient descent
+    """Train the coupled model on ``data``; the model value holds
+    ``_joined_frame``'s frames (``data`` among them), the ``g``/``d``
+    parameter dicts and the per-pass losses.
+
+    ``optimizer``: "gd" (default) is plain full-batch gradient descent
     with split G/D rates — chosen for the engine's short pass budget,
     same fixed point as the reference. "adam" reproduces the reference's
     T11 pair exactly (main_my.py:113-114): Adam moments + weight decay
     for the generator, SGD + weight decay for the discriminators, all
     state driver-side over the collected partial gradients — equally
     deterministic (full-batch, seeded)."""
-    frames = _joined_frame(split_data(spark, sf_dir))
+    frames = _joined_frame(data)
     joined = frames["joined"].persist()
     n_x, n_y = frames["n_items_x"], frames["n_items_y"]
     n_users = joined.count()
@@ -496,20 +501,28 @@ def train_gan(
 
 # -- scoring / evaluation -----------------------------------------------------
 
-def gan_scores(spark: SparkSession, sf_dir: str, model: dict | None = None) -> DataFrame:
+def scores(spark: SparkSession, model: dict) -> DataFrame:
     """(user_id, item_id, domain, score) for candidate pairs only —
-    ``scoring.dot_scores`` per domain like cdae_scores, but from ONE
-    coupled training run covering both domains."""
-    model = model or train_gan(spark, sf_dir)
+    ``scoring.dot_scores`` per domain, from ONE coupled model covering
+    both domains."""
     z_df = _latent(spark, model)
     x, y = (
         dot_scores(
             model["data"], d, z_df.select("user_id", f"z{d}"),
             decoder_frame(spark, model[f"items_{d}"], model["g"][f"w2{d}"]),
         )
-        for d in ("x", "y")
+        for d in DOMAINS
     )
     return x.unionByName(y)
+
+
+def user_embeddings(spark: SparkSession, model: dict, domain: str) -> DataFrame:
+    """S5/S6 export with the GAN-trained latent z for one domain —
+    (user_id, embedding ARRAY<DOUBLE>), Arrow-batched, never a driver
+    matrix (reference ``save_embedding_process``, model_my.py:111-145)."""
+    return _latent(spark, model).select(
+        "user_id", F.col(f"z{domain}").alias("embedding")
+    )
 
 
 def _latent(spark: SparkSession, model: dict) -> DataFrame:
@@ -538,7 +551,7 @@ def _latent(spark: SparkSession, model: dict) -> DataFrame:
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
 # model, main_my.py:322-346,350-375) ----------------------------------------
 
-def save_gan_checkpoint(spark: SparkSession, model: dict, ckpt_dir: str) -> None:
+def save_checkpoint(spark: SparkSession, model: dict, ckpt_dir: str) -> None:
     """Persist every trained numpy parameter (generator + discriminators)
     as one ``scoring.save_params`` parquet, names prefixed ``g.``/``d.``."""
     save_params(
@@ -548,36 +561,16 @@ def save_gan_checkpoint(spark: SparkSession, model: dict, ckpt_dir: str) -> None
     )
 
 
-def load_gan_checkpoint(
-    spark: SparkSession, sf_dir: str, ckpt_dir: str
-) -> dict:
-    """Rebuild a scoring-ready model dict from a saved checkpoint: numpy
-    params from parquet, item-index frames re-derived from the tables
-    (they are data, not model state)."""
+def load_checkpoint(spark: SparkSession, data: SplitData, ckpt_dir: str) -> dict:
+    """Rebuild a scoring-ready model value from a saved checkpoint: numpy
+    params from parquet, item-index frames re-derived from ``data`` (they
+    are data, not model state)."""
     params = load_params(spark, f"{ckpt_dir}/gan_params")
     g, d = (
         {k.split(".", 1)[1]: v for k, v in params.items() if k[0] == side}
         for side in ("g", "d")
     )
-    return {**_joined_frame(split_data(spark, sf_dir)), "g": g, "d": d}
-
-
-def gan_reeval_from_checkpoint(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt_dir: str,
-    mode: str = "test",
-    ks: list[int] | None = None,
-) -> DataFrame:
-    """R7 for the adversarial model: reload the saved params and re-run
-    the eval protocol — must reproduce the live model's metrics exactly
-    (pinned in tests/test_model.py)."""
-    model = load_gan_checkpoint(spark, sf_dir, ckpt_dir)
-    data = model["data"]
-    return eval_from_scores(
-        gan_scores(spark, sf_dir, model), data.holdout(mode), data.negatives,
-        ks=ks,
-    )
+    return {**_joined_frame(data), "g": g, "d": d}
 
 
 def gan_eval(spark: SparkSession, sf_dir: str, mode: str = "test") -> DataFrame:
@@ -597,10 +590,9 @@ def gan_eval_frozen(
     Training is seeded full-batch GD, so the artifacts are stable."""
     from ..operators.ranking import freeze_and_eval
 
-    model = train_gan(spark, sf_dir)
-    data = model["data"]
+    data = split_data(spark, sf_dir)
     return freeze_and_eval(
-        gan_scores(spark, sf_dir, model), data.holdout(mode), data.negatives,
+        scores(spark, train(spark, data)), data.holdout(mode), data.negatives,
         f"gan_{mode}", sf_dir,
         fingerprint=(
             f"gan:v1:emb={EMB},passes={PASSES},lr={LR},lr_d={LR_D},"
@@ -621,35 +613,11 @@ def gan_eval_with(
     optimizer: str = "gd",
     prior: str = "gaussian",
 ) -> dict[str, DataFrame]:
-    """Train the coupled model ONCE, evaluate every requested mode — the
-    CLI's --model gan entry point (one training run for vali+test, like
-    the reference's single loop evaluating both). ``optimizer``/``prior``
-    thread the T11 pair and the prior menu through from the CLI."""
-    model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr, seed=seed,
-                      optimizer=optimizer, prior=prior)
-    scores = gan_scores(spark, sf_dir, model)
-    data = model["data"]
-    return {
-        mode: eval_from_scores(
-            scores, data.holdout(mode), data.negatives, ks=ks
-        )
-        for mode in modes
-    }
-
-
-def gan_user_embeddings(
-    spark: SparkSession,
-    sf_dir: str,
-    domain: str = "x",
-    emb: int = EMB,
-    passes: int = PASSES,
-    lr: float = LR,
-    seed: int = SEED,
-) -> DataFrame:
-    """S5/S6 export with the GAN-trained latent z for one domain —
-    (user_id, embedding ARRAY<DOUBLE>), Arrow-batched, never a driver
-    matrix (reference ``save_embedding_process``, model_my.py:111-145)."""
-    model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr, seed=seed)
-    return _latent(spark, model).select(
-        "user_id", F.col("zx" if domain == "x" else "zy").alias("embedding")
-    )
+    """Train the coupled model ONCE, evaluate every requested mode (one
+    training run for vali+test, like the reference's single loop
+    evaluating both). ``optimizer``/``prior`` select the T11 pair and the
+    prior menu."""
+    data = split_data(spark, sf_dir)
+    model = train(spark, data, emb=emb, passes=passes, lr=lr, seed=seed,
+                  optimizer=optimizer, prior=prior)
+    return evaluate(scores(spark, model), data, modes, ks)

@@ -1,6 +1,6 @@
 """Bounded-fan-in collection of partial-gradient frames.
 
-The model family's training loops (cdae.train_cdae, gan.train_gan,
+The model family's training loops (cdae.train, gan.train,
 crossdomain.fit_mlp_map) compute exact per-partition partial gradients
 with Arrow ``mapInPandas`` and sum them on the driver — the classic
 parameter-server-on-driver shape. Each partial is O(params), so the

@@ -1,7 +1,18 @@
-"""What the ALS, CDAE and GAN scorers share: one candidate dot-product
-scorer (candidate pairs only, never the full user×item logits of reference
-``my_utils.py:121-129``) and one (name, shape, flat data) parquet checkpoint
-format (reference ``torch.save``/``load``, ``main_my.py:322-346,350-375``).
+"""What the ALS, CDAE and GAN families share. Each family module exposes
+one lifecycle over the model value its ``train`` returns:
+
+- ``train(spark, data, **hp) -> model``: both domains, carrying ``data``
+- ``scores(spark, model)``: both domains' candidate scores
+- ``user_embeddings(spark, model, domain)``
+- ``save_checkpoint(spark, model, ckpt_dir)`` and
+  ``load_checkpoint(spark, data, ckpt_dir) -> model``
+
+so evaluation is ``evaluate(fam.scores(spark, model), data)`` for a live
+or a reloaded model alike (reference ``main_my.py:322-375``). This module
+holds that ``evaluate``, the one candidate dot-product scorer (candidate
+pairs only, never the full user×item logits of reference
+``my_utils.py:121-129``) and the one (name, shape, flat data) parquet
+checkpoint format (reference ``torch.save``/``load``).
 """
 
 from __future__ import annotations
@@ -10,9 +21,25 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData
 
+DOMAINS = ("x", "y")
 _PARAMS_SCHEMA = "name string, shape array<int>, data array<double>"
+
+
+def evaluate(
+    scores: DataFrame,
+    data: SplitData,
+    modes: tuple[str, ...] = ("vali", "test"),
+    ks: list[int] | None = None,
+) -> dict[str, DataFrame]:
+    """{mode: HR/NDCG/MRR@K rows} of one both-domain scores frame against
+    ``data``'s holdout for each mode and its 99 negatives per user."""
+    return {
+        mode: eval_from_scores(scores, data.holdout(mode), data.negatives, ks=ks)
+        for mode in modes
+    }
 
 
 def dot_scores(

@@ -111,9 +111,9 @@ def best_epoch_reeval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: two grouped aggregations + one tiny (|metrics| rows)
     broadcast join + a per-metric window over only the selected epochs'
     rows — the selection join prunes the window input before it shuffles.
-    The checkpoint-reload composition with REAL model weights is
-    ``model.als.reeval_from_checkpoint`` (parquet factors round-trip),
-    pinned by tests/test_model.py."""
+    The checkpoint-reload composition with REAL model weights is each
+    model family's ``load_checkpoint`` → ``scores`` → ``scoring.evaluate``
+    (e.g. ALS parquet factors round-trip), pinned by tests/test_model.py."""
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         (F.col("event_id") % N_EPOCHS_FOLD).cast("bigint").alias("epoch"),

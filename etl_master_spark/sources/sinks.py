@@ -12,7 +12,8 @@
   replacement for grep-able logs (``best_epoch`` then runs ON the sink).
 - S7 (``main_my.py:62-70`` rm-rf-and-rewrite log dir): ``mode("overwrite")``
   on the writers — atomic-per-partition rather than shell deletion.
-- S5/S6 embedding export lives in ``model.als.export_user_embeddings``.
+- S5/S6 embedding export is each model family's ``user_embeddings``
+  (``model/scoring.py``), written by the CLI's ``--export-embeddings``.
 
 All writers partition by a low-cardinality column when one exists (domain,
 split) so downstream readers prune; none of them collect to the driver.

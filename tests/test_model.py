@@ -6,6 +6,19 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from etl_master_spark.operators.recsplit import split_data
+
+
+def _test_metrics(scores, data) -> dict:
+    """{(domain, k): (hr, ndcg, mrr, n_users)} of ``scores``' test-mode
+    evaluation — the rows a live and a reloaded model must share."""
+    from etl_master_spark.model.scoring import evaluate
+
+    return {
+        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
+        for r in evaluate(scores, data, ("test",))["test"].collect()
+    }
+
 
 def _count_ratings(monkeypatch) -> list[str]:
     """Route ``recsplit.ratings`` through a counter: one entry per
@@ -139,10 +152,10 @@ def test_cdae_trains_and_evaluates(spark, sf_dir, monkeypatch):
     """The distributed CDAE loop must actually learn (strictly lower BCE
     after training) and its scores must flow through the shared eval
     pipeline with valid metrics."""
-    from etl_master_spark.model.cdae import cdae_eval, train_cdae
+    from etl_master_spark.model.cdae import cdae_eval, train
 
-    model = train_cdae(spark, sf_dir, "x", emb=8, epochs=12, lr=0.3)
-    losses = model["losses"]
+    model = train(spark, split_data(spark, sf_dir), emb=8, epochs=12, lr=0.3)
+    losses = model["x"]["losses"]
     assert losses[-1] < 0.8 * losses[0], losses
     calls = _count_ratings(monkeypatch)
     rows = cdae_eval(spark, sf_dir, modes=("test",))["test"].collect()
@@ -266,7 +279,7 @@ def test_gan_trains_and_evaluates(spark, sf_dir):
     (2 domains x K in {5,10}) like every other scorer."""
     from etl_master_spark.model import gan
 
-    model = gan.train_gan(spark, sf_dir, passes=6)
+    model = gan.train(spark, split_data(spark, sf_dir), passes=6)
     assert len(model["g_losses"]) == 4 and len(model["d_losses"]) == 2
     assert all(np.isfinite(v) for v in model["g_losses"] + model["d_losses"])
     assert model["g_losses"][-1] < model["g_losses"][0]
@@ -323,31 +336,19 @@ def test_als_cdae_eval_train_once_for_both_modes(spark, sf_dir, monkeypatch):
 
 @pytest.mark.slow
 def test_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
-    """R7 second half: save both domains' factor checkpoints, reload them,
-    re-evaluate at K in {5,10} — the reloaded scorer must reproduce the
-    live model's metrics exactly (same factors, same protocol)."""
-    from etl_master_spark.model.als import (
-        als_eval,
-        reeval_from_checkpoint,
-        save_checkpoint,
-    )
+    """R7 second half: save the evaluated model's factor checkpoints for
+    both domains, reload them, re-evaluate at K in {5,10} — the reloaded
+    scorer must reproduce the live model's metrics exactly (same factors,
+    same float32 dot product, same protocol)."""
+    from etl_master_spark.model import als
 
-    ck = str(tmp_path / "ckpt")
-    save_checkpoint(spark, sf_dir, "x", ck)
-    save_checkpoint(spark, sf_dir, "y", ck)
-    live = {
-        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in als_eval(spark, sf_dir, modes=("test",))["test"].collect()
-    }
-    rel = {
-        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in reeval_from_checkpoint(spark, sf_dir, ck, "test").collect()
-    }
+    data, ck = split_data(spark, sf_dir), str(tmp_path / "ckpt")
+    model = als.train(spark, data)
+    als.save_checkpoint(spark, model, ck)
+    live = _test_metrics(als.scores(spark, model), data)
+    rel = _test_metrics(als.scores(spark, als.load_checkpoint(spark, data, ck)), data)
     assert set(live) == set(rel) == {("x", 5), ("x", 10), ("y", 5), ("y", 10)}
-    for key in live:
-        assert rel[key][3] == live[key][3]
-        for a, b in zip(rel[key][:3], live[key][:3]):
-            assert a == pytest.approx(b, abs=1e-6), key
+    assert rel == live
 
 
 def test_media_decode_escape_hatch(monkeypatch):
@@ -388,7 +389,9 @@ def test_gan_two_maps_strategy_trains(spark, sf_dir):
     distributed loop and produces finite, decreasing G loss."""
     from etl_master_spark.model import gan
 
-    model = gan.train_gan(spark, sf_dir, passes=6, lr=0.05, strategy="two_maps")
+    model = gan.train(
+        spark, split_data(spark, sf_dir), passes=6, lr=0.05, strategy="two_maps"
+    )
     assert "m1" in model["g"] and "m2" in model["g"] and "m" not in model["g"]
     assert len(model["g_losses"]) == 4 and len(model["d_losses"]) == 2
     assert all(np.isfinite(v) for v in model["g_losses"] + model["d_losses"])
@@ -405,13 +408,14 @@ def test_gan_adam_optimizer_converges_faster(spark, sf_dir):
     same pass budget, and the trajectory must stay deterministic."""
     from etl_master_spark.model import gan
 
-    gd = gan.train_gan(spark, sf_dir, passes=6)
-    adam = gan.train_gan(spark, sf_dir, passes=6, optimizer="adam", lr=0.05)
+    data = split_data(spark, sf_dir)
+    gd = gan.train(spark, data, passes=6)
+    adam = gan.train(spark, data, passes=6, optimizer="adam", lr=0.05)
     assert all(np.isfinite(v) for v in adam["g_losses"] + adam["d_losses"])
     assert adam["g_losses"][-1] < adam["g_losses"][0]
     assert adam["g_losses"][-1] < gd["g_losses"][-1]
     # deterministic: a second run replays the identical trajectory
-    adam2 = gan.train_gan(spark, sf_dir, passes=6, optimizer="adam", lr=0.05)
+    adam2 = gan.train(spark, data, passes=6, optimizer="adam", lr=0.05)
     assert adam2["g_losses"] == adam["g_losses"]
     for k in adam["g"]:
         assert np.array_equal(adam2["g"][k], adam["g"][k])
@@ -423,24 +427,12 @@ def test_gan_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
     main_my.py:322-346,350-375): save trained params to parquet, reload,
     re-evaluate — metrics must match the live model exactly."""
     from etl_master_spark.model import gan
-    from etl_master_spark.operators.ranking import eval_from_scores
-    from etl_master_spark.operators.recsplit import split_data
 
-    model = gan.train_gan(spark, sf_dir, passes=6)
-    ck = str(tmp_path / "gan_ckpt")
-    gan.save_gan_checkpoint(spark, model, ck)
-    data = split_data(spark, sf_dir)
-    live = {
-        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in eval_from_scores(
-            gan.gan_scores(spark, sf_dir, model), data.holdout("test"),
-            data.negatives,
-        ).collect()
-    }
-    rel = {
-        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in gan.gan_reeval_from_checkpoint(spark, sf_dir, ck).collect()
-    }
+    data, ck = split_data(spark, sf_dir), str(tmp_path / "gan_ckpt")
+    model = gan.train(spark, data, passes=6)
+    gan.save_checkpoint(spark, model, ck)
+    live = _test_metrics(gan.scores(spark, model), data)
+    rel = _test_metrics(gan.scores(spark, gan.load_checkpoint(spark, data, ck)), data)
     assert set(live) == set(rel) == {("x", 5), ("x", 10), ("y", 5), ("y", 10)}
     assert rel == live
 
@@ -451,18 +443,11 @@ def test_cdae_checkpoint_reload_reeval_matches_live(spark, sf_dir, tmp_path):
     weights reproduces the live eval metrics exactly."""
     from etl_master_spark.model import cdae
 
-    ck = str(tmp_path / "cdae_ckpt")
-    for domain in ("x", "y"):
-        model = cdae.train_cdae(spark, sf_dir, domain)
-        cdae.save_cdae_checkpoint(spark, model, domain, ck)
-    live = {
-        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in cdae.cdae_eval(spark, sf_dir, modes=("test",))["test"].collect()
-    }
-    rel = {
-        (r["domain"], r["k"]): (r["hr"], r["ndcg"], r["mrr"], r["n_users"])
-        for r in cdae.cdae_reeval_from_checkpoint(spark, sf_dir, ck).collect()
-    }
+    data, ck = split_data(spark, sf_dir), str(tmp_path / "cdae_ckpt")
+    model = cdae.train(spark, data)
+    cdae.save_checkpoint(spark, model, ck)
+    live = _test_metrics(cdae.scores(spark, model), data)
+    rel = _test_metrics(cdae.scores(spark, cdae.load_checkpoint(spark, data, ck)), data)
     assert set(live) == set(rel) == {("x", 5), ("x", 10), ("y", 5), ("y", 10)}
     assert rel == live
 
@@ -521,7 +506,7 @@ def test_gan_trains_with_alternative_prior(spark, sf_dir):
     trains (finite, decreasing G loss)."""
     from etl_master_spark.model import gan
 
-    model = gan.train_gan(spark, sf_dir, passes=6, prior="laplace")
+    model = gan.train(spark, split_data(spark, sf_dir), passes=6, prior="laplace")
     assert all(np.isfinite(v) for v in model["g_losses"] + model["d_losses"])
     assert model["g_losses"][-1] < model["g_losses"][0]
 
