@@ -12,6 +12,12 @@ operators under count, so a query ending in window/select-only columns
 timed 0.4 s while its real evaluation cost 12.4 s (measured round 7 on
 event_gaps ×100 — the Window node vanished from the count plan). The
 noop sink evaluates every output column and discards rows executor-side.
+
+It is also the one timing primitive of tools/: ``warm`` runs queries once
+at ``WARM_DIR`` and ``timed`` times one construction + noop-sink leg under
+its own job group (job count, optional timeout). profile_queries.py,
+scale_sweep.py, scale_table.py and scale_crossover.py all measure through
+them.
 """
 
 from __future__ import annotations
@@ -19,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -225,27 +232,94 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+# the warm-up scale: plan-shape costs (whole-stage codegen compile,
+# broadcast and window operator init) are per-plan-shape, not per-data-size
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+def _err(exc: BaseException) -> str:
+    return f"{type(exc).__name__}: {exc}".splitlines()[0][:300]
+
+
+def warm(spark, names, sf: str = WARM_DIR) -> dict[str, str]:
+    """Run each registered query once at ``sf`` so later timings measure
+    the engine, not first-touch JVM costs. Returns {name: error} for the
+    queries that failed; one broken query never stops the others (round 1
+    lost its BENCH artifact to one AnalysisException)."""
+    from etl_master_spark.plans.registry import QUERIES
+
+    errors = {}
+    for name in names:
+        try:
+            _force(QUERIES[name](spark, sf))
+        except Exception as e:  # noqa: BLE001
+            errors[name] = _err(e)
+            print(f"WARM FAIL {name}: {errors[name]}", file=sys.stderr)
+    return errors
+
+
+def timed(spark, fn, sf: str, timeout: float | None = None) -> dict:
+    """One timed leg of ``fn(spark, sf)``: construction, then evaluation
+    through the noop sink, under a job group of its own.
+
+    Returns {"construct_s", "exec_s", "jobs", "error"}. Construction is
+    timed too: iterative kernels (LPA, k-core, rejection sampling) launch
+    jobs while BUILDING the frame, and the group counts those jobs with the
+    sink's. With a ``timeout`` a watchdog cancels the group once it fires
+    and the leg reports a ``timeout>…`` error; without one no timer starts.
+    """
+    sc = spark.sparkContext
+    group = f"timed-{time.monotonic_ns()}"
+    fired = threading.Event()
+
+    def cancel() -> None:
+        fired.set()
+        sc.cancelJobGroup(group)
+
+    leg = {"construct_s": None, "exec_s": None, "jobs": 0, "error": None}
+    sc.setJobGroup(group, group, interruptOnCancel=timeout is not None)
+    watchdog = threading.Timer(timeout, cancel) if timeout is not None else None
+    if watchdog:
+        watchdog.start()
+    t0 = time.time()
+    try:
+        df = fn(spark, sf)
+        t1 = time.time()
+        _force(df)
+        t2 = time.time()
+        leg["construct_s"], leg["exec_s"] = round(t1 - t0, 3), round(t2 - t1, 3)
+        # cancelJobGroup interrupts only the jobs running when the timer
+        # fires; one that fires in a driver-side gap of an iterative
+        # kernel lets the rest finish, and that is still a timeout
+        if fired.is_set() or (timeout is not None and t2 - t0 > timeout):
+            leg["error"] = f"timeout>{timeout:.0f}s (ran {t2 - t0:.0f}s)"
+    except Exception as e:  # noqa: BLE001 - returned, not swallowed
+        leg["error"] = f"timeout>{timeout:.0f}s" if fired.is_set() else _err(e)
+    finally:
+        if watchdog:
+            watchdog.cancel()
+        sc.setJobGroup("", "")
+        leg["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    return leg
+
+
+def wall(leg: dict) -> float:
+    """A leg's construction plus evaluation seconds."""
+    return round(leg["construct_s"] + leg["exec_s"], 3)
+
+
 def main() -> None:
+    from etl_master_spark import memo
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
     spark = get_spark(app_name="etl_master_spark_bench")
-    # warm the JVM once so per-query times measure the engine, not
-    # first-touch costs: parquet footer machinery, then every benched
-    # query once at sf0.001 (whole-stage codegen compile, broadcast and
-    # window operator init are per-plan-shape, not per-data-size)
+    # warm the JVM once so per-query times measure the engine: parquet
+    # footer machinery, then every benched query once at WARM_DIR
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     errors: dict[str, str] = {}
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and warm_dir != SF_DIR:
-        for name in BENCH_QUERIES:
-            # a single broken query must never zero the whole benchmark
-            # (round 1 lost its BENCH artifact to one AnalysisException)
-            try:
-                _force(QUERIES[name](spark, warm_dir))
-            except Exception as e:  # noqa: BLE001
-                errors[name] = str(e).splitlines()[0][:200]
-                print(f"WARM FAIL {name}: {errors[name]}", file=sys.stderr)
+    if os.path.isdir(WARM_DIR) and WARM_DIR != SF_DIR:
+        errors.update(warm(spark, BENCH_QUERIES))
         spark.catalog.clearCache()
 
     # three interleaved timed passes, keep the per-query minimum: the host's
@@ -258,17 +332,12 @@ def main() -> None:
         for name in BENCH_QUERIES:
             if name in errors:
                 continue
-            fn = QUERIES[name]
-            t0 = time.time()
-            try:
-                _force(fn(spark, SF_DIR))
-            except Exception as e:  # noqa: BLE001
-                errors[name] = str(e).splitlines()[0][:200]
+            leg = timed(spark, QUERIES[name], SF_DIR)
+            if leg["error"]:
+                errors[name] = leg["error"]
                 print(f"BENCH FAIL {name}: {errors[name]}", file=sys.stderr)
                 continue
-            elapsed = round(time.time() - t0, 3)
-            if name not in timings or elapsed < timings[name]:
-                timings[name] = elapsed
+            timings[name] = min(wall(leg), timings.get(name, float("inf")))
 
     # Memo-honest cold twins (r6 verdict item 6): the interleaved passes'
     # min() reads the memo-WARM cost of every face behind a session memo —
@@ -276,8 +345,6 @@ def main() -> None:
     # what a fresh session pays. Clear each memo and time one
     # representative face once, reported as its own _cold key (NOT added
     # to the headline total, which stays the memo-warm pipeline).
-    from etl_master_spark import memo
-
     cold: dict[str, float] = {}
     for memo_name, name in {
         "negatives_reject": "negatives_sample_reject",
@@ -285,13 +352,12 @@ def main() -> None:
         "pq_append_codebook": "pq_index_append",
         "kmeans_train": "kmeans_embeddings",
     }.items():
-        try:
-            memo.clear(memo_name)
-            t0 = time.time()
-            _force(QUERIES[name](spark, SF_DIR))
-            cold[f"{name}_cold"] = round(time.time() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            errors[f"{name}_cold"] = str(e).splitlines()[0][:200]
+        memo.clear(memo_name)
+        leg = timed(spark, QUERIES[name], SF_DIR)
+        if leg["error"]:
+            errors[f"{name}_cold"] = leg["error"]
+        else:
+            cold[f"{name}_cold"] = wall(leg)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:

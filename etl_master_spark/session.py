@@ -13,6 +13,7 @@ nanos→micros, and so do we, keeping the two engines bit-identical).
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -38,7 +39,12 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     if key in _SHIPPED_SESSIONS:
         return
     pkg_dir = Path(__file__).resolve().parent
-    zip_base = Path(tempfile.gettempdir()) / "etl_master_spark_pyfiles"
+    # one directory per session: two sessions zipping to one shared path
+    # overwrite each other's zip, and Spark then refuses the fetch because
+    # the file no longer matches what was added
+    zip_dir = tempfile.mkdtemp(prefix="etl_master_spark_")
+    atexit.register(shutil.rmtree, zip_dir, True)
+    zip_base = Path(zip_dir) / "etl_master_spark_pyfiles"
     zip_path = shutil.make_archive(str(zip_base), "zip", pkg_dir.parent, pkg_dir.name)
     spark.sparkContext.addPyFile(zip_path)
     _SHIPPED_SESSIONS.add(key)

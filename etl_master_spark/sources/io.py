@@ -197,7 +197,12 @@ def with_ratings_cte(body: str) -> str:
 
 def ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The long-form ratings table (user_id, item_id, domain)."""
-    ev = load_table(spark, sf_dir, "events")
+    return ratings_of(load_table(spark, sf_dir, "events"))
+
+
+def ratings_of(ev: DataFrame) -> DataFrame:
+    """events -> distinct (user_id, item_id, domain): the one rule, shared
+    by the batch ``ratings`` table and the streaming evaluator's batches."""
     return (
         ev.select(
             "user_id",

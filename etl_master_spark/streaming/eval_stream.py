@@ -82,26 +82,9 @@ from ..operators.recsplit import (
     negatives_from_shuffled,
     splits_from_shuffled,
 )
+from ..sources.io import ratings_of
 
 _UD = ["user_id", "domain"]
-
-
-def _ratings_of(ev: DataFrame) -> DataFrame:
-    """events -> distinct (user_id, item_id, domain); must mirror
-    ``sources.io.ratings`` exactly (same regexp, same domain mapping)."""
-    return (
-        ev.select(
-            "user_id",
-            F.regexp_extract("props", r"([0-9]+)", 1)
-            .cast("bigint")
-            .alias("item_id"),
-            F.when(F.col("event_type").isin("click", "view"), F.lit("x"))
-            .otherwise(F.lit("y"))
-            .alias("domain"),
-        )
-        .distinct()
-    )
-
 
 N_CAND_BUCKETS = 64
 
@@ -367,7 +350,7 @@ def make_batch_processor(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         prefix_old = state.read_chunks("prefix", epoch_id)
-        ratings_b = _ratings_of(batch_df)
+        ratings_b = ratings_of(batch_df)
         if prefix_old is not None:
             new = ratings_b.join(
                 prefix_old, ["user_id", "item_id", "domain"], "left_anti"

@@ -1,86 +1,81 @@
 """Per-query profile: split each benched query's wall time into
 DataFrame CONSTRUCTION (registry call — driver-side Python + py4j +
 analysis) and EXECUTION (noop sink), and count the Spark jobs each
-execution launches (scheduling overhead is per-job, so a query that
-runs N actions pays N× the fixed local-mode latency).
+leg launches (scheduling overhead is per-job, so a query that runs N
+actions pays N× the fixed local-mode latency). Every leg is one
+``bench.timed`` call after ``bench.warm``, the bench.py protocol.
 
-Usage: python tools/profile_queries.py [substr ...]   # filter by name
+It is also the same-session A/B: run it on two variants of the tree
+back to back with ``--passes N`` and compare the mins, free of
+session-boot noise. Caveat: session memos (etl_master_spark/memo.py)
+survive clearCache(), so for a memoized query every pass after the
+first reads the memo-WARM cost; bench.py's ``cold`` twins measure the
+cold one.
+
+Usage: python tools/profile_queries.py [--passes N] [name ...]
+  each argument is a substring filter over bench.BENCH_QUERIES (none: all
+  of them); a registered query outside that list is selected by its name.
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
-Output: one line per query
-    name  construct_s  exec_s  jobs  passes
-and a JSON dump to /tmp/profile_queries.json for diffing.
+Output: every pass of every query, then its min,
+    name  construct_s  exec_s  jobs  pass
+the construct/exec totals of the mins, and a JSON dump of each query's
+min pass to /tmp/profile_queries.json for diffing.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
-import os
 import sys
-import time
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent.parent)
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench
 
 
 def main() -> None:
-    import bench
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--passes", type=int, default=2)
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
-    subs = [a for a in sys.argv[1:] if not a.startswith("-")]
     names = [
         n
         for n in bench.BENCH_QUERIES
-        if not subs or any(s in n for s in subs)
-    ]
+        if not args.names or any(s in n for s in args.names)
+    ] + [n for n in args.names if n in QUERIES and n not in bench.BENCH_QUERIES]
     spark = get_spark(app_name="profile_queries")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    # warm like bench.py: every selected query once at sf0.001
-    warm = "/root/testdata/sf0.001"
-    for n in names:
-        try:
-            bench._force(QUERIES[n](spark, warm))
-        except Exception as e:  # noqa: BLE001
-            print(f"WARM FAIL {n}: {e}", file=sys.stderr)
+    bench.warm(spark, names)
     spark.catalog.clearCache()
 
-    out = {}
-    print(f"{'query':42s} {'constr':>7s} {'exec':>7s} {'jobs':>5s}")
-    for n in names:
-        best = None
-        for p in range(2):
-            # CONSTRUCTION can itself launch jobs (localCheckpoint,
-            # convergence counts) — count them in the same group
-            grp = f"profile_{n}_{p}"
-            sc.setJobGroup(grp, n)
-            t0 = time.time()
-            df = QUERIES[n](spark, SF_DIR)
-            t1 = time.time()
-            bench._force(df)
-            t2 = time.time()
-            sc.setJobGroup(None, None)
-            jobs = len(tracker.getJobIdsForGroup(grp) or [])
-            rec = {
-                "construct_s": round(t1 - t0, 3),
-                "exec_s": round(t2 - t1, 3),
-                "jobs": jobs,
-            }
-            if best is None or rec["construct_s"] + rec["exec_s"] < (
-                best["construct_s"] + best["exec_s"]
-            ):
-                best = rec
-        out[n] = best
+    def show(n: str, leg: dict, tag: str) -> None:
         print(
-            f"{n:42s} {best['construct_s']:7.3f} {best['exec_s']:7.3f}"
-            f" {best['jobs']:5d}"
+            f"{n:42s} {leg['construct_s']:7.3f} {leg['exec_s']:7.3f}"
+            f" {leg['jobs']:5d}  {tag}"
         )
+
+    out = {}
+    print(f"{'query':42s} {'constr':>7s} {'exec':>7s} {'jobs':>5s}  pass")
+    for n in names:
+        legs = []
+        for p in range(args.passes):
+            leg = bench.timed(spark, QUERIES[n], bench.SF_DIR)
+            if leg["error"]:
+                print(f"FAIL {n}: {leg['error']}", file=sys.stderr)
+                break
+            legs.append(leg)
+            show(n, leg, str(p + 1))
+        if legs:
+            out[n] = min(legs, key=bench.wall)
+            del out[n]["error"]
+            show(n, out[n], f"min {bench.wall(out[n]):.3f}")
     tot_c = sum(v["construct_s"] for v in out.values())
     tot_e = sum(v["exec_s"] for v in out.values())
     print(f"{'TOTAL':42s} {tot_c:7.3f} {tot_e:7.3f}")

@@ -18,13 +18,22 @@ Skips (all recorded as ledger rows):
 - exact pairwise MMD (mmd_rbf, mmd_rbf_multiscale): O(n²) by contract;
   the scale path is mmd_rbf_fast (BLAS Gram blocks, measured ×100 r5).
 
-Timing protocol matches bench.py: full evaluation through the noop sink
-(count() lets Catalyst prune cardinality-preserving operators — the round-7
-event_gaps lesson), plan shapes warmed once at sf0.001, one measured run
-per scale (the ledger flags ratios, not absolute jitter; anything flagged
-gets a best-of-2 re-measure before it is believed). Queries run
-cheapest-first (by the BENCH_DETAIL ×1 ordering) so the ledger fills fast
-and an interrupted run still covers most of the registry.
+Every leg is one ``bench.timed`` call after ``bench.warm``: construction
+plus full evaluation through the noop sink (count() lets Catalyst prune
+cardinality-preserving operators — the round-7 event_gaps lesson), plan
+shapes warmed once at ``bench.WARM_DIR``. How a query is measured follows
+from the ledger:
+
+- no row yet: one measured run per scale, a triage row (the ledger flags
+  ratios, not absolute jitter);
+- a NAMED query that already has a row: re-measured best-of-2 per scale,
+  its row replaced and marked ``"protocol": "best-of-2"`` — what anything
+  flagged gets before it is believed, and what a fixed query gets for its
+  post-fix numbers.
+
+Queries run cheapest-first (by the BENCH_DETAIL ×1 ordering) so the ledger
+fills fast and an interrupted run still covers most of the registry; the
+ledger is rewritten atomically after every query.
 
 A watchdog cancels any single (construction + evaluation) that exceeds
 --timeout seconds (default 900) via job-group cancel and records a
@@ -33,7 +42,8 @@ exactly the superlinear smoke this sweep exists to surface.
 
 Usage: python tools/scale_sweep.py [--mult N] [--timeout S] [query ...]
   default: all registered queries not yet in the ledger
-  (SCALE_SWEEP.jsonl at the repo root; delete a line to re-measure it).
+  (SCALE_SWEEP.jsonl at the repo root); name a query to re-measure it.
+Env:   SPARK_GRAFT_SF_DIR (the ×1 base, default /root/testdata/sf0.1)
 """
 
 from __future__ import annotations
@@ -41,8 +51,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import threading
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -74,42 +82,97 @@ SKIP_REASONS = {
 }
 
 
-def _timed(spark, fn, sf: str, timeout: float):
-    """(construction + noop evaluation) under a job-group watchdog.
-
-    Construction is included on purpose: iterative kernels (LPA, k-core,
-    rejection sampling) launch jobs while BUILDING the frame, and those
-    jobs are the scale cost being measured."""
-    sc = spark.sparkContext
-    group = f"sweep-{time.monotonic_ns()}"
-    timed_out = threading.Event()
-
-    def cancel() -> None:
-        timed_out.set()
-        sc.cancelJobGroup(group)
-
-    sc.setJobGroup(group, group, interruptOnCancel=True)
-    watchdog = threading.Timer(timeout, cancel)
-    watchdog.start()
-    t0 = time.time()
-    try:
-        bench._force(fn(spark, sf))
-        elapsed = round(time.time() - t0, 3)
-        # cancelJobGroup only interrupts jobs ACTIVE when the timer fired;
-        # if it fired during a driver-side gap of an iterative kernel the
-        # remaining jobs run to completion — still a timeout, record it
-        # (previously such a row said status=ok with wall > timeout)
-        if timed_out.is_set() or elapsed > timeout:
-            return None, f"timeout>{timeout:.0f}s (ran {elapsed:.0f}s)"
-        return elapsed, None
-    except Exception as exc:  # noqa: BLE001 - recorded, not swallowed
-        if timed_out.is_set():
-            return None, f"timeout>{timeout:.0f}s"
-        return None, f"{type(exc).__name__}: {exc}"[:300]
-    finally:
-        watchdog.cancel()
-        sc.setJobGroup("", "")
+def best_of(spark, fn, sf: str, passes: int, timeout: float):
+    """(best_sec, err): the min of ``passes`` watchdogged legs; the first
+    error short-circuits (a hung query costs one timeout, not two)."""
+    times = []
+    for _ in range(passes):
+        leg = bench.timed(spark, fn, sf, timeout)
         spark.catalog.clearCache()
+        if leg["error"]:
+            return None, leg["error"]
+        times.append(bench.wall(leg))
+    return min(times), None
+
+
+def ledger_row(name, mult, x1, err1, xn, errn, passes=1) -> dict:
+    """One ledger row from the ×1 and ×N legs."""
+    row = {"query": name, "status": "ok", "x1": x1, f"x{mult}": xn}
+    if passes > 1:
+        row["protocol"] = f"best-of-{passes}"
+    if err1 or errn:
+        # per-leg records: when the legs fail DIFFERENTLY (x1 raises,
+        # xN times out) one summary field alone would label the row with
+        # one status while showing the other leg's unrelated message
+        if err1:
+            row["err1"] = err1
+        if errn:
+            row["errn"] = errn
+        legs = [e for e in (err1, errn) if e]
+        row["status"] = (
+            "timeout" if any(e.startswith("timeout") for e in legs)
+            else "error"
+        )
+        row["error"] = errn or err1  # back-compat summary field
+    elif x1 and xn:
+        # a sub-millisecond best time rounds to 0.0: omit the ratio
+        # rather than divide by it
+        row["ratio"] = round(xn / x1, 2)
+    return row
+
+
+def load_ledger() -> dict[str, dict]:
+    if not LEDGER.exists():
+        return {}
+    rows = (json.loads(l) for l in LEDGER.read_text().splitlines() if l.strip())
+    return {r["query"]: r for r in rows}
+
+
+def write_ledger(rows: dict[str, dict]) -> None:
+    """Atomic rewrite, after every query: a later hang loses nothing done."""
+    tmp = LEDGER.with_suffix(".jsonl.tmp")
+    tmp.write_text("".join(json.dumps(r) + "\n" for r in rows.values()))
+    tmp.replace(LEDGER)
+
+
+def sweep(spark, names, named: bool, mult: int, sf_n: str, timeout: float):
+    """Measure ``names`` into the ledger. A query without a row gets the
+    single-shot triage row; a NAMED query that has one is re-measured
+    best-of-2 and its row replaced; an unnamed one keeps its row."""
+    from etl_master_spark.plans.registry import QUERIES
+
+    rows = load_ledger()
+
+    def record(row: dict) -> None:
+        rows[row["query"]] = row
+        write_ledger(rows)
+        print(json.dumps(row), flush=True)
+
+    for name in names:
+        if name in SKIP_REASONS:
+            if name not in rows:
+                record(
+                    {"query": name, "status": "skipped",
+                     "reason": SKIP_REASONS[name]}
+                )
+            continue
+        if name in rows and not named:
+            continue
+        passes = 2 if name in rows else 1
+        # warm the plan shape (analysis + codegen) at the tiny SF so the
+        # measured runs time execution, not first-query JVM warmup
+        err = bench.warm(spark, [name]).get(name)
+        spark.catalog.clearCache()
+        if err:
+            row = {"query": name, "status": "error", "stage": "warm",
+                   "error": err}
+            if passes > 1:
+                row["protocol"] = f"best-of-{passes}"
+            record(row)
+            continue
+        x1, err1 = best_of(spark, QUERIES[name], BASE_SF, passes, timeout)
+        xn, errn = best_of(spark, QUERIES[name], sf_n, passes, timeout)
+        record(ledger_row(name, mult, x1, err1, xn, errn, passes))
 
 
 def main() -> None:
@@ -122,12 +185,6 @@ def main() -> None:
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
-    done = set()
-    if LEDGER.exists():
-        for line in LEDGER.read_text().splitlines():
-            if line.strip():
-                done.add(json.loads(line)["query"])
-
     names = args.names or list(QUERIES)
     # cheapest-first by the bench detail's ×1 times so the ledger fills fast
     detail = REPO / "BENCH_DETAIL.json"
@@ -138,52 +195,7 @@ def main() -> None:
 
     sf_n = build_replica(args.mult)
     spark = get_spark(app_name="scale_sweep")
-
-    def record(row: dict) -> None:
-        with LEDGER.open("a") as fh:
-            fh.write(json.dumps(row) + "\n")
-        print(json.dumps(row), flush=True)
-
-    for name in names:
-        if name in done:
-            continue
-        if name in SKIP_REASONS:
-            record(
-                {"query": name, "status": "skipped",
-                 "reason": SKIP_REASONS[name]}
-            )
-            continue
-        # warm the plan shape (analysis + codegen) at the tiny SF so the
-        # measured runs time execution, not first-query JVM warmup
-        try:
-            bench._force(QUERIES[name](spark, "/root/testdata/sf0.001"))
-        except Exception as exc:  # noqa: BLE001
-            record(
-                {"query": name, "status": "error",
-                 "stage": "warm", "error": str(exc)[:300]}
-            )
-            continue
-        spark.catalog.clearCache()
-        x1, err1 = _timed(spark, QUERIES[name], BASE_SF, args.timeout)
-        xn, errn = _timed(spark, QUERIES[name], sf_n, args.timeout)
-        row = {"query": name, "status": "ok", "x1": x1, f"x{args.mult}": xn}
-        if err1 or errn:
-            # per-leg records: when the legs fail DIFFERENTLY (x1 raises,
-            # xN times out) the ledger used to label the row with one
-            # status while showing the other leg's unrelated message
-            if err1:
-                row["err1"] = err1
-            if errn:
-                row["errn"] = errn
-            legs = [e for e in (err1, errn) if e]
-            row["status"] = (
-                "timeout" if any(e.startswith("timeout") for e in legs)
-                else "error"
-            )
-            row["error"] = errn or err1  # back-compat summary field
-        elif x1 and xn:
-            row["ratio"] = round(xn / x1, 2)
-        record(row)
+    sweep(spark, names, bool(args.names), args.mult, sf_n, args.timeout)
 
 
 if __name__ == "__main__":

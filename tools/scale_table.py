@@ -25,7 +25,9 @@ surface). Replicas are key-shifted unions:
   catalog and time range — per-hour density grows ×N while per-user
   history stays realistic.
 
-Other tables are copied through unchanged so `load_table` works.
+Other tables are copied through unchanged so `load_table` works. Each
+replica is cached under WORK, keyed by its base dir and its tag, and is
+shared by scale_sweep.py and scale_crossover.py.
 
 LIMIT: events.user_id is shifted per copy while customer/orders keys are
 NOT, so any query joining events.user_id to customer keys (e.g.
@@ -36,6 +38,9 @@ are listed in ``REPLICA_UNSUPPORTED`` and the tool refuses to run them
 
 Usage: python tools/scale_table.py [mult] [query ...]
   default: mult=100, queries = the quadratic-risk family.
+Env:   SPARK_GRAFT_SF_DIR (the ×1 base, default /root/testdata/sf0.1)
+Each query is warmed and timed by bench.warm / bench.timed, min of 2
+passes per scale.
 Prints one JSON line: {"mult": N, "queries": {name: {"x1": s, "xN": s}}}
 
 --zipf (r6 verdict item 4): builds a SKEWED ×N events replica — same
@@ -56,6 +61,7 @@ Usage: python tools/scale_table.py --zipf [mult] [query ...]
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -98,9 +104,26 @@ ZIPF_PCT = int(os.environ.get("SCALE_ZIPF_PCT", "3"))
 REPLICA_UNSUPPORTED = {"deletion_cascade_audit", "purchase_click_attribution"}
 
 
+def scale_tag(mult: int, zipf: bool = False) -> str:
+    """``x{mult}``; a zipf replica's tag carries ZIPF_PCT when it is not
+    the default, so 3%- and 30%-head runs stay apart on disk and in the
+    printed artifact."""
+    if not zipf:
+        return f"x{mult}"
+    return f"x{mult}_zipf" if ZIPF_PCT == 3 else f"x{mult}_zipf{ZIPF_PCT}"
+
+
+def replica_dir(mult: int, zipf: bool = False) -> Path:
+    """The cache dir of one replica of BASE_SF, keyed by the base dir as
+    well as the tag: a replica of sf0.1 must never be served for an sf0.01
+    base."""
+    base = str(Path(BASE_SF).resolve())
+    digest = hashlib.sha1(base.encode()).hexdigest()[:10]
+    return WORK / f"{Path(base).name}-{digest}" / scale_tag(mult, zipf)
+
+
 def build_replica(mult: int, zipf: bool = False) -> str:
-    tag = f"x{mult}_zipf" if ZIPF_PCT == 3 else f"x{mult}_zipf{ZIPF_PCT}"
-    out = WORK / (tag if zipf else f"x{mult}")
+    out = replica_dir(mult, zipf)
     if (out / "embeddings.parquet").exists():
         return str(out)
     out.mkdir(parents=True, exist_ok=True)
@@ -110,7 +133,7 @@ def build_replica(mult: int, zipf: bool = False) -> str:
     def shift(table: str, col: str) -> int:
         """Key shift per copy = next power of 10 above the observed max id
         times the copy count — a FIXED shift silently collides once
-        BASE_SF grows past it (copy k's ids overlapping copy k+1's turns
+        the base grows past it (copy k's ids overlapping copy k+1's turns
         the replica into a dup-density corpus, the failure mode this
         module's docstring recounts for documents)."""
         mx = con.execute(
@@ -294,32 +317,26 @@ def main() -> None:
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
-    sf_n = build_replica(mult)
-    sf_z = build_replica(mult, zipf=True) if zipf else None
+    scales = [("x1", BASE_SF), (scale_tag(mult), build_replica(mult))]
+    if zipf:
+        scales.append((scale_tag(mult, True), build_replica(mult, True)))
     spark = get_spark(app_name="scale_table")
 
     # warm plan shapes at the small scale
-    for name in names:
-        bench._force(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    failed = bench.warm(spark, names)
+    if failed:
+        raise SystemExit(f"scale_table: warm-up failed: {failed}")
     spark.catalog.clearCache()
 
-    scales = [("x1", BASE_SF), (f"x{mult}", sf_n)]
-    if zipf:
-        # the tag carries ZIPF_PCT (when non-default) so 3%- and 30%-head
-        # runs stay distinguishable in the printed artifact
-        ztag = (
-            f"x{mult}_zipf" if ZIPF_PCT == 3 else f"x{mult}_zipf{ZIPF_PCT}"
-        )
-        scales.append((ztag, sf_z))
     out: dict[str, dict[str, float]] = {n: {} for n in names}
     for tag, sf in scales:
         for _ in range(2):  # min of 2 warm passes (bench.py protocol)
             for name in names:
-                t0 = time.time()
-                bench._force(QUERIES[name](spark, sf))
-                e = round(time.time() - t0, 2)
-                if tag not in out[name] or e < out[name][tag]:
-                    out[name][tag] = e
+                leg = bench.timed(spark, QUERIES[name], sf)
+                if leg["error"]:
+                    raise SystemExit(f"scale_table: {name} {tag}: {leg['error']}")
+                e = round(bench.wall(leg), 2)
+                out[name][tag] = min(e, out[name].get(tag, e))
                 spark.catalog.clearCache()
     result = {"mult": mult, "sf": BASE_SF, "queries": out}
     if zipf:
@@ -327,7 +344,7 @@ def main() -> None:
         probe: dict[str, float] = {}
         for variant in ("none", "aqe", "salted"):
             for _ in range(2):
-                e = _join_probe(spark, sf_z, variant)
+                e = _join_probe(spark, scales[-1][1], variant)
                 if variant not in probe or e < probe[variant]:
                     probe[variant] = e
         result["join_probe_zipf"] = probe
