@@ -13,18 +13,6 @@ from hypothesis import strategies as st
 
 from etl_master_spark.operators.recsplit import N_NEGATIVES, negatives_of, splits_of
 
-_spark = None
-
-
-def _get_spark():
-    global _spark
-    if _spark is None:
-        from etl_master_spark.session import get_spark
-
-        _spark = get_spark(app_name="etl_master_spark_props", shuffle_partitions=4)
-    return _spark
-
-
 ratings_tables = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=6),  # user_id
@@ -37,8 +25,8 @@ ratings_tables = st.lists(
 )
 
 
-def _df(rows):
-    return _get_spark().createDataFrame(
+def _df(spark, rows):
+    return spark.createDataFrame(
         rows, "user_id long, item_id long, domain string"
     )
 
@@ -47,12 +35,12 @@ def _df(rows):
     max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
 @given(ratings_tables)
-def test_split_invariants(rows):
+def test_split_invariants(spark, rows):
     ratings = defaultdict(set)
     for u, i, d in rows:
         ratings[(u, d)].add(i)
     got = defaultdict(lambda: defaultdict(list))
-    for r in splits_of(_df(rows)).collect():
+    for r in splits_of(_df(spark, rows)).collect():
         got[(r["user_id"], r["domain"])][r["split"]].append(r["item_id"])
     assert set(got) == set(ratings)
     for key, items in ratings.items():
@@ -74,14 +62,14 @@ def test_split_invariants(rows):
     max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
 @given(ratings_tables)
-def test_negative_invariants(rows):
+def test_negative_invariants(spark, rows):
     seen = defaultdict(set)
     universe = defaultdict(set)
     for u, i, d in rows:
         seen[(u, d)].add(i)
         universe[d].add(i)
     got = defaultdict(list)
-    for r in negatives_of(_df(rows)).collect():
+    for r in negatives_of(_df(spark, rows)).collect():
         got[(r["user_id"], r["domain"])].append((r["rank"], r["item_id"]))
     assert set(got) <= set(seen)
     for key, ranked in got.items():
@@ -102,7 +90,7 @@ def test_negative_invariants(rows):
     max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
 @given(ratings_tables, st.sampled_from([(5, 2), (8, 3)]))
-def test_sample_reject_matches_round_oracle(rows, params):
+def test_sample_reject_matches_round_oracle(spark, rows, params):
     """The flat reject sampler equals the round-chained DuckDB oracle on
     ANY ratings table. Small n and few rounds over a ≤ 21-item catalog
     reach later rounds, the exact top-up and exhausted users."""
@@ -117,7 +105,7 @@ def test_sample_reject_matches_round_oracle(rows, params):
     got = sorted(
         (x["user_id"], x["item_id"], x["domain"], x["rank"])
         for x in negatives_sample_reject(
-            _df(rows), n=n, max_rounds=max_rounds
+            _df(spark, rows), n=n, max_rounds=max_rounds
         ).collect()
     )
     values = ", ".join(f"({u}, {i}, '{d}')" for u, i, d in rows)
@@ -154,7 +142,7 @@ eval_groups = st.lists(
     max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
 @given(eval_groups, st.sampled_from([[1], [1, 3], [2, 5, 10]]))
-def test_eval_from_scores_matches_sql_on_ties_and_missing(groups, ks):
+def test_eval_from_scores_matches_sql_on_ties_and_missing(spark, groups, ks):
     """``eval_from_scores`` equals the frozen-eval oracle's SQL (candidate
     assembly + the shared ROW_NUMBER metrics tail) in DuckDB over the same
     frames, on score ties (item_id breaks them) and unscored candidates
@@ -186,7 +174,6 @@ def test_eval_from_scores_matches_sql_on_ties_and_missing(groups, ks):
             for k in ("hold", "negs")
         },
     }
-    spark = _get_spark()
     sdf = {
         k: spark.createDataFrame(
             rows[k], "user_id long, item_id long, domain string"
