@@ -9,12 +9,11 @@ Spark-first translation of the training loop:
   (``main_my.py:81-88`` — its scalability wall). Here a user's multi-hot row
   exists ONLY inside an Arrow batch, rebuilt on the fly from item-index
   arrays; nothing user×item-shaped ever materializes globally.
-- Each epoch, executors compute BCE partial gradients over their batches
-  (numpy BLAS), the driver sums O(n_items×emb) blocks and steps, then
-  re-broadcasts — the same partial-gradient loop as
-  ``crossdomain.fit_mlp_map``. Weight size bounds the method at
-  n_items ≈ 10⁶ per domain (W broadcast); past that, shard the decoder by
-  item range (same loop, per-shard blocks).
+- Each epoch is one ``reduce.batch_sums`` pass: executors compute BCE
+  partial gradients over their batches (numpy BLAS), the driver sums
+  O(n_items×emb) blocks and steps, then re-broadcasts. Weight size bounds
+  the method at n_items ≈ 10⁶ per domain (W broadcast); past that, shard
+  the decoder by item range (same pass, per-shard blocks).
 - Denoising dropout (reference p=0.5, ``model_my.py:44``) uses a
   deterministic integer-hash mask over (user, item-index, epoch) — same
   regularization effect, replayable on any partitioning, no RNG state on
@@ -36,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.recsplit import SplitData, split_data
-from .reduce import tree_collect
+from .reduce import batch_sums
 from .scoring import (
     DOMAINS, decoder_frame, dot_scores, evaluate, load_params, save_params,
 )
@@ -71,12 +70,27 @@ def _train_frame(data: SplitData, domain: str) -> dict:
     return {"per_user": per_user, "items": items, "n_items": items.count()}
 
 
-def _multi_hot(pdf: pd.DataFrame, n_items: int) -> tuple[np.ndarray, np.ndarray]:
+def _multi_hot(
+    pdf: pd.DataFrame, n_items: int, col: str = "idxs"
+) -> tuple[np.ndarray, np.ndarray]:
+    """(user ids, multi-hot rows) of one batch's item-index column ``col``."""
     users = pdf["user_id"].to_numpy(dtype="int64")
     x = np.zeros((len(pdf), n_items), dtype=np.float64)
-    for row, idxs in enumerate(pdf["idxs"]):
+    for row, idxs in enumerate(pdf[col]):
         x[row, np.asarray(idxs, dtype="int64")] = 1.0
     return users, x
+
+
+def _dropout_mask(users: np.ndarray, n_items: int, tick: int) -> np.ndarray:
+    """The deterministic denoising mask (True = dropped): DROPOUT_NUM/DEN
+    of each user's inputs by an integer hash of (user, item index, tick),
+    independent of partitioning."""
+    h = (
+        users[:, None] * 2654435761
+        + np.arange(n_items)[None, :] * 40503
+        + tick * 97
+    ) % DROPOUT_DEN
+    return h < DROPOUT_NUM
 
 
 def train(
@@ -94,79 +108,46 @@ def train(
     return {
         "data": data,
         **{
-            d: _train(spark, _train_frame(data, d), emb, epochs, lr, seed)
+            d: _train(_train_frame(data, d), emb, epochs, lr, seed)
             for d in DOMAINS
         },
     }
 
 
-def _train(
-    spark: SparkSession, frames: dict, emb: int, epochs: int, lr: float,
-    seed: int,
-) -> dict:
+def _train(frames: dict, emb: int, epochs: int, lr: float, seed: int) -> dict:
     n_items = frames["n_items"]
     per_user = frames["per_user"].persist()
     n_users = per_user.count()
     rng = np.random.default_rng(seed)
     w1 = rng.normal(0.0, 0.01, (n_items, emb))
     w2 = rng.normal(0.0, 0.01, (emb, n_items))
+
+    def batch(pdf: pd.DataFrame, params: tuple) -> dict:
+        p1, p2, epoch = params
+        users, x = _multi_hot(pdf, n_items)
+        x_noisy = np.where(_dropout_mask(users, n_items, epoch), 0.0, x)
+        z_pre = x_noisy @ p1
+        z = np.maximum(z_pre, 0.0)
+        p = 1.0 / (1.0 + np.exp(-(z @ p2)))
+        # BCE against the CLEAN row (denoising objective)
+        loss = float(
+            -(
+                x * np.log(np.clip(p, 1e-12, None))
+                + (1.0 - x) * np.log(np.clip(1.0 - p, 1e-12, None))
+            ).sum()
+        )
+        r = p - x
+        gz = r @ p2.T
+        gz[z_pre <= 0.0] = 0.0
+        return {"g1": x_noisy.T @ gz, "g2": z.T @ r, "loss": loss}
+
     losses: list[float] = []
     try:
         for epoch in range(epochs):
-            bw = spark.sparkContext.broadcast({"w1": w1, "w2": w2})
-
-            def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                p1, p2 = bw.value["w1"], bw.value["w2"]
-                g1 = np.zeros_like(p1)
-                g2 = np.zeros_like(p2)
-                loss = 0.0
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    users, x = _multi_hot(pdf, n_items)
-                    # deterministic denoising mask: drop DROPOUT_NUM/DEN of
-                    # each user's live inputs, independent of partitioning
-                    h = (
-                        users[:, None] * 2654435761
-                        + np.arange(n_items)[None, :] * 40503
-                        + epoch * 97
-                    ) % DROPOUT_DEN
-                    x_noisy = np.where(h < DROPOUT_NUM, 0.0, x)
-                    z_pre = x_noisy @ p1
-                    z = np.maximum(z_pre, 0.0)
-                    logits = z @ p2
-                    p = 1.0 / (1.0 + np.exp(-logits))
-                    # BCE against the CLEAN row (denoising objective)
-                    loss += float(
-                        -(
-                            x * np.log(np.clip(p, 1e-12, None))
-                            + (1.0 - x) * np.log(np.clip(1.0 - p, 1e-12, None))
-                        ).sum()
-                    )
-                    r = p - x
-                    g2 += z.T @ r
-                    gz = r @ p2.T
-                    gz[z_pre <= 0.0] = 0.0
-                    g1 += x_noisy.T @ gz
-                yield pd.DataFrame(
-                    {
-                        "g1": [g1.ravel().tolist()],
-                        "g2": [g2.ravel().tolist()],
-                        "loss": [loss],
-                    }
-                )
-
-            partials = tree_collect(
-                per_user.mapInPandas(
-                    part, "g1 array<double>, g2 array<double>, loss double"
-                )
-            )
-            bw.unpersist()
-            g1 = sum(np.array(p["g1"]) for p in partials).reshape(w1.shape)
-            g2 = sum(np.array(p["g2"]) for p in partials).reshape(w2.shape)
-            w1 -= lr * g1 / n_users
-            w2 -= lr * g2 / n_users
-            losses.append(sum(p["loss"] for p in partials) / n_users)
+            sums = batch_sums(per_user, batch, (w1, w2, epoch))
+            w1 -= lr * sums["g1"] / n_users
+            w2 -= lr * sums["g2"] / n_users
+            losses.append(float(sums["loss"]) / n_users)
     finally:
         per_user.unpersist()
     return {**frames, "W1": w1, "W2": w2, "losses": losses}

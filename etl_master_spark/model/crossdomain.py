@@ -9,11 +9,11 @@ ablation variants: shared W/Wᵀ, independent W1/W2, and a 2-layer MLP
 enum here).
 
 Spark-first fit: the closed-form ridge solution W = (XᵀX + λI)⁻¹ XᵀY needs
-only the E×E Gram matrices — computed DISTRIBUTEDLY by summing per-row outer
-products via mapInPandas partial sums (numpy BLAS per Arrow batch), then a
-tiny E×E solve on the driver. No row data ever leaves the executors; driver
-traffic is O(E²), independent of user count — the pattern that scales to
-100 TB of embeddings.
+only the E×E Gram matrices — computed DISTRIBUTEDLY by summing per-batch
+outer products in one ``reduce.batch_sums`` pass (numpy BLAS per Arrow
+batch), then a tiny E×E solve on the driver. No row data ever leaves the
+executors; driver traffic is O(E²), independent of user count — the
+pattern that scales to 100 TB of embeddings.
 
 Inverse-consistency metric (reference T7, ``model_my.py:67-70``):
 mean ‖zx − (zx·W)·Wᵀ‖₁ as a one-pass DataFrame aggregation.
@@ -29,34 +29,24 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .reduce import tree_collect
+from .reduce import batch_sums
 
 Strategy = Literal["shared", "two_maps", "mlp"]
 
 
+def _gram_batch(pdf: pd.DataFrame, _: None) -> dict:
+    x = np.array(pdf["x"].tolist(), dtype=np.float64)
+    y = np.array(pdf["y"].tolist(), dtype=np.float64)
+    return {"xtx": x.T @ x, "xty": x.T @ y}
+
+
 def _gram_sums(pairs: DataFrame, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """Distributed XᵀX and XᵀY over a DataFrame of (x ARRAY, y ARRAY) rows:
-    per-partition BLAS partial sums, driver-side reduce of E×E blocks."""
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xtx = np.zeros((dim, dim))
-        xty = np.zeros((dim, dim))
-        for pdf in batches:
-            x = np.array(pdf["x"].tolist(), dtype=np.float64)
-            y = np.array(pdf["y"].tolist(), dtype=np.float64)
-            if len(x):
-                xtx += x.T @ x
-                xty += x.T @ y
-        yield pd.DataFrame(
-            {"xtx": [xtx.ravel().tolist()], "xty": [xty.ravel().tolist()]}
-        )
-
-    parts = tree_collect(
-        pairs.mapInPandas(part, "xtx array<double>, xty array<double>")
-    )
-    xtx = sum(np.array(r["xtx"]).reshape(dim, dim) for r in parts)
-    xty = sum(np.array(r["xty"]).reshape(dim, dim) for r in parts)
-    return xtx, xty
+    per-batch BLAS partial sums, driver-side reduce of E×E blocks. No rows
+    give zero blocks."""
+    sums = batch_sums(pairs, _gram_batch)
+    zero = np.zeros((dim, dim))
+    return sums.get("xtx", zero), sums.get("xty", zero)
 
 
 def fit_linear_map(
@@ -105,62 +95,39 @@ def fit_mlp_map(
     (``model_my_variant3.py:41-45,57-69``): ŷ = relu(x·W1)·W2, fit by
     full-batch gradient descent.
 
-    Distribution pattern: each epoch, executors compute PARTIAL gradient
-    sums over their Arrow batches (numpy BLAS), the driver sums the
-    O(E·H)-sized partials and takes the step, then re-broadcasts the
-    weights. Row data never moves; per-epoch driver traffic is
-    |partitions| × E×H — the standard data-parallel loop (parameter
-    averaging degenerate case: exact full-batch gradient), and the same
-    shape `mapInPandas` training takes at 100 TB.
+    Distribution pattern: each epoch is one ``reduce.batch_sums`` pass:
+    executors compute PARTIAL gradient sums over their Arrow batches
+    (numpy BLAS), the driver sums the O(E·H)-sized partials and takes the
+    step, then re-broadcasts the weights. Row data never moves; per-epoch
+    driver traffic is |partitions| × E×H — the standard data-parallel loop
+    (parameter averaging degenerate case: exact full-batch gradient), and
+    the same shape `mapInPandas` training takes at 100 TB.
     """
     hidden = hidden or dim
     rng = np.random.default_rng(seed)
     w1 = rng.normal(0.0, 0.1, (dim, hidden))
     w2 = rng.normal(0.0, 0.1, (hidden, dim))
-    spark = pairs.sparkSession
+
+    def batch(pdf: pd.DataFrame, params: tuple) -> dict:
+        p1, p2 = params
+        x = np.array(pdf["x"].tolist(), dtype=np.float64)
+        y = np.array(pdf["y"].tolist(), dtype=np.float64)
+        h_pre = x @ p1
+        h = np.maximum(h_pre, 0.0)
+        r = h @ p2 - y
+        gh = r @ p2.T
+        gh[h_pre <= 0.0] = 0.0
+        return {"g1": x.T @ gh, "g2": h.T @ r}
+
     pairs = pairs.persist()
     try:
         n_rows = pairs.count()  # also materializes the persist
+        scale = 2.0 / max(n_rows, 1)
         for _ in range(epochs):
-            bw = spark.sparkContext.broadcast({"w1": w1, "w2": w2})
-
-            def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                p1, p2 = bw.value["w1"], bw.value["w2"]
-                g1 = np.zeros_like(p1)
-                g2 = np.zeros_like(p2)
-                loss = 0.0
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    x = np.array(pdf["x"].tolist(), dtype=np.float64)
-                    y = np.array(pdf["y"].tolist(), dtype=np.float64)
-                    h_pre = x @ p1
-                    h = np.maximum(h_pre, 0.0)
-                    r = h @ p2 - y
-                    loss += float((r * r).sum())
-                    g2 += h.T @ r
-                    gh = r @ p2.T
-                    gh[h_pre <= 0.0] = 0.0
-                    g1 += x.T @ gh
-                yield pd.DataFrame(
-                    {
-                        "g1": [g1.ravel().tolist()],
-                        "g2": [g2.ravel().tolist()],
-                        "loss": [loss],
-                    }
-                )
-
-            partials = tree_collect(
-                pairs.mapInPandas(
-                    part, "g1 array<double>, g2 array<double>, loss double"
-                )
-            )
-            bw.unpersist()
-            g1 = sum(np.array(p["g1"]) for p in partials).reshape(w1.shape)
-            g2 = sum(np.array(p["g2"]) for p in partials).reshape(w2.shape)
-            scale = 2.0 / max(n_rows, 1)
-            w1 -= lr * scale * g1
-            w2 -= lr * scale * g2
+            # no shared rows: no gradient, the weights stay at their init
+            sums = batch_sums(pairs, batch, (w1, w2))
+            w1 -= lr * scale * sums.get("g1", 0.0)
+            w2 -= lr * scale * sums.get("g2", 0.0)
     finally:
         pairs.unpersist()
     return {"W1": w1, "W2": w2}

@@ -1,6 +1,6 @@
 """Adversarially-coupled cross-domain autoencoder — the reference's core
 training contribution (T8/T10/T12), re-expressed as the engine's standard
-driver-loop of mapInPandas partial-gradient passes.
+driver loop of ``reduce.batch_sums`` partial-gradient passes.
 
 Reference semantics (``main_my.py:152-252``, ``model_my.py:52-109``):
 
@@ -17,17 +17,19 @@ Reference semantics (``main_my.py:152-252``, ``model_my.py:52-109``):
   ``G_loss + self·(recon) + cross·(transfer recon) + reg·consistency``
   (``main_my.py:164,240-246``)
 
-Spark-first translation (same pattern as ``cdae.train`` /
-``crossdomain.fit_mlp_map``):
+Spark-first translation (the same ``reduce.batch_sums`` pass as
+``cdae.train`` and ``crossdomain.fit_mlp_map``):
 
 - nothing user×item-shaped ever materializes globally: each Arrow batch
   rebuilds its users' multi-hot rows from item-index arrays
 - each pass, executors compute exact partial gradients over their batches
   (numpy BLAS); the driver sums O(params)-sized blocks and steps, then
-  re-broadcasts — full-batch GD, deterministic on any partitioning
+  re-broadcasts — full-batch GD
 - the Gaussian prior and denoising dropout are DETERMINISTIC integer-hash
   functions of (user, dim, pass) — splitmix64 finalizer → Box–Muller — so
-  no executor RNG state and the trajectory is replayable
+  no executor RNG state, and both are the same on any partitioning. The
+  float sums follow the partition layout, so a run repeats bit for bit
+  for a fixed layout; another layout moves only the low bits
 - encoders/decoders are the engine's 1-layer CDAE spelling (cdae.py); the
   adversarial coupling, shared map, schedule, and objective weights follow
   the reference exactly
@@ -46,8 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.recsplit import SplitData, split_data
-from .cdae import DROPOUT_DEN, DROPOUT_NUM, _train_frame
-from .reduce import tree_collect
+from .cdae import _dropout_mask, _multi_hot, _train_frame
+from .reduce import batch_sums
 from .scoring import (
     DOMAINS, decoder_frame, dot_scores, evaluate, load_params, save_params,
 )
@@ -127,16 +129,6 @@ def _prior(
     if kind != "gaussian":
         raise ValueError(f"unknown prior kind {kind!r}")
     return z1
-
-
-def _dropout_mask(users: np.ndarray, n_items: int, tick: int) -> np.ndarray:
-    """cdae.py's deterministic denoising mask, keyed by pass tick."""
-    h = (
-        users[:, None].astype(np.int64) * 2654435761
-        + np.arange(n_items)[None, :] * 40503
-        + tick * 97
-    ) % DROPOUT_DEN
-    return h < DROPOUT_NUM  # True = dropped
 
 
 # -- parameters ---------------------------------------------------------------
@@ -327,6 +319,12 @@ def _d_grads(
 
 # -- distributed training loop ------------------------------------------------
 
+def _is_d_pass(tick: int) -> bool:
+    """The G,G,D schedule (d_epoch=2, main_my.py:164): every
+    ``D_EVERY``-th pass trains the discriminators."""
+    return (tick + 1) % D_EVERY == 0
+
+
 def _joined_frame(data: SplitData) -> dict:
     """The data half of a model dict: ``joined`` (user_id, idxs_x, idxs_y)
     over the union of both domains' train users (full outer join — a user
@@ -351,31 +349,6 @@ def _joined_frame(data: SplitData) -> dict:
         "items_x": fx["items"], "items_y": fy["items"],
         "n_items_x": fx["n_items"], "n_items_y": fy["n_items"],
     }
-
-
-def _two_hot(
-    pdf: pd.DataFrame, n_x: int, n_y: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    users = pdf["user_id"].to_numpy(dtype="int64")
-    x = np.zeros((len(pdf), n_x), dtype=np.float64)
-    y = np.zeros((len(pdf), n_y), dtype=np.float64)
-    for row, (ix, iy) in enumerate(zip(pdf["idxs_x"], pdf["idxs_y"])):
-        x[row, np.asarray(ix, dtype="int64")] = 1.0
-        y[row, np.asarray(iy, dtype="int64")] = 1.0
-    return users, x, y
-
-
-def _g_schema(g: dict) -> str:
-    """Partial-gradient transport schema — one array column per G param
-    (the param set depends on the map strategy) + the loss scalars."""
-    return ", ".join(f"{k} array<double>" for k in g) + ", loss double, gan double"
-
-
-_D_SCHEMA = (
-    "v1x array<double>, b1x array<double>, v2x array<double>, b2x array<double>, "
-    "v1y array<double>, b1y array<double>, v2y array<double>, b2y array<double>, "
-    "loss double"
-)
 
 
 def train(
@@ -414,83 +387,47 @@ def train(
     g_losses: list[float] = []
     gan_losses: list[float] = []
     d_losses: list[float] = []
+
+    def batch(pdf: pd.DataFrame, params: tuple) -> dict:
+        bg, bd, tick = params
+        users, x = _multi_hot(pdf, n_x, "idxs_x")
+        _, y = _multi_hot(pdf, n_y, "idxs_y")
+        xn = np.where(_dropout_mask(users, n_x, tick), 0.0, x)
+        yn = np.where(_dropout_mask(users, n_y, tick), 0.0, y)
+        if _is_d_pass(tick):
+            grads, loss = _d_grads(users, xn, yn, bg, bd, tick, prior_kind=prior)
+            return {**grads, "loss": loss}
+        grads, ls = _g_grads(xn, x, yn, y, bg, bd)
+        return {**grads, "loss": ls["total"], "gan": ls["gan"]}
+
     try:
         for p in range(passes):
-            is_d = (p + 1) % D_EVERY == 0  # G,G,D — d_epoch=2 schedule
-            bp = spark.sparkContext.broadcast({"g": g, "d": d})
-
-            if is_d:
-                def dpart(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    bg, bd = bp.value["g"], bp.value["d"]
-                    acc = {k: np.zeros_like(v) for k, v in bd.items()}
-                    loss = 0.0
-                    for pdf in batches:
-                        if not len(pdf):
-                            continue
-                        users, x, y = _two_hot(pdf, n_x, n_y)
-                        xn = np.where(_dropout_mask(users, n_x, p), 0.0, x)
-                        yn = np.where(_dropout_mask(users, n_y, p), 0.0, y)
-                        gr, ls = _d_grads(users, xn, yn, bg, bd, p, prior_kind=prior)
-                        for k in acc:
-                            acc[k] += gr[k]
-                        loss += ls
-                    yield pd.DataFrame(
-                        {**{k: [v.ravel().tolist()] for k, v in acc.items()},
-                         "loss": [loss]}
-                    )
-
-                parts = tree_collect(joined.mapInPandas(dpart, _D_SCHEMA))
+            sums = batch_sums(joined, batch, (g, d, p))
+            if _is_d_pass(p):
                 for k in d:
-                    tot = sum(np.array(r[k]) for r in parts).reshape(d[k].shape)
-                    grad = tot / n_users
+                    grad = sums[k] / n_users
                     if optimizer == "adam":  # reference D: SGD + weight decay
                         grad = grad + wd * d[k]
                     d[k] -= lr_d * grad
-                d_losses.append(sum(r["loss"] for r in parts) / n_users)
-            else:
-                def gpart(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    bg, bd = bp.value["g"], bp.value["d"]
-                    acc = {k: np.zeros_like(v) for k, v in bg.items()}
-                    loss = 0.0
-                    gan = 0.0
-                    for pdf in batches:
-                        if not len(pdf):
-                            continue
-                        users, x, y = _two_hot(pdf, n_x, n_y)
-                        xn = np.where(_dropout_mask(users, n_x, p), 0.0, x)
-                        yn = np.where(_dropout_mask(users, n_y, p), 0.0, y)
-                        gr, ls = _g_grads(xn, x, yn, y, bg, bd)
-                        for k in acc:
-                            acc[k] += gr[k]
-                        loss += ls["total"]
-                        gan += ls["gan"]
-                    yield pd.DataFrame(
-                        {**{k: [v.ravel().tolist()] for k, v in acc.items()},
-                         "loss": [loss], "gan": [gan]}
-                    )
-
-                parts = tree_collect(joined.mapInPandas(gpart, _g_schema(g)))
-                if optimizer == "adam":
-                    adam_t += 1
-                for k in g:
-                    tot = sum(np.array(r[k]) for r in parts).reshape(g[k].shape)
-                    grad = tot / n_users
-                    if optimizer == "adam":  # torch Adam, decoupled nothing:
-                        # L2 folds into the gradient like torch's
-                        # weight_decay (not AdamW)
-                        grad = grad + wd * g[k]
-                        adam_m[k] = ADAM_B1 * adam_m[k] + (1 - ADAM_B1) * grad
-                        adam_v[k] = (
-                            ADAM_B2 * adam_v[k] + (1 - ADAM_B2) * grad * grad
-                        )
-                        mh = adam_m[k] / (1 - ADAM_B1**adam_t)
-                        vh = adam_v[k] / (1 - ADAM_B2**adam_t)
-                        g[k] -= lr * mh / (np.sqrt(vh) + ADAM_EPS)
-                    else:
-                        g[k] -= lr * grad
-                g_losses.append(sum(r["loss"] for r in parts) / n_users)
-                gan_losses.append(sum(r["gan"] for r in parts) / n_users)
-            bp.unpersist()
+                d_losses.append(float(sums["loss"]) / n_users)
+                continue
+            if optimizer == "adam":
+                adam_t += 1
+            for k in g:
+                grad = sums[k] / n_users
+                if optimizer == "adam":  # torch Adam, decoupled nothing:
+                    # L2 folds into the gradient like torch's
+                    # weight_decay (not AdamW)
+                    grad = grad + wd * g[k]
+                    adam_m[k] = ADAM_B1 * adam_m[k] + (1 - ADAM_B1) * grad
+                    adam_v[k] = ADAM_B2 * adam_v[k] + (1 - ADAM_B2) * grad * grad
+                    mh = adam_m[k] / (1 - ADAM_B1**adam_t)
+                    vh = adam_v[k] / (1 - ADAM_B2**adam_t)
+                    g[k] -= lr * mh / (np.sqrt(vh) + ADAM_EPS)
+                else:
+                    g[k] -= lr * grad
+            g_losses.append(float(sums["loss"]) / n_users)
+            gan_losses.append(float(sums["gan"]) / n_users)
     finally:
         joined.unpersist()
     return {
@@ -536,7 +473,8 @@ def _latent(spark: SparkSession, model: dict) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            users, x, y = _two_hot(pdf, n_x, n_y)
+            users, x = _multi_hot(pdf, n_x, "idxs_x")
+            _, y = _multi_hot(pdf, n_y, "idxs_y")
             zx = np.maximum(x @ w1x, 0.0)
             zy = np.maximum(y @ w1y, 0.0)
             yield pd.DataFrame(

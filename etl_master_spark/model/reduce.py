@@ -1,58 +1,92 @@
-"""Bounded-fan-in collection of partial-gradient frames.
+"""One partial-sum pass for every model trainer.
 
-The model family's training loops (cdae.train, gan.train,
-crossdomain.fit_mlp_map) compute exact per-partition partial gradients
-with Arrow ``mapInPandas`` and sum them on the driver — the classic
-parameter-server-on-driver shape. Each partial is O(params), so the
-DATA scale is safe at any corpus size, but the driver fan-in grows with
-the partition count: at 1000+ executors, ``collect()`` would receive
-1000+ gradient-sized rows per pass.
+Each trainer here (``cdae._train``, ``gan.train``'s D and G passes,
+``crossdomain._gram_sums`` and ``crossdomain.fit_mlp_map``) takes the same
+distributed step: broadcast the parameters, sum exact per-batch partials
+over Arrow ``mapInPandas`` batches (numpy BLAS), add them up on the driver
+and step there, the classic parameter-server-on-driver shape.
+``batch_sums`` is that step; a caller keeps only its per-batch math and its
+update.
 
-``tree_collect`` inserts a TreeAggregate-style intermediate combine:
-when the partials frame has more partitions than ``fan_in``, a single
-repartition + map-side elementwise sum reduces it to ≤ ``fan_in``
-combined rows before the driver touches anything. Below the threshold
-(every local/test run) it is a plain ``collect`` — byte-identical
-trajectories to the pre-tree engine; above it, the driver's per-pass
-fan-in is a constant no matter the cluster width.
+Each partition ships its sums as ``(name, shape, data)`` rows, the layout
+of ``scoring.save_params``. A partial is O(params), so the data scale is
+safe at any corpus size, but the driver's fan-in grows with the partition
+count: with more than ``fan_in`` partitions, one repartition and a second
+summing pass (TreeAggregate-style) cut it to at most ``fan_in`` row groups
+before the driver touches anything. At or below it (every local run), the
+driver adds the partitions' sums in partition order, so the float sums
+follow the partition layout: a run repeats bit for bit for a fixed layout,
+and another layout moves only the low bits.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .scoring import PARAMS_SCHEMA
+
 TREE_FAN_IN = 64
 
 
-def tree_collect(partials: DataFrame, fan_in: int = TREE_FAN_IN) -> list:
-    """Collect a partial-gradient frame (array<double> gradient columns +
-    double scalar columns, one row per input partition) with driver
-    fan-in bounded by ``fan_in`` via an intermediate combine stage."""
-    if partials.rdd.getNumPartitions() <= fan_in:
-        return partials.collect()
+def _add(acc: dict, sums: dict) -> None:
+    """Add ``sums``' arrays into ``acc``, name by name, as float64."""
+    for k, v in sums.items():
+        acc[k] = acc.get(k, 0.0) + np.asarray(v, dtype=np.float64)
 
-    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _row_sums(rows: Iterable) -> dict:
+    """``(name, shape, data)`` rows summed by name, in row order."""
+    acc: dict = {}
+    for name, shape, data in rows:
+        _add(acc, {name: np.reshape(data, tuple(shape))})
+    return acc
+
+
+def _summing(fn: Callable, bv) -> Callable:
+    """The ``mapInPandas`` function that sums ``fn(batch, value)`` over a
+    partition's non-empty batches and yields the sums as rows (none for an
+    empty partition). ``bv`` is the broadcast ``value``, or None."""
+
+    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        value = None if bv is None else bv.value
         acc: dict = {}
         for pdf in batches:
-            for c in pdf.columns:
-                for v in pdf[c]:
-                    if isinstance(v, (list, np.ndarray)):
-                        arr = np.asarray(v, dtype=np.float64)
-                        acc[c] = arr if c not in acc else acc[c] + arr
-                    else:
-                        acc[c] = float(v) + acc.get(c, 0.0)
+            if len(pdf):
+                _add(acc, fn(pdf, value))
         if acc:
-            yield pd.DataFrame(
-                {
-                    c: [v.tolist() if isinstance(v, np.ndarray) else v]
-                    for c, v in acc.items()
-                }
-            )
+            yield pd.DataFrame({
+                "name": list(acc),
+                "shape": [list(np.shape(v)) for v in acc.values()],
+                "data": [np.ravel(v) for v in acc.values()],
+            })
 
-    return partials.repartition(fan_in).mapInPandas(
-        combine, partials.schema
-    ).collect()
+    return part
+
+
+def batch_sums(
+    frame: DataFrame,
+    fn: Callable[[pd.DataFrame, Any], dict],
+    value: Any = None,
+    fan_in: int = TREE_FAN_IN,
+) -> dict[str, np.ndarray]:
+    """The sum, over every non-empty Arrow batch of ``frame``, of
+    ``fn(batch, value)``: a dict of float64 arrays (scalars as 0-d
+    arrays). ``value`` reaches the executors as one broadcast, released
+    when the sums are in. An empty frame gives ``{}``."""
+    bv = frame.sparkSession.sparkContext.broadcast(value)
+    try:
+        parts = frame.mapInPandas(_summing(fn, bv), PARAMS_SCHEMA)
+        if parts.rdd.getNumPartitions() > fan_in:
+            parts = parts.repartition(fan_in).mapInPandas(
+                _summing(lambda pdf, _: _row_sums(pdf.itertuples(False)), None),
+                PARAMS_SCHEMA,
+            )
+        rows = parts.collect()
+    finally:
+        bv.unpersist()
+    return {k: np.asarray(v) for k, v in _row_sums(rows).items()}

@@ -25,7 +25,7 @@ from ..operators.ranking import eval_from_scores
 from ..operators.recsplit import SplitData
 
 DOMAINS = ("x", "y")
-_PARAMS_SCHEMA = "name string, shape array<int>, data array<double>"
+PARAMS_SCHEMA = "name string, shape array<int>, data array<double>"
 
 
 def evaluate(
@@ -86,7 +86,7 @@ def save_params(
     """Persist numpy parameters as (name, shape, flat data) parquet rows —
     engine-agnostic, schema'd, no pickles."""
     rows = [(k, list(v.shape), v.ravel().tolist()) for k, v in params.items()]
-    spark.createDataFrame(rows, _PARAMS_SCHEMA).coalesce(1).write.mode(
+    spark.createDataFrame(rows, PARAMS_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
 

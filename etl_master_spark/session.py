@@ -146,11 +146,19 @@ def get_spark(
     as many shuffle partitions unless ``shuffle_partitions`` says otherwise.
     A fresh local JVM starts from the class-data-sharing archive (see the
     module docstring).
+
+    With a context already running in this process, the running session
+    comes back unchanged, and one warning names each requested setting
+    whose value it does not have. (pyspark's ``getOrCreate`` would copy
+    every option onto the live session, rewriting its SQL settings for
+    every other user of it.)
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     conf = _engine_conf(app_name, str(shuffle_partitions or cpus), extra_conf)
     if master is None and not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         master = f"local[{cpus}]"
+    if SparkContext._active_spark_context is not None:
+        return _running_session(master, conf)
     builder = SparkSession.builder
     if master is not None:
         builder = builder.master(master)
@@ -158,6 +166,21 @@ def get_spark(
     with _spark_conf_dir(conf_dir):
         spark = builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    ensure_package_shipped(spark)
+    return spark
+
+
+def _running_session(master: str | None, conf: dict[str, str]) -> SparkSession:
+    """The running session, as it is; warns once about the requested
+    settings it differs in."""
+    spark = SparkSession.builder.getOrCreate()  # no options: nothing copied
+    wanted = {"spark.master": master, **conf} if master else conf
+    differ = [k for k, v in wanted.items() if spark.conf.get(k, None) != v]
+    if differ:
+        _LOG.warning(
+            "get_spark: a session is already running; keeping its value of %s",
+            ", ".join(differ),
+        )
     ensure_package_shipped(spark)
     return spark
 

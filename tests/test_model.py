@@ -317,9 +317,9 @@ def test_als_cdae_eval_train_once_for_both_modes(spark, sf_dir, monkeypatch):
         calls.append(f"als:{domain}")
         return real_fit(data, domain, rank)
 
-    def counting_train(spark, frames, *args):
+    def counting_train(*args):
         calls.append("cdae")
-        return real_train(spark, frames, *args)
+        return real_train(*args)
 
     monkeypatch.setattr(als, "_fit", counting_fit)
     monkeypatch.setattr(cdae, "_train", counting_train)

@@ -1,6 +1,7 @@
 """etl_master_spark.session: package shipping and the class-data-sharing
 archive, checked without a Spark session (the ``java`` tests start bare
-JVMs; the slow test builds a real archive)."""
+JVMs; the slow test builds a real archive), and ``get_spark`` on the
+suite's running session."""
 
 import os
 import re
@@ -73,6 +74,7 @@ def fake_install(tmp_path, monkeypatch):
     for var in ("SPARK_CONF_DIR", "SPARK_GRAFT_ON_CLUSTER", "PYSPARK_GATEWAY_PORT"):
         monkeypatch.delenv(var, raising=False)
     monkeypatch.setattr(session.SparkContext, "_gateway", None)
+    monkeypatch.setattr(session.SparkContext, "_active_spark_context", None)
     builds: list[Path] = []
 
     def fake_build(archive, conf_dir, driver_memory):
@@ -245,3 +247,14 @@ def test_built_archive_maps_for_the_engine_classpath(tmp_path, monkeypatch):
         capture_output=True, text=True, timeout=60,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
+
+
+def test_running_session_is_returned_unchanged(spark, caplog):
+    """A second ``get_spark`` leaves the running session's settings alone
+    and names the ones it did not apply."""
+    with caplog.at_level("WARNING", logger=session.__name__):
+        again = session.get_spark(shuffle_partitions=4)
+    assert again is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    warned = [r.getMessage() for r in caplog.records if "already running" in r.getMessage()]
+    assert len(warned) == 1 and "spark.sql.shuffle.partitions" in warned[0]
