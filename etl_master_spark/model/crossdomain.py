@@ -122,12 +122,13 @@ def fit_mlp_map(
     pairs = pairs.persist()
     try:
         n_rows = pairs.count()  # also materializes the persist
-        scale = 2.0 / max(n_rows, 1)
+        if n_rows == 0:  # no gradient: the weights stay at their init
+            return {"W1": w1, "W2": w2}
+        scale = 2.0 / n_rows
         for _ in range(epochs):
-            # no shared rows: no gradient, the weights stay at their init
             sums = batch_sums(pairs, batch, (w1, w2))
-            w1 -= lr * scale * sums.get("g1", 0.0)
-            w2 -= lr * scale * sums.get("g2", 0.0)
+            w1 -= lr * scale * sums["g1"]
+            w2 -= lr * scale * sums["g2"]
     finally:
         pairs.unpersist()
     return {"W1": w1, "W2": w2}

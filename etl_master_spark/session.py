@@ -33,14 +33,31 @@ JDK dynamic AppCDS archive of the driver's classes
   directory beside the archive for the launch only, the same one the
   archive was dumped with.
 - When the archive for the key is missing, ``get_spark`` builds it once,
-  synchronously, in a child process (about 40 s). The child runs a small
-  fixed plan under ``-XX:ArchiveClassesAtExit``, then ends its JVM through
-  ``System.exit``, the orderly exit that writes the archive, and the parent
-  renames the file into place atomically. A failed build leaves a
-  ``.failed`` log so that later starts do not retry it.
+  synchronously, in a child process (about 50 s on 4 vCPUs). The child
+  runs a small fixed plan under ``-XX:ArchiveClassesAtExit``, then ends
+  its JVM through ``System.exit``, the orderly exit that writes the
+  archive, and the parent renames the file into place atomically. A
+  failed build leaves a ``.failed`` log so that later starts do not retry
+  it.
 - A non-local master, ``SPARK_GRAFT_ON_CLUSTER``, a live conf dir, an
   unusable cache dir or a JVM already running in this process start the
   JVM exactly as without the archive.
+
+JIT thresholds. A local pass (split, train, evaluate; a CLI run; a
+perfbench run) is short and cold, and the JVM's C2 compiler spends more
+CPU recompiling Catalyst, the SQL parser, Janino and generated classes
+than the executor tasks spend on the data: on ``recsys_lifecycle``, 63 s
+in C2 threads and 14 s in C1 against 10 s of task threads. So every local
+driver JVM this process launches, the archive's dump child included,
+starts with ``_JIT_FLAGS``, JDK 17's tier-4 (C2) thresholds times ten
+(invocation 50000, minimum invocation 6000, compile 150000, back edge
+400000): only code that stays hot gets C2. C1-only
+(``-XX:TieredStopAtLevel=1``) saves as much CPU on a cold pass but
+doubles warm execution time, so it is not used. The flags go ahead of the
+caller's ``spark.driver.extraJavaOptions``, and the JVM takes the last
+occurrence of a flag, so the caller's own value of any of them wins. The
+same three cases as above (a non-local master, ``SPARK_GRAFT_ON_CLUSTER``,
+a JVM already running) get no flags.
 """
 
 from __future__ import annotations
@@ -70,10 +87,17 @@ _SHIPPED_SESSIONS: set[int] = set()
 
 # bump when the archive's build plan changes, so old archives are not used
 _CDS_FORMAT = 1
-# the child build takes 20-45 s; perfbench's cold-start timeout is 150 s
+# the child build takes 45-50 s on 4 vCPUs; perfbench's cold-start timeout
+# is 150 s
 _CDS_BUILD_TIMEOUT_S = 120
 # the largest heap that still runs with compressed oops
 _COMPRESSED_OOPS_MAX = 32 << 30
+# JDK 17's C2 thresholds (5000/600/15000/40000) times ten; module docstring
+_JIT_FLAGS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -144,8 +168,8 @@ def get_spark(
     On a real cluster, leave ``master`` unset and submit through
     spark-submit; locally we default to ``local[$SPARK_GRAFT_CPUS]``, with
     as many shuffle partitions unless ``shuffle_partitions`` says otherwise.
-    A fresh local JVM starts from the class-data-sharing archive (see the
-    module docstring).
+    A fresh local JVM starts with raised C2 thresholds and from the
+    class-data-sharing archive (see the module docstring).
 
     With a context already running in this process, the running session
     comes back unchanged, and one warning names each requested setting
@@ -162,6 +186,7 @@ def get_spark(
     builder = SparkSession.builder
     if master is not None:
         builder = builder.master(master)
+    _use_jit_flags(master, conf)
     conf_dir = _use_cds_archive(master, conf)
     with _spark_conf_dir(conf_dir):
         spark = builder.config(map=conf).getOrCreate()
@@ -237,14 +262,29 @@ def _cds_flags(archive: Path) -> str:
     return f"-XX:SharedArchiveFile={shlex.quote(str(archive))} -Xshare:auto"
 
 
+def _launches_local_jvm(master: str | None) -> bool:
+    """Whether a session start with ``master`` launches a local-mode driver
+    JVM from this process."""
+    if master is None or not master.startswith("local"):
+        return False
+    if os.environ.get("SPARK_GRAFT_ON_CLUSTER") or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return False
+    return SparkContext._gateway is None  # else the JVM is already up
+
+
+def _use_jit_flags(master: str | None, conf: dict[str, str]) -> None:
+    """Put ``_JIT_FLAGS`` ahead of the caller's driver options when the
+    start launches a local JVM, so that a caller's own value of a flag,
+    coming later, wins."""
+    if _launches_local_jvm(master):
+        opts = conf.get(_JAVA_OPTIONS, "")
+        conf[_JAVA_OPTIONS] = f"{_JIT_FLAGS} {opts}".strip()
+
+
 def _cds_paths(master: str | None, driver_memory: str) -> tuple[Path, Path] | None:
     """``(archive, empty conf dir)`` for a JVM start this process may serve
     from the archive, or None to start as without it."""
-    if master is None or not master.startswith("local"):
-        return None
-    if os.environ.get("SPARK_GRAFT_ON_CLUSTER") or "PYSPARK_GATEWAY_PORT" in os.environ:
-        return None
-    if SparkContext._gateway is not None:  # the JVM is already up
+    if not _launches_local_jvm(master):
         return None
     spark_home = Path(_find_spark_home())
     live_conf = Path(os.environ.get("SPARK_CONF_DIR") or spark_home / "conf")
@@ -280,8 +320,8 @@ def _use_cds_archive(master: str | None, conf: dict[str, str]) -> Path | None:
         _build_cds_archive(archive, conf_dir, conf["spark.driver.memory"])
     if not archive.exists():
         return None
-    opts = conf.get("spark.driver.extraJavaOptions", "")
-    conf["spark.driver.extraJavaOptions"] = f"{opts} {_cds_flags(archive)}".strip()
+    opts = conf.get(_JAVA_OPTIONS, "")
+    conf[_JAVA_OPTIONS] = f"{opts} {_cds_flags(archive)}".strip()
     return conf_dir
 
 
@@ -352,11 +392,11 @@ def _dump_workload(tmp_archive: str, driver_memory: str) -> None:
 
     conf = _engine_conf("etl_master_spark_cds", "4", {
         "spark.driver.memory": driver_memory,
-        "spark.driver.extraJavaOptions": (
-            f"-XX:ArchiveClassesAtExit={shlex.quote(tmp_archive)}"
-        ),
+        _JAVA_OPTIONS: f"-XX:ArchiveClassesAtExit={shlex.quote(tmp_archive)}",
     })
-    spark = SparkSession.builder.master("local[2]").config(map=conf).getOrCreate()
+    master = "local[2]"
+    _use_jit_flags(master, conf)
+    spark = SparkSession.builder.master(master).config(map=conf).getOrCreate()
     with tempfile.TemporaryDirectory() as d:
         spark.range(2000).selectExpr(
             "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v",

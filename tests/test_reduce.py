@@ -104,9 +104,10 @@ def test_scalars_and_empty_partitions(spark, small_batches):
     assert batch_sums(frame.limit(0), _batch_fn(), 1.0) == {}
 
 
-def test_linear_maps_without_shared_users_are_zero(spark):
+def test_linear_maps_without_shared_users_are_zero(spark, monkeypatch):
     """No user in both domains: the ridge maps are zero, and the MLP,
-    given no rows, keeps its initial weights."""
+    given no rows, keeps its initial weights without a single pass."""
+    from etl_master_spark.model import crossdomain
     from etl_master_spark.model.crossdomain import fit_linear_map, fit_mlp_map
 
     dim = 4
@@ -127,7 +128,12 @@ def test_linear_maps_without_shared_users_are_zero(spark):
     no_pairs = spark.createDataFrame(
         spark.sparkContext.parallelize([], 2), "x array<double>, y array<double>"
     )
-    mlp = fit_mlp_map(no_pairs, dim, epochs=3)
+
+    def no_pass(*args, **kwargs):
+        raise AssertionError("batch_sums ran on a frame with no rows")
+
+    monkeypatch.setattr(crossdomain, "batch_sums", no_pass)
+    mlp = fit_mlp_map(no_pairs, dim)
     init = np.random.default_rng(72)
     assert np.array_equal(mlp["W1"], init.normal(0.0, 0.1, (dim, dim)))
     assert np.array_equal(mlp["W2"], init.normal(0.0, 0.1, (dim, dim)))

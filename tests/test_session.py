@@ -1,5 +1,5 @@
-"""etl_master_spark.session: package shipping and the class-data-sharing
-archive, checked without a Spark session (the ``java`` tests start bare
+"""etl_master_spark.session: package shipping, the class-data-sharing
+archive and the JIT flags, checked without a Spark session (the ``java`` tests start bare
 JVMs; the slow test builds a real archive), and ``get_spark`` on the
 suite's running session."""
 
@@ -104,26 +104,37 @@ def test_local_master_with_template_conf_starts_from_the_archive(fake_install):
     assert archive.parent == fake_install.cache / "etl_master_spark" / "cds"
     empty_conf = str(archive.parent / "conf")
     for conf, conf_dir in fake_install.launches:
-        assert _java_opts(conf) == f"-XX:SharedArchiveFile={archive} -Xshare:auto"
+        assert _java_opts(conf) == (
+            f"{session._JIT_FLAGS} -XX:SharedArchiveFile={archive} -Xshare:auto"
+        )
         assert conf_dir == empty_conf
     assert not os.listdir(empty_conf)
     assert "SPARK_CONF_DIR" not in os.environ  # restored after the launch
 
 
 def test_caller_java_options_survive_the_merge(fake_install):
+    """JIT flags, then the caller's options, then the archive's: a
+    caller's own C2 threshold comes after the engine's, and the JVM takes
+    the last occurrence of a flag."""
+    caller = ["-Xms3g", "-XX:Tier4InvocationThreshold=7"]
     session.get_spark(master="local[2]", extra_conf={
-        "spark.driver.extraJavaOptions": "-Xms3g",
+        "spark.driver.extraJavaOptions": " ".join(caller),
     })
     (conf, _), = fake_install.launches
     opts = shlex.split(_java_opts(conf))
-    assert opts[0] == "-Xms3g" and opts[2] == "-Xshare:auto"
-    assert opts[1].startswith("-XX:SharedArchiveFile=")
+    jit = shlex.split(session._JIT_FLAGS)
+    assert opts[:4] == jit and opts[4:6] == caller
+    assert opts[6].startswith("-XX:SharedArchiveFile=") and opts[7:] == ["-Xshare:auto"]
+    threshold = [o for o in opts if o.startswith("-XX:Tier4InvocationThreshold=")]
+    assert threshold == ["-XX:Tier4InvocationThreshold=50000", caller[1]]
 
 
 @pytest.mark.parametrize("case", [
     "live_conf", "remote_master", "on_cluster", "jvm_running", "bad_cache",
 ])
 def test_archive_is_skipped_where_it_does_not_apply(fake_install, monkeypatch, tmp_path, case):
+    """No archive in every case; the JIT flags still apply to a local JVM
+    this process launches (a live conf dir, an unusable cache dir)."""
     master = "local[2]"
     conf_dir = None
     if case == "live_conf":
@@ -145,7 +156,10 @@ def test_archive_is_skipped_where_it_does_not_apply(fake_install, monkeypatch, t
         "spark.driver.extraJavaOptions": "-Xms3g",
     })
     (conf, seen_conf_dir), = fake_install.launches
-    assert _java_opts(conf) == "-Xms3g"
+    if case in ("live_conf", "bad_cache"):
+        assert _java_opts(conf) == f"{session._JIT_FLAGS} -Xms3g"
+    else:
+        assert _java_opts(conf) == "-Xms3g"
     assert seen_conf_dir == (str(conf_dir) if conf_dir else None)
     assert fake_install.builds == []
 
@@ -161,7 +175,17 @@ def test_failed_build_is_not_retried(fake_install, monkeypatch):
     session.get_spark(master="local[2]")
     session.get_spark(master="local[2]")
     assert len(builds) == 1
-    assert all(_java_opts(conf) == "" for conf, _ in fake_install.launches)
+    assert all(_java_opts(conf) == session._JIT_FLAGS for conf, _ in fake_install.launches)
+
+
+def test_dump_child_launches_with_the_jit_flags(fake_install, tmp_path):
+    archive = tmp_path / "dump.jsa"
+    with pytest.raises(AttributeError):  # the fake session runs no plan
+        session._dump_workload(str(archive), "3g")
+    (conf, _), = fake_install.launches
+    assert _java_opts(conf) == (
+        f"{session._JIT_FLAGS} -XX:ArchiveClassesAtExit={archive}"
+    )
 
 
 def test_key_separates_heap_buckets_and_jar_sets(fake_install):
@@ -242,7 +266,8 @@ def test_built_archive_maps_for_the_engine_classpath(tmp_path, monkeypatch):
     assert not _processes_naming(archive.parent)  # no JVM outlives the build
     cp = _launch_classpath(Path(session._find_spark_home()), conf_dir)
     proc = subprocess.run(
-        [_java(), f"-XX:SharedArchiveFile={archive}", "-Xshare:on", "-Xmx1g",
+        [_java(), *shlex.split(session._JIT_FLAGS),
+         f"-XX:SharedArchiveFile={archive}", "-Xshare:on", "-Xmx1g",
          "-cp", cp, "-version"],
         capture_output=True, text=True, timeout=60,
     )
@@ -258,3 +283,12 @@ def test_running_session_is_returned_unchanged(spark, caplog):
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     warned = [r.getMessage() for r in caplog.records if "already running" in r.getMessage()]
     assert len(warned) == 1 and "spark.sql.shuffle.partitions" in warned[0]
+
+
+def test_suite_jvm_runs_with_the_jit_flags(spark):
+    """The suite's own driver JVM, launched by ``get_spark``, reports the
+    engine's C2 thresholds among its input arguments."""
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+                .getInputArguments())
+    assert all(flag in args for flag in shlex.split(session._JIT_FLAGS)), args

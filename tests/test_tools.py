@@ -3,6 +3,7 @@ bench.timed. All but the last test run without a Spark session."""
 
 import importlib
 import json
+import os
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -116,6 +117,34 @@ def test_replica_dir_is_keyed_by_base_dir(monkeypatch):
     assert a != b and a.name == b.name == "x100"
     assert replica_of("/data/sf0.1/") == a
     assert replica_of("/data/sf0.1", zipf=True) != a
+
+
+def test_jvm_thread_cpu_on_a_fake_proc_tree(tmp_path):
+    """Threads split by their kernel name; a name with spaces and
+    parentheses parses; the process total less the live threads is the
+    exited threads' time."""
+    from tools.profile_queries import jvm_thread_cpu
+
+    tick = os.sysconf("SC_CLK_TCK")
+
+    def stat(tid, comm, utime, stime):
+        return (f"{tid} ({comm}) S 1 7 7 0 -1 4194304 0 0 0 0"
+                f" {utime * tick} {stime * tick} 0 0 20 0 1 0 0 0 0\n")
+
+    threads = {
+        7: ("java", 1, 1), 8: ("C2 CompilerThre", 30, 2),
+        9: ("C2 CompilerThre", 5, 1), 10: ("C1 CompilerThre", 4, 0),
+        11: ("GC Thread#0", 2, 1), 12: ("G1 Refine#0", 1, 0),
+        13: ("Executor task l", 9, 1), 14: ("odd) (name", 3, 0),
+    }
+    for tid, (comm, utime, stime) in threads.items():
+        (tmp_path / "7" / "task" / str(tid)).mkdir(parents=True)
+        (tmp_path / "7" / "task" / str(tid) / "stat").write_text(
+            stat(tid, comm, utime, stime))
+    (tmp_path / "7" / "stat").write_text(stat(7, "java", 70, 6))  # 15 s exited
+    assert jvm_thread_cpu(7, tmp_path) == {
+        "C2": 38.0, "C1": 4.0, "GC": 4.0, "rest": 15.0, "exited": 15.0,
+    }
 
 
 def test_timed_counts_jobs_and_times_out(spark, sf_dir):

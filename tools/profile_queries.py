@@ -19,14 +19,18 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
 Output: every pass of every query, then its min,
     name  construct_s  exec_s  jobs  pass
-the construct/exec totals of the mins, and a JSON dump of each query's
-min pass to /tmp/profile_queries.json for diffing.
+the construct/exec totals of the mins, the driver JVM's thread CPU since
+its start split into C2 and C1 compiler threads, GC threads, the other
+live threads and the threads that have exited (``jvm_thread_cpu``), and a
+JSON dump of each query's min pass to /tmp/profile_queries.json for
+diffing.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 from pathlib import Path
 
@@ -35,6 +39,43 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 import bench
+
+
+def _thread_kind(comm: str) -> str:
+    """The kind of a HotSpot thread from its name, as the kernel keeps it
+    (15 characters: ``C2 CompilerThre``, ``GC Thread#0``, ``G1 Refine#1``)."""
+    if comm.startswith(("C2 ", "C1 ")):
+        return comm[:2]
+    if comm.startswith(("GC ", "G1 ")):
+        return "GC"
+    return "rest"
+
+
+def _stat_cpu_s(stat: str) -> tuple[str, float]:
+    """``(comm, utime + stime in seconds)`` of one ``/proc`` stat line; the
+    name sits in parentheses and may itself hold spaces and parentheses."""
+    head, _, tail = stat.rpartition(")")
+    fields = tail.split()  # fields[0] is the state, field 3 of the line
+    ticks = int(fields[11]) + int(fields[12])  # utime, stime: fields 14, 15
+    return head.partition("(")[2], ticks / os.sysconf("SC_CLK_TCK")
+
+
+def jvm_thread_cpu(pid: int, proc: Path = Path("/proc")) -> dict[str, float]:
+    """CPU seconds of process ``pid`` since its start, by thread kind: C2,
+    C1, GC and rest from each live thread's ``task/<tid>/stat``, and
+    exited: the process total less the live threads. A thread that has
+    exited (the JVM retires idle compiler and task threads) keeps no stat
+    of its own, so its kind is lost."""
+    split = dict.fromkeys(("C2", "C1", "GC", "rest"), 0.0)
+    for task in (proc / str(pid) / "task").iterdir():
+        try:
+            comm, cpu = _stat_cpu_s((task / "stat").read_text())
+        except FileNotFoundError:  # exited while we looked
+            continue
+        split[_thread_kind(comm)] += cpu
+    total = _stat_cpu_s((proc / str(pid) / "stat").read_text())[1]
+    split["exited"] = total - sum(split.values())
+    return split
 
 
 def main() -> None:
@@ -79,6 +120,9 @@ def main() -> None:
     tot_c = sum(v["construct_s"] for v in out.values())
     tot_e = sum(v["exec_s"] for v in out.values())
     print(f"{'TOTAL':42s} {tot_c:7.3f} {tot_e:7.3f}")
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    cpu = jvm_thread_cpu(jvm_pid)
+    print("JVM thread CPU s  " + "  ".join(f"{k} {v:.1f}" for k, v in cpu.items()))
     Path("/tmp/profile_queries.json").write_text(json.dumps(out, indent=1))
     spark.stop()
 
