@@ -313,7 +313,7 @@ def main() -> None:
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
-    spark = get_spark(app_name="etl_master_spark_bench")
+    spark = get_spark(app_name="etl_master_spark_bench", long_lived=True)
     # warm the JVM once so per-query times measure the engine: parquet
     # footer machinery, then every benched query once at WARM_DIR
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()

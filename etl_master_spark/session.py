@@ -47,17 +47,28 @@ JIT thresholds. A local pass (split, train, evaluate; a CLI run; a
 perfbench run) is short and cold, and the JVM's C2 compiler spends more
 CPU recompiling Catalyst, the SQL parser, Janino and generated classes
 than the executor tasks spend on the data: on ``recsys_lifecycle``, 63 s
-in C2 threads and 14 s in C1 against 10 s of task threads. So every local
-driver JVM this process launches, the archive's dump child included,
-starts with ``_JIT_FLAGS``, JDK 17's tier-4 (C2) thresholds times ten
-(invocation 50000, minimum invocation 6000, compile 150000, back edge
-400000): only code that stays hot gets C2. C1-only
-(``-XX:TieredStopAtLevel=1``) saves as much CPU on a cold pass but
-doubles warm execution time, so it is not used. The flags go ahead of the
-caller's ``spark.driver.extraJavaOptions``, and the JVM takes the last
-occurrence of a flag, so the caller's own value of any of them wins. The
-same three cases as above (a non-local master, ``SPARK_GRAFT_ON_CLUSTER``,
-a JVM already running) get no flags.
+in C2 threads and 14 s in C1 against 10 s of task threads. So a local
+driver JVM that ``get_spark`` launches starts with ``_JIT_FLAGS``, JDK
+17's tier-4 (C2) thresholds times ten (invocation 50000, minimum
+invocation 6000, compile 150000, back edge 400000): only code that stays
+hot gets C2. C1-only (``-XX:TieredStopAtLevel=1``) saves as much CPU on a
+cold pass but doubles warm execution time, so it is not used.
+
+- A long session that reruns the same plans (bench.py, profile_queries,
+  the scale tools, a notebook) passes ``long_lived=True`` and keeps the
+  JDK's thresholds: under the raised ones its hot code reaches C2 later,
+  and a six-query sf0.1 ``profile_queries --passes 3`` ran 10-20%
+  slower. Neither a smaller multiple (2, 3, 5) nor a more sensitive C2
+  queue feedback (``-XX:Tier4LoadFeedback=1``) kept that profile flat
+  while still saving the cold pass's CPU, and the JVM cannot see at its
+  start how long it will run, so the caller, which knows, chooses.
+- The flags go ahead of the caller's ``spark.driver.extraJavaOptions``,
+  and the JVM takes the last occurrence of a flag, so the caller's own
+  value of any of them wins.
+- The same three cases as above (a non-local master,
+  ``SPARK_GRAFT_ON_CLUSTER``, a JVM already running) get no flags, and
+  neither does the archive's dump child: a dynamic archive does not
+  depend on them.
 """
 
 from __future__ import annotations
@@ -97,7 +108,7 @@ _JIT_FLAGS = (
     "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
     " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
 )
-_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+_DRIVER_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -162,14 +173,16 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
+    long_lived: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
     On a real cluster, leave ``master`` unset and submit through
     spark-submit; locally we default to ``local[$SPARK_GRAFT_CPUS]``, with
     as many shuffle partitions unless ``shuffle_partitions`` says otherwise.
-    A fresh local JVM starts with raised C2 thresholds and from the
-    class-data-sharing archive (see the module docstring).
+    A fresh local JVM starts from the class-data-sharing archive and,
+    unless ``long_lived`` (a session that reruns the same plans for
+    minutes), with raised C2 thresholds (see the module docstring).
 
     With a context already running in this process, the running session
     comes back unchanged, and one warning names each requested setting
@@ -186,7 +199,8 @@ def get_spark(
     builder = SparkSession.builder
     if master is not None:
         builder = builder.master(master)
-    _use_jit_flags(master, conf)
+    if not long_lived:
+        _use_jit_flags(master, conf)
     conf_dir = _use_cds_archive(master, conf)
     with _spark_conf_dir(conf_dir):
         spark = builder.config(map=conf).getOrCreate()
@@ -277,8 +291,8 @@ def _use_jit_flags(master: str | None, conf: dict[str, str]) -> None:
     start launches a local JVM, so that a caller's own value of a flag,
     coming later, wins."""
     if _launches_local_jvm(master):
-        opts = conf.get(_JAVA_OPTIONS, "")
-        conf[_JAVA_OPTIONS] = f"{_JIT_FLAGS} {opts}".strip()
+        opts = conf.get(_DRIVER_JAVA_OPTIONS, "")
+        conf[_DRIVER_JAVA_OPTIONS] = f"{_JIT_FLAGS} {opts}".strip()
 
 
 def _cds_paths(master: str | None, driver_memory: str) -> tuple[Path, Path] | None:
@@ -320,8 +334,8 @@ def _use_cds_archive(master: str | None, conf: dict[str, str]) -> Path | None:
         _build_cds_archive(archive, conf_dir, conf["spark.driver.memory"])
     if not archive.exists():
         return None
-    opts = conf.get(_JAVA_OPTIONS, "")
-    conf[_JAVA_OPTIONS] = f"{opts} {_cds_flags(archive)}".strip()
+    opts = conf.get(_DRIVER_JAVA_OPTIONS, "")
+    conf[_DRIVER_JAVA_OPTIONS] = f"{opts} {_cds_flags(archive)}".strip()
     return conf_dir
 
 
@@ -392,11 +406,11 @@ def _dump_workload(tmp_archive: str, driver_memory: str) -> None:
 
     conf = _engine_conf("etl_master_spark_cds", "4", {
         "spark.driver.memory": driver_memory,
-        _JAVA_OPTIONS: f"-XX:ArchiveClassesAtExit={shlex.quote(tmp_archive)}",
+        "spark.driver.extraJavaOptions": (
+            f"-XX:ArchiveClassesAtExit={shlex.quote(tmp_archive)}"
+        ),
     })
-    master = "local[2]"
-    _use_jit_flags(master, conf)
-    spark = SparkSession.builder.master(master).config(map=conf).getOrCreate()
+    spark = SparkSession.builder.master("local[2]").config(map=conf).getOrCreate()
     with tempfile.TemporaryDirectory() as d:
         spark.range(2000).selectExpr(
             "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v",

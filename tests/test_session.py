@@ -1,7 +1,7 @@
 """etl_master_spark.session: package shipping, the class-data-sharing
-archive and the JIT flags, checked without a Spark session (the ``java`` tests start bare
-JVMs; the slow test builds a real archive), and ``get_spark`` on the
-suite's running session."""
+archive and the JIT flags, checked without a Spark session (the ``java``
+tests start bare JVMs; the slow test builds a real archive), and
+``get_spark`` on the suite's running session."""
 
 import os
 import re
@@ -178,14 +178,14 @@ def test_failed_build_is_not_retried(fake_install, monkeypatch):
     assert all(_java_opts(conf) == session._JIT_FLAGS for conf, _ in fake_install.launches)
 
 
-def test_dump_child_launches_with_the_jit_flags(fake_install, tmp_path):
-    archive = tmp_path / "dump.jsa"
-    with pytest.raises(AttributeError):  # the fake session runs no plan
-        session._dump_workload(str(archive), "3g")
+def test_long_lived_session_keeps_the_jdk_thresholds(fake_install):
+    """A long session starts from the archive without the JIT flags."""
+    session.get_spark(master="local[2]", long_lived=True, extra_conf={
+        "spark.driver.extraJavaOptions": "-Xms3g",
+    })
     (conf, _), = fake_install.launches
-    assert _java_opts(conf) == (
-        f"{session._JIT_FLAGS} -XX:ArchiveClassesAtExit={archive}"
-    )
+    archive, = fake_install.builds
+    assert _java_opts(conf) == f"-Xms3g -XX:SharedArchiveFile={archive} -Xshare:auto"
 
 
 def test_key_separates_heap_buckets_and_jar_sets(fake_install):

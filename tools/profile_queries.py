@@ -19,11 +19,11 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
 Output: every pass of every query, then its min,
     name  construct_s  exec_s  jobs  pass
-the construct/exec totals of the mins, the driver JVM's thread CPU since
-its start split into C2 and C1 compiler threads, GC threads, the other
-live threads and the threads that have exited (``jvm_thread_cpu``), and a
-JSON dump of each query's min pass to /tmp/profile_queries.json for
-diffing.
+the construct/exec totals of the mins, a JSON dump of each query's min
+pass to /tmp/profile_queries.json for diffing, and the driver JVM's
+thread CPU since its start split into C2 and C1 compiler threads, GC
+threads, the other live threads and the threads that have exited
+(``jvm_thread_cpu``).
 """
 
 from __future__ import annotations
@@ -92,7 +92,7 @@ def main() -> None:
         for n in bench.BENCH_QUERIES
         if not args.names or any(s in n for s in args.names)
     ] + [n for n in args.names if n in QUERIES and n not in bench.BENCH_QUERIES]
-    spark = get_spark(app_name="profile_queries")
+    spark = get_spark(app_name="profile_queries", long_lived=True)
     bench.warm(spark, names)
     spark.catalog.clearCache()
 
@@ -120,10 +120,10 @@ def main() -> None:
     tot_c = sum(v["construct_s"] for v in out.values())
     tot_e = sum(v["exec_s"] for v in out.values())
     print(f"{'TOTAL':42s} {tot_c:7.3f} {tot_e:7.3f}")
+    Path("/tmp/profile_queries.json").write_text(json.dumps(out, indent=1))
     jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     cpu = jvm_thread_cpu(jvm_pid)
     print("JVM thread CPU s  " + "  ".join(f"{k} {v:.1f}" for k, v in cpu.items()))
-    Path("/tmp/profile_queries.json").write_text(json.dumps(out, indent=1))
     spark.stop()
 
 

@@ -39,7 +39,7 @@ def time_engine(sf_dir: str) -> dict[str, float]:
     from etl_master_spark.plans.registry import QUERIES
     from etl_master_spark.session import get_spark
 
-    spark = get_spark(app_name="scale_crossover")
+    spark = get_spark(app_name="scale_crossover", long_lived=True)
     stages = ["splits_leave_two_out", "negatives_sample", "eval_metrics_test"]
     # warm plan shapes on the small input first (codegen/broadcast init)
     failed = bench.warm(spark, stages, sf=BASE_SF)

@@ -194,7 +194,7 @@ def main() -> None:
     names = sorted(names, key=lambda n: order.get(n, 1e9))
 
     sf_n = build_replica(args.mult)
-    spark = get_spark(app_name="scale_sweep")
+    spark = get_spark(app_name="scale_sweep", long_lived=True)
     sweep(spark, names, bool(args.names), args.mult, sf_n, args.timeout)
 
 

@@ -320,7 +320,7 @@ def main() -> None:
     scales = [("x1", BASE_SF), (scale_tag(mult), build_replica(mult))]
     if zipf:
         scales.append((scale_tag(mult, True), build_replica(mult, True)))
-    spark = get_spark(app_name="scale_table")
+    spark = get_spark(app_name="scale_table", long_lived=True)
 
     # warm plan shapes at the small scale
     failed = bench.warm(spark, names)
